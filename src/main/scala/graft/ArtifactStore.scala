@@ -513,9 +513,9 @@ object ArtifactStore {
   }
 
   /** Recorded row count of the delta [[deltaFrame]] would serve — the
-    * metadata a consumer uses to decide whether the batch side is
-    * small enough to carry an explicit broadcast hint (r17 advice: an
-    * UNCONDITIONAL hint on a batch side that grows with the corpus
+    * metadata [[graft.operators.DedupQueries.storeBatchSide]] compares
+    * with a row budget to decide whether the batch side broadcasts (an
+    * UNCONDITIONAL broadcast of a batch side that grows with the corpus
     * hard-fails at Spark's 8 GB broadcast cap instead of degrading to
     * a shuffle join). None whenever [[deltaFrame]] would return None. */
   def deltaRowCount(parentPath: String, batchTag: String): Option[Long] = {

@@ -123,8 +123,8 @@ object Bench {
     // keys are added). The smallest-sf pass exercises the heavy codegen
     // families (tokenizer/shingle, vector expressions, windows) —
     // measured ~4 s of one-time compilation otherwise lands on
-    // whichever family's first query runs it (CcPhaseProbe: jaccard
-    // 6.6 s cold vs 2.6 s warm). The warm dir derives from the bench
+    // whichever family's first query runs it (jaccard: 6.6 s cold vs
+    // 2.6 s warm). The warm dir derives from the bench
     // dir (sibling sf0.001) so a relocated testdata root still warms;
     // a failed warmup is WARNED, not swallowed — silence would cost
     // the cross-round comparability this exists for.
@@ -135,12 +135,14 @@ object Bench {
     }
     // dedup_containment is warmed separately from the jaccard family:
     // its explode→collect materialization + array_intersect verify is a
-    // distinct codegen shape (~9 s of one-time compile measured by
-    // BenchOne at round 8 — iter 1 12.3 s vs steady state 2.6 s)
+    // distinct codegen shape (~9 s of one-time compile: iter 1 12.3 s
+    // vs steady state 2.6 s at round 8)
     // win_lag_features added round 18: the 14-lag window pipeline is its
-    // own codegen shape (~4 s of one-time compile measured by the
-    // ForecastPhaseProbe lag phase, 6.7 s iter 1 vs 2.1 s steady) and
-    // alphabetical order lands it on ml_forecast, the largest bench line
+    // own codegen shape (~4 s of one-time compile: 6.7 s iter 1 vs
+    // 2.1 s steady) and alphabetical order lands it on ml_forecast, the
+    // largest bench line. Per-phase splits of this kind now come from
+    // the benchmark's traced run (`phase.*`, `Forecast.train_ms`,
+    // `Scoring.score_ms`).
     for (q <- Seq("dedup_ngram_jaccard", "dedup_containment",
         "sim_knn_brute", "agg_daily_product",
         "evt_sessionize", "txt_chunk_overlap", "win_lag_features"))

@@ -137,6 +137,13 @@ object ScaleRehearsal {
       replica: (DataFrame, Int) => DataFrame): DataFrame =
     (0 until k).map(replica(base, _)).reduce(_ unionByName _)
 
+  /** The containment rehearsal's batch side: the mod-5 rows of `sh`,
+    * always broadcast — the forced broadcast the SCALE10 containment
+    * rows were measured with, kept so they stay comparable. */
+  private def forcedContainmentBatch(sh: DataFrame) =
+    graft.operators.DedupQueries.BatchSide(
+      sh.where(graft.operators.DedupQueries.isIngestBatch), broadcast = true)
+
   /** (max bucket size, number of buckets) for a blocking-key frame. */
   private def bucketStats(keyed: DataFrame, keyCols: Seq[String]): (Long, Long) = {
     val sizes = keyed.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
@@ -561,15 +568,20 @@ object ScaleRehearsal {
           D.containmentShOfShingles(spark.read.parquet(shPath)
             .unionByName(D.shingledMd5On(batch)))
         def sh = shOf(batchDocs)
-        val (outN, sec) = timed(D.incrementalContainmentOfSh(sh).count())
-        val candN = D.incrementalContainmentCandidates(sh).count()
-        val supScanned = D.containmentSupProbe(sh).count()
+        val (outN, sec) = timed(D.incrementalContainmentOfSh(sh,
+          forcedContainmentBatch(sh)).count())
+        val candN = D.incrementalContainmentCandidates(sh,
+          forcedContainmentBatch(sh)).count()
+        val supScanned = D.containmentSupProbe(sh,
+          forcedContainmentBatch(sh)).count()
         // uncapped reference: every corpus doc's prefix postings (the
         // pre-round-14 sup-probe scan volume, batch-independent)
         val kExpr = D.containPrefixLen("sz")
         val supUncapped = sh.where(pmod(col("doc_id"), lit(5)) =!= 0)
           .select(explode(slice(col("hs"), lit(1), kExpr)).as("h")).count()
-        val supSmall = D.containmentSupProbe(shOf(batchSmall)).count()
+        val shSmall = shOf(batchSmall)
+        val supSmall = D.containmentSupProbe(shSmall,
+          forcedContainmentBatch(shSmall)).count()
         System.err.println(s"[scale] adm containment x$k: existing=$nEx " +
           s"cand=$candN out=$outN sup_scanned=$supScanned/" +
           s"$supUncapped small=$supSmall sec=${j(sec)}")
@@ -729,9 +741,12 @@ object ScaleRehearsal {
         D.shingledMd5On(existing).write.mode("overwrite").parquet(shPath)
         def sh = D.containmentShOfShingles(spark.read.parquet(shPath)
           .unionByName(D.shingledMd5On(batchDocs)))
-        val (ctOut, ctSec) = timed(D.incrementalContainmentOfSh(sh).count())
-        val ctCand = D.incrementalContainmentCandidates(sh).count()
-        val supScanned = D.containmentSupProbe(sh).count()
+        val (ctOut, ctSec) = timed(D.incrementalContainmentOfSh(sh,
+          forcedContainmentBatch(sh)).count())
+        val ctCand = D.incrementalContainmentCandidates(sh,
+          forcedContainmentBatch(sh)).count()
+        val supScanned = D.containmentSupProbe(sh,
+          forcedContainmentBatch(sh)).count()
         // simhash: probe floor under correlated votes (level from the
         // grown corpus size — the serving-path rule)
         val level = D.pigeonholeLevelsFor(nEx + nBatch)
@@ -964,7 +979,7 @@ object ScaleRehearsal {
         val secBase = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
         val nServed = D.ngramFilteredMaintainedAppend(spark, chainA,
-          baseInv, batchInv, "ingA").count()
+          baseInv, D.BatchSide(batchInv, broadcast = false), "ingA").count()
         val secAppend = (System.nanoTime() - t1) / 1e9
         val appended = !ArtifactStore.foldedTags(chainA).contains("ingA")
         // the pre-m2 reference pays derive + a FULL store rewrite at
@@ -984,8 +999,8 @@ object ScaleRehearsal {
           new java.io.File(ArtifactStore.childPathFor(chainB, "ingB")))
         ArtifactStore.save(D.dfFilteredPostings(baseInv), chainB)
         val t3 = System.nanoTime()
-        D.ngramFilteredMaintainedAppend(spark, chainB, baseInv, boilInv,
-          "ingB").count()
+        D.ngramFilteredMaintainedAppend(spark, chainB, baseInv,
+          D.BatchSide(boilInv, broadcast = false), "ingB").count()
         val secRebuild = (System.nanoTime() - t3) / 1e9
         val rebuilt = ArtifactStore.foldedTags(chainB).contains("ingB")
         System.err.println(s"[scale] fpost_maintain x$k: existing=$nEx " +

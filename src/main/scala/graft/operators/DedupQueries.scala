@@ -85,10 +85,13 @@ object DedupQueries {
     // both sides are store reads (round-17): the batch's digests are
     // its own delta dir — the rows THIS ingest appended — so the
     // admission verdict re-scans no text at all (the signing pass ran
-    // inside digestStore's append); the fallback re-digests in-flight
+    // inside digestStore's append); the fallback re-digests in-flight.
+    // The batch is the streamed side of the anti join, so only its
+    // rows are used, never its broadcast decision.
     val dg = digestStore(spark, dir)
     incrementalOfDigests(
-      storeBatchSide(spark, digestStorePath(dir), dg),
+      storeBatchSide(spark, digestStorePath(dir), dg,
+        BatchBroadcastMaxRows).frame,
       dg.where(!isIngestBatch))
   }
 
@@ -406,7 +409,8 @@ object DedupQueries {
     // df table instead of a per-ingest corpus aggregation
     ngramFilteredMaintainedAppend(spark, ngramFilteredStorePath(dir),
       inv.where(!isIngestBatch),
-      storeBatchSide(spark, ngramPostingStorePath(dir), inv),
+      storeBatchSide(spark, ngramPostingStorePath(dir), inv,
+        BatchBroadcastMaxRows),
       IngestBatchTag, dfStorePath = Some(ngramDfStorePath(dir)))
   }
 
@@ -483,11 +487,16 @@ object DedupQueries {
     * rare by construction (a real corpus crosses a df=1000 boundary
     * once per boilerplate pattern, not per batch); the planted
     * ArtifactStoreSpec fixture exercises both arms and pins each
-    * against the live full derivation. */
+    * against the live full derivation.
+    *
+    * `batch` is the batch's raw postings; its broadcast decision only
+    * reaches the doc-id semi join that re-derives a lineage-orphaned
+    * delta, the one join here that builds on the batch. */
   private[graft] def ngramFilteredMaintainedAppend(spark: SparkSession,
-      path: String, baseInv: DataFrame, batchInv: DataFrame,
+      path: String, baseInv: DataFrame, batch: BatchSide,
       batchTag: String, cap: Long = NgramDfCap,
       dfStorePath: Option[String] = None): DataFrame = {
+    val batchInv = batch.frame
     val chained = ArtifactStore.foldedTags(path).contains(batchTag) ||
       ArtifactStore.load(spark,
         ArtifactStore.childPathFor(path, batchTag)).isDefined
@@ -573,7 +582,7 @@ object DedupQueries {
         ArtifactStore.appendedCached(spark, path, batchTag)(
           sys.error(s"ngram_fpostings base vanished under serve: $path"))(
           dfFilteredPostings(baseInv.unionByName(batchInv), cap)
-            .join(batchInv.select(col("doc_id")).distinct(),
+            .join(batch.hinted(batchInv.select(col("doc_id")).distinct()),
               Seq("doc_id"), "left_semi"))
       case None
           if !ArtifactStore.cacheDisabled &&
@@ -581,7 +590,7 @@ object DedupQueries {
         // cold store: build the base at the BASE corpus's hot set (a
         // deterministic pre-ingest fact), then take the ingest step
         ArtifactStore.save(dfFilteredPostings(baseInv, cap), path)
-        ngramFilteredMaintainedAppend(spark, path, baseInv, batchInv,
+        ngramFilteredMaintainedAppend(spark, path, baseInv, batch,
           batchTag, cap, dfStorePath)
       case None =>
         // cache off / uncacheable path: the live full derivation
@@ -654,36 +663,26 @@ object DedupQueries {
       .select(col("doc_id"), tokens(col("text")).as("w"))
       .select(col("doc_id"), shingleHashesMd5(col("w")).as("sh"))
 
-  /** The ingest-batch predicate every incremental-ingest operator in
-    * this file shares: every 5th doc_id is the deterministic 20% "new
-    * crawl", the rest is the existing corpus. */
-  private[graft] def isIngestBatch: Column = pmod(col("doc_id"), lit(5)) === 0
+  /** The ingest-batch predicate every incremental-ingest operator
+    * shares, over any id column: every 5th id is the deterministic 20%
+    * "new crawl", the rest is the existing corpus. */
+  private[graft] def isIngestBatchId(id: Column): Column = pmod(id, lit(5)) === 0
+
+  /** [[isIngestBatchId]] over `doc_id`. */
+  private[graft] def isIngestBatch: Column = isIngestBatchId(col("doc_id"))
 
   /** Store tag of the ingest batch's delta artifacts. */
   private[graft] val IngestBatchTag = "ingest5"
 
-  /** The ingest batch's rows of the chain at `path`: the batch's OWN
-    * delta dir when it exists ([[graft.ArtifactStore.deltaFrame]] — an
-    * O(batch) parquet read), else `chain` filtered by
-    * [[isIngestBatch]] — row-identical (the chain is base [!batch] ∪
-    * delta [batch]), but an O(corpus) scan, since the mod-5 predicate
-    * prunes nothing in parquet. Every store-served incremental
-    * consumer's BATCH side routes through here (round-17: the r16
-    * SCALE10 decomposition showed warm ingest paying one full-chain
-    * read per downstream store and per admission probe for rows the
-    * upstream delta dir already isolates); the fallback covers
-    * cache-off runs, rebuild-folded tags, and fresh (non-store)
-    * frames. */
-  /** Row budget for carrying an explicit broadcast hint on a
-    * store-delta batch side: 4M rows of (ids + a hash + pigeonhole
-    * keys) is ~150 MB built — comfortably under Spark's hard 8 GB /
-    * 512M-row broadcast cap and a sane executor budget. The hint is
-    * gated on the delta's RECORDED row count (store metadata, no scan)
-    * because the test-SF ingest batch is a fixed fraction of the
-    * corpus: an unconditional hint would grow with corpus size and
-    * hard-fail at the cap instead of degrading to a shuffle join
-    * (r17 advice). Past the budget the planner/AQE chooses — exactly
-    * the demote-to-shuffle behavior the 100 TB story wants. */
+  /** Row budget for broadcasting a flat store's ingest-batch delta: 4M
+    * rows of (ids + a hash + pigeonhole keys) is ~150 MB built —
+    * comfortably under Spark's hard 8 GB / 512M-row broadcast cap and
+    * a sane executor budget. The budget is checked against the
+    * delta's RECORDED row count (store metadata, no scan) because the
+    * test-SF ingest batch is a fixed fraction of the corpus: an
+    * unconditional broadcast would grow with corpus size and hard-fail
+    * at the cap instead of degrading to a shuffle join. Past the
+    * budget the planner/AQE chooses. */
   private[graft] val BatchBroadcastMaxRows = 4000000L
 
   /** The same budget for ARRAY-row stores (the shingle store holds one
@@ -692,61 +691,47 @@ object DedupQueries {
     * built. */
   private[graft] val BatchArrayBroadcastMaxRows = 500000L
 
-  private[graft] def storeBatchSide(spark: SparkSession, path: String,
-      chain: DataFrame): DataFrame =
-    ArtifactStore.deltaFrame(spark, path, IngestBatchTag)
-      .map { delta =>
-        if (ArtifactStore.deltaRowCount(path, IngestBatchTag)
-            .exists(_ <= BatchBroadcastMaxRows)) broadcast(delta)
-        else delta
-      }
-      .getOrElse(chain.where(isIngestBatch))
-
-  /** Re-raise a broadcast hint at a join input when the frame's plan
-    * already carries one (from [[storeBatchSide]]'s gated hint):
-    * Spark's hint extraction only looks through a whitelist of unary
-    * nodes, so a hint buried under a Generate/Aggregate in a derived
-    * probe frame would not reach the join. A frame with NO hint —
-    * the fresh-filter fallback, a cache-off run — is returned as-is,
-    * leaving the join strategy to the planner/AQE (the gated-hint
-    * contract, r17 advice).
-    *
-    * Detection walks the UNARY SPINE from the root only (round-19, r18
-    * advice): [[storeBatchSide]]'s hint always reaches a consumer
-    * through unary derivations (select / explode / filter /
-    * aggregate), so it sits on the root's single-child chain — while a
-    * hint inside any JOIN BRANCH is someone else's (the
-    * adaptiveChunksOf cardinality probe embeds crossJoin(broadcast(n))
-    * of a 1-row count, which the old whole-plan `exists` scan
-    * mistook for a batch-side hint and force-broadcast the entire
-    * corpus-growing fresh frame — exactly the unbounded-hint 8 GB-cap
-    * hazard the gating removed). The spine walk stops at the first
-    * multi-child or leaf node, so embedded-probe hints are invisible
-    * (DedupSpec pins the fresh-fallback frame hint-free). */
-  private[graft] def carryBroadcastHint(df: DataFrame): DataFrame =
-    if (hasSpineHint(df)) broadcast(df) else df
-
-  /** Whether `df`'s analyzed plan carries a ResolvedHint on the root's
-    * unary spine — [[carryBroadcastHint]]'s detection, exposed so a
-    * consumer can gate a DERIVED batch-bounded frame (one whose own
-    * spine ends at a join, e.g. a semi-join of the vector table down
-    * to the batch's ids) on the SAME store-metadata decision its
-    * source frame carries. */
-  private[graft] def hasSpineHint(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, LogicalPlan, ResolvedHint, UnaryNode}
-    @scala.annotation.tailrec
-    def spine(p: LogicalPlan): Boolean = p match {
-      // only a BROADCAST hint is "the storeBatchSide hint" — a
-      // join-strategy hint of another kind (e.g. the containment
-      // verify's SHUFFLE_HASH on the shingle table) must not be
-      // re-raised as a broadcast
-      case r: ResolvedHint if r.hints.strategy.contains(BROADCAST) => true
-      case r: ResolvedHint => spine(r.child)
-      case u: UnaryNode    => spine(u.child)
-      case _               => false
-    }
-    spine(df.queryExecution.analyzed)
+  /** The ingest batch's side of an admission join: its rows, and
+    * whether they are small enough to broadcast. [[storeBatchSide]] is
+    * the only place `broadcast` is decided. Consumers apply it with
+    * [[BatchSide.hinted]] at the joins that build on the batch, and
+    * read it directly where a plan shape depends on it; no code looks
+    * for the hint in a plan afterwards. */
+  private[graft] final case class BatchSide(frame: DataFrame,
+      broadcast: Boolean) {
+    /** `df` — a join input that builds on the batch side — with a
+      * broadcast hint when the batch fits its budget, else as-is (the
+      * planner/AQE chooses). */
+    def hinted(df: DataFrame): DataFrame =
+      if (broadcast) org.apache.spark.sql.functions.broadcast(df) else df
   }
+
+  /** The batch side of a frame with no store delta behind it — a fresh
+    * derivation, a cache-off run, a folded tag: the mod-5 filter of the
+    * whole frame, never broadcast, because nothing records its size
+    * and it grows with the corpus. */
+  private[graft] def freshBatchSide(chain: DataFrame,
+      id: String = "doc_id"): BatchSide =
+    BatchSide(chain.where(isIngestBatchId(col(id))), broadcast = false)
+
+  /** The ingest batch's side of the chain at `path`. When the batch's
+    * own delta dir is servable ([[graft.ArtifactStore.deltaFrame]]) the
+    * frame is that delta — an O(batch) parquet read, where the mod-5
+    * filter of the chain would scan the whole corpus, since the
+    * predicate prunes nothing in parquet — and it broadcasts when its
+    * recorded row count ([[graft.ArtifactStore.deltaRowCount]]) is
+    * within `maxRows` ([[BatchBroadcastMaxRows]] for flat stores,
+    * [[BatchArrayBroadcastMaxRows]] for the shingle store). Without a
+    * delta it is [[freshBatchSide]] of `chain`, which is row-identical:
+    * the chain is base [!batch] ∪ delta [batch]. `id` names the chain's
+    * id column. */
+  private[graft] def storeBatchSide(spark: SparkSession, path: String,
+      chain: DataFrame, maxRows: Long, id: String = "doc_id"): BatchSide =
+    ArtifactStore.deltaFrame(spark, path, IngestBatchTag) match {
+      case Some(delta) => BatchSide(delta,
+        ArtifactStore.deltaRowCount(path, IngestBatchTag).exists(_ <= maxRows))
+      case None => freshBatchSide(chain, id)
+    }
 
   /** The corpus's replayable shingle sets as a MAINTAINED, APPENDED
     * ARTIFACT — the root of the "one signature pass per corpus
@@ -864,7 +849,7 @@ object DedupQueries {
       // the batch's shingles are already isolated there, so signing
       // the batch reads O(batch), not the whole chain
       minhashBandsOfShingles(storeBatchSide(spark, shingleStorePath(dir),
-        sh)))
+        sh, BatchArrayBroadcastMaxRows).frame))
   }
 
   /** Candidate generation over an explicit band-posting frame. */
@@ -1320,7 +1305,8 @@ object DedupQueries {
         // ingest); the delta dir holds exactly the batch's rows, so
         // signing is O(batch)
         chunksAtLevel(simhashesOfShingles(
-          storeBatchSide(spark, shingleStorePath(dir), sh)),
+          storeBatchSide(spark, shingleStorePath(dir), sh,
+            BatchArrayBroadcastMaxRows).frame),
           "simhash", level))
     }
   }
@@ -1344,17 +1330,18 @@ object DedupQueries {
     * chunk delta still loads — mismatched (chunk_idx, chunk_val) keys
     * silently miss matches. The delta-dir batch side is taken ONLY
     * when the chain itself came from the store; the fresh fallback
-    * splits the one frame it derived. */
+    * splits the one frame it derived, unbroadcast. */
   private[graft] def simhashChunksSplit(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) =
+      dir: String): (DataFrame, BatchSide) =
     simhashChunkStore(spark, dir) match {
       case Some(chain) =>
         (chain.where(!isIngestBatch),
-          storeBatchSide(spark, simhashChunkStorePath(dir), chain))
+          storeBatchSide(spark, simhashChunkStorePath(dir), chain,
+            BatchBroadcastMaxRows))
       case None =>
         val sh = shingleStore(spark, dir)
         val chunks = adaptiveChunksOf(simhashesOfShingles(sh), "simhash", sh)
-        (chunks.where(!isIngestBatch), chunks.where(isIngestBatch))
+        (chunks.where(!isIngestBatch), freshBatchSide(chunks))
     }
 
   /** The pigeonhole key pair (chunk_idx, chunk_val) FUSED into one
@@ -1365,7 +1352,7 @@ object DedupQueries {
     * the simhash probe, of which the index SCAN was only ~1 s; the
     * byte-keyed hash probe of 102.4M stream rows was the other 15), a
     * single long key builds a LongHashedRelation (16.2 → 2.2 s
-    * measured, ProbeFloorProbe). INJECTIVE by construction, so the
+    * measured at ×100). INJECTIVE by construction, so the
     * fused equi-join is row-identical to the pair join: chunk_idx is
     * at most 255 (level 4 = 256 slots) and chunk_val is at most
     * 43 bits wide (the staged widths: 15-bit ch + 12-bit sub + 9-bit
@@ -1452,44 +1439,46 @@ object DedupQueries {
     * dedup_simhash_incremental and mm_dedup_phash_incremental: the
     * ingest batch's postings probe the existing corpus's postings plus
     * the in-batch postings, candidates are exact-hamming verified, and
-    * in-batch matches point the LATER doc at the earlier one. */
+    * in-batch matches point the LATER doc at the earlier one. This
+    * form splits one fresh frame, so the batch side is unbroadcast. */
   private[graft] def incrementalHammingOfChunks(chunks: DataFrame,
       hashCol: String): DataFrame =
     incrementalHammingOfChunks(chunks.where(!isIngestBatch),
-      chunks.where(isIngestBatch), hashCol)
+      freshBatchSide(chunks), hashCol)
 
   /** [[incrementalHammingOfChunks]] with the existing/batch split
     * supplied by the caller — the form store-served consumers use to
     * read the batch side from the chain's own delta dir. */
   private[graft] def incrementalHammingOfChunks(exC: DataFrame,
-      inC: DataFrame, hashCol: String): DataFrame = {
+      inC: BatchSide, hashCol: String): DataFrame =
+    hammingMatchesOf(exC, inC, hashCol)
+      .where(col("hamming") <= 3)
+      .distinct()
+      .orderBy(col("doc_id"), col("match_src"), col("match_id"))
+
+  /** Pre-filter matches of [[incrementalHammingOfChunks]]: (doc_id,
+    * match_id, match_src, hamming) per batch→corpus probe and per
+    * in-batch pair. Every join here builds on the batch: when `inC`
+    * broadcasts, the corpus-side index streams map-side (round-17's
+    * per_probe decomposition measured the unbroadcast plan shuffling
+    * it, 256 postings/doc at level 4, to meet the batch: 13.4 s at
+    * ×100). The single fused LONG join key ([[fusedChunkKey]]) keeps
+    * the probe off the two-column UnsafeHashedRelation that was the
+    * measured ×100 floor. */
+  private def hammingMatchesOf(exC: DataFrame, inC: BatchSide,
+      hashCol: String): DataFrame = {
     def ham = bit_count(col(s"a.$hashCol").bitwiseXOR(col(s"b.$hashCol")))
-    // the batch side carries a broadcast hint when it is a
-    // store-delta read under the metadata row budget
-    // ([[storeBatchSide]] attaches it — round-17's per_probe
-    // decomposition measured the unhinted plan shuffling the
-    // corpus-side index, 256 postings/doc at level 4, to meet the
-    // batch: 13.4 s at ×100); the hint is GATED there rather than
-    // forced here because the test-SF batch is a fixed fraction of
-    // the corpus, so an unconditional hint grows with corpus size and
-    // hard-fails at the 8 GB broadcast cap instead of demoting to a
-    // shuffle join (r17 advice) — fresh-frame callers get the
-    // planner/AQE choice
-    // single fused LONG join key (see [[fusedChunkKey]]): the two-col
-    // key's UnsafeHashedRelation probe was the measured ×100 floor
-    val cross = carryBroadcastHint(inC.as("a")).join(exC.as("b"),
+    val batch = inC.frame
+    val cross = inC.hinted(batch.as("a")).join(exC.as("b"),
         fusedChunkKey("a") === fusedChunkKey("b"))
       .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("match_id"),
         lit("corpus").as("match_src"), ham.as("hamming"))
-    val inBatch = inC.as("a").join(carryBroadcastHint(inC.as("b")),
+    val inBatch = inC.hinted(batch.as("a")).join(inC.hinted(batch.as("b")),
         fusedChunkKey("a") === fusedChunkKey("b") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("b.doc_id").as("doc_id"), col("a.doc_id").as("match_id"),
         lit("batch").as("match_src"), ham.as("hamming"))
     cross.unionByName(inBatch)
-      .where(col("hamming") <= 3)
-      .distinct()
-      .orderBy(col("doc_id"), col("match_src"), col("match_id"))
   }
 
   /** The PRE-hamming-filter candidate frame of
@@ -1497,21 +1486,11 @@ object DedupQueries {
     * scale rehearsal measures (batch→corpus probes + in-batch pairs,
     * distinct). */
   private[graft] def incrementalHammingCandidates(chunks: DataFrame,
-      hashCol: String): DataFrame = {
-    val inC = chunks.where(isIngestBatch)
-    val exC = chunks.where(!isIngestBatch)
-    def ham = bit_count(col(s"a.$hashCol").bitwiseXOR(col(s"b.$hashCol")))
-    carryBroadcastHint(inC.as("a")).join(exC.as("b"),
-        fusedChunkKey("a") === fusedChunkKey("b"))
-      .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("match_id"),
-        ham.as("hamming"))
-      .unionByName(inC.as("a").join(carryBroadcastHint(inC.as("b")),
-          fusedChunkKey("a") === fusedChunkKey("b") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("b.doc_id").as("doc_id"), col("a.doc_id").as("match_id"),
-          ham.as("hamming")))
+      hashCol: String): DataFrame =
+    hammingMatchesOf(chunks.where(!isIngestBatch), freshBatchSide(chunks),
+        hashCol)
+      .select(col("doc_id"), col("match_id"), col("hamming"))
       .distinct()
-  }
 
   /** [[dedupSimhashIncremental]] over an explicit (doc_id, hash) frame
     * — the spec form (plants a cross-batch near-dup, an in-batch near
@@ -1610,7 +1589,8 @@ object DedupQueries {
     val inv = ngramFilteredStore(spark, dir)
     incrementalComponentsOf(baseComponentLabels(spark, dir),
       ngramJaccardTouchingOfPostings(inv,
-        storeBatchSide(spark, ngramFilteredStorePath(dir), inv))
+        storeBatchSide(spark, ngramFilteredStorePath(dir), inv,
+          BatchBroadcastMaxRows))
         .select(col("doc_a"), col("doc_b")))
   }
 
@@ -1655,14 +1635,14 @@ object DedupQueries {
     * anywhere in the incremental funnel is the batch's own rows for
     * lang/quality flags. */
   private[graft] def ngramJaccardTouchingOfPostings(inv: DataFrame): DataFrame =
-    ngramJaccardTouchingOfPostings(inv, inv.where(isIngestBatch))
+    ngramJaccardTouchingOfPostings(inv, freshBatchSide(inv))
 
   /** [[ngramJaccardTouchingOfPostings]] with the probe (batch) side
     * supplied by the caller — the form store-served consumers use to
     * read it from the filtered chain's own delta dir (round-17). */
   private[graft] def ngramJaccardTouchingOfPostings(inv: DataFrame,
-      batchInv: DataFrame): DataFrame =
-    ngramTouchingCandidatesOfPostings(inv, batchInv)
+      batch: BatchSide): DataFrame =
+    ngramTouchingCandidatesOfPostings(inv, batch)
       .select(col("doc_a"), col("doc_b"),
         (col("n_common").cast("double") /
           (col("sz_a") + col("sz_b") - col("n_common"))).as("jaccard"))
@@ -1673,22 +1653,20 @@ object DedupQueries {
     * (one row per batch-touching doc pair sharing ≥ 1 surviving
     * shingle within ±1 length bucket, intersection pre-aggregated). */
   private[graft] def ngramTouchingCandidatesOfPostings(inv: DataFrame): DataFrame =
-    ngramTouchingCandidatesOfPostings(inv, inv.where(isIngestBatch))
+    ngramTouchingCandidatesOfPostings(inv, freshBatchSide(inv))
 
   /** [[ngramTouchingCandidatesOfPostings]] with an explicit probe
-    * (batch) frame. */
+    * (batch) side. */
   private[graft] def ngramTouchingCandidatesOfPostings(inv: DataFrame,
-      batchInv: DataFrame): DataFrame = {
-    val probes = batchInv
+      batch: BatchSide): DataFrame = {
+    val probes = batch.frame
       .select(col("doc_id"), col("sz"), col("shingle"),
         explode(array(col("len_bucket") - 1, col("len_bucket"),
           col("len_bucket") + 1)).as("probe_bucket"))
-    // batch probes carry the store-delta broadcast hint when the
-    // delta metadata says they fit (round-17 per_probe decomposition:
-    // the corpus posting chain streams map-side instead of shuffling
-    // to meet a batch-bounded probe set; r17 advice: the hint is
-    // gated, not forced)
-    carryBroadcastHint(probes.as("a")).join(inv.as("b"),
+    // the join builds on the batch probes: when they broadcast, the
+    // corpus posting chain streams map-side instead of shuffling to
+    // meet a batch-bounded probe set (round-17 per_probe decomposition)
+    batch.hinted(probes.as("a")).join(inv.as("b"),
         col("a.shingle") === col("b.shingle") &&
           col("a.probe_bucket") === col("b.len_bucket") &&
           col("a.doc_id") =!= col("b.doc_id") &&
@@ -1723,7 +1701,8 @@ object DedupQueries {
     val inv = ngramFilteredStore(spark, dir)
     incrementalNgramOfEdges(
       ngramJaccardTouchingOfPostings(inv,
-        storeBatchSide(spark, ngramFilteredStorePath(dir), inv)))
+        storeBatchSide(spark, ngramFilteredStorePath(dir), inv,
+          BatchBroadcastMaxRows)))
   }
 
   /** Direction re-keying of [[dedupNgramIncremental]] over a
@@ -1731,15 +1710,15 @@ object DedupQueries {
     * SweepInvariants cross-check form (fed text-derived edges there,
     * store-served edges in the Q). */
   private[graft] def incrementalNgramOfEdges(edges: DataFrame): DataFrame = {
-    def isBatch(c: Column) = pmod(c, lit(5)) === 0
-    val bothBatch = isBatch(col("doc_a")) && isBatch(col("doc_b"))
+    val aBatch = isIngestBatchId(col("doc_a"))
+    val bothBatch = aBatch && isIngestBatchId(col("doc_b"))
     edges
       .select(
         when(bothBatch, col("doc_b"))
-          .when(isBatch(col("doc_a")), col("doc_a"))
+          .when(aBatch, col("doc_a"))
           .otherwise(col("doc_b")).as("doc_id"),
         when(bothBatch, col("doc_a"))
-          .when(isBatch(col("doc_a")), col("doc_b"))
+          .when(aBatch, col("doc_b"))
           .otherwise(col("doc_a")).as("match_id"),
         when(bothBatch, lit("batch")).otherwise(lit("corpus"))
           .as("match_src"),
@@ -2235,9 +2214,8 @@ object DedupQueries {
     * the admission rehearsal can measure candidate growth. */
   private[graft] def incrementalEntityCandidatesOn(customer: DataFrame,
       cap: Long = EntityBlockCap): DataFrame = {
-    def isBatchK(c: Column) = pmod(c, lit(5)) === 0
     val c = entityBlockedCapped(customer, cap)
-    val probe = c.where(isBatchK(col("c_custkey")))
+    val probe = c.where(isIngestBatchId(col("c_custkey")))
       .select(col("blk"), col("c_custkey").as("ka"), col("c_name").as("na"))
       .repartition(
         customer.sparkSession.sessionState.conf.numShufflePartitions,
@@ -2247,23 +2225,21 @@ object DedupQueries {
     probe.join(full, Seq("blk"))
       // batch-batch pairs count once, probe = the later key
       .where(col("ka") =!= col("kb") &&
-        (!isBatchK(col("kb")) || col("ka") > col("kb")))
+        (!isIngestBatchId(col("kb")) || col("ka") > col("kb")))
   }
 
   /** Core of [[dedupEntityIncremental]] over an explicit customer
     * frame — the planted-fixture spec form. */
   private[graft] def incrementalEntityBlockOn(customer: DataFrame,
-      cap: Long = EntityBlockCap): DataFrame = {
-    def isBatchK(c: Column) = pmod(c, lit(5)) === 0
+      cap: Long = EntityBlockCap): DataFrame =
     incrementalEntityCandidatesOn(customer, cap)
       .withColumn("dist", levenshtein(col("na"), col("nb"), 1))
       .where(col("dist") =!= -1)
       .select(col("ka").as("custkey"), col("kb").as("match_id"),
-        when(isBatchK(col("kb")), lit("batch")).otherwise(lit("corpus"))
+        when(isIngestBatchId(col("kb")), lit("batch")).otherwise(lit("corpus"))
           .as("match_src"),
         col("dist"))
       .orderBy(col("custkey"), col("match_src"), col("match_id"))
-  }
 
   /** `dedup_entity_hot_blocks`: the LOUD half of the [[EntityBlockCap]]
     * rule — the degenerate entity clusters the cap excluded from
@@ -2455,24 +2431,16 @@ object DedupQueries {
     * candidates only. FULLY oracled: the
     * dedup_containment all-pairs replay restricted to batch-touching
     * pairs with the same direction re-keying. */
-  val dedupContainmentIncremental: Q = (spark, dir) =>
-    // the family's batch-bounded broadcast sides are gated on the
-    // shingle-store delta's recorded row count (r17 advice): the
-    // mod-5 batch is a fixed FRACTION of the corpus, so an unforced
-    // hint must not grow past the broadcast cap — above the budget
-    // the planner/AQE chooses the join strategy. None (no store
-    // metadata — fresh corpus, cache off) also defers to the
-    // planner/AQE (round-19, r18 advice: `.exists`, aligned with
-    // [[storeBatchSide]]'s conservative default — the old `.forall`
-    // forced the hint on exactly the cache-off runs where the batch
-    // is an unbounded corpus fraction; at test SF the planner still
-    // broadcasts the small side on its own, so the fixtures are
-    // unaffected, DedupSpec pins the fresh path hint-free).
-    incrementalContainmentOfSh(
-      containmentShOfShingles(shingleStore(spark, dir)),
-      hintBatch = ArtifactStore
-        .deltaRowCount(shingleStorePath(dir), IngestBatchTag)
-        .exists(_ <= BatchArrayBroadcastMaxRows))
+  val dedupContainmentIncremental: Q = (spark, dir) => {
+    val shingles = shingleStore(spark, dir)
+    val sh = containmentShOfShingles(shingles)
+    // the broadcast decision is the shingle-store delta's (array-row
+    // budget); the batch rows are those of the sorted-array frame the
+    // whole family already reads
+    val side = storeBatchSide(spark, shingleStorePath(dir), shingles,
+      BatchArrayBroadcastMaxRows)
+    incrementalContainmentOfSh(sh, side.copy(frame = sh.where(isIngestBatch)))
+  }
 
   /** Integer-exact pigeonhole prefix length at [[ContainT]] = 4/5 —
     * ⌊(1−t)·sz⌋+1 computed as sz − ⌈t·sz⌉ + 1 = sz − (sz·4+4) div 5
@@ -2515,26 +2483,21 @@ object DedupQueries {
     * corpus size — the scale rehearsal's `sup_scanned` measures
     * exactly this staying flat as the corpus grows 30×. */
   private[graft] def containmentSupProbe(sh: DataFrame,
-      hintBatch: Boolean = true): DataFrame = {
-    def isBatch(c: Column) = pmod(c, lit(5)) === 0
-    def hinted(df: DataFrame) = if (hintBatch) broadcast(df) else df
+      batch: BatchSide): DataFrame = {
     val k = containPrefixLen("sz")
-    // maxB is a 1-row scalar — always broadcastable regardless of the
-    // batch-size gate
-    val maxB = sh.where(isBatch(col("doc_id")))
-      .agg(max(col("sz")).as("max_bsz"))
-    val batchHashes = sh.where(isBatch(col("doc_id")))
+    // maxB is a 1-row scalar — always broadcastable whatever the
+    // batch's own decision
+    val maxB = batch.frame.agg(max(col("sz")).as("max_bsz"))
+    val batchHashes = batch.frame
       .select(explode(col("hs")).as("h")).distinct()
-    sh.where(!isBatch(col("doc_id")))
+    sh.where(!isIngestBatch)
       .join(broadcast(maxB))
       .where(col("sz") * lit(4L) <= col("max_bsz") * lit(5L))
       .select(col("doc_id").as("a"), col("sz").as("sz_a"),
         explode(slice(col("hs"), lit(1), k)).as("h"))
-      .join(hinted(batchHashes), Seq("h"), "left_semi")
+      .join(batch.hinted(batchHashes), Seq("h"), "left_semi")
   }
 
-  /** Core of [[dedupContainmentIncremental]] over an explicit
-    * (doc_id, hs, sz) frame — the planted-fixture spec form. */
   /** Candidate pairs of [[incrementalContainmentOfSh]] — batch doc as
     * the CONTAINED side vs anything (sub term), plus corpus doc as the
     * contained side vs a batch container ([[containmentSupProbe]],
@@ -2542,9 +2505,7 @@ object DedupQueries {
     * the candidate pairs with ≥ 1 batch endpoint. Exposed so the
     * admission rehearsal can measure candidate growth per scale. */
   private[graft] def incrementalContainmentCandidates(sh: DataFrame,
-      hintBatch: Boolean = true): DataFrame = {
-    def isBatch(c: Column) = pmod(c, lit(5)) === 0
-    def hinted(df: DataFrame) = if (hintBatch) broadcast(df) else df
+      batch: BatchSide): DataFrame = {
     val k = containPrefixLen("sz")
     val probe = sh.select(col("doc_id").as("a"), col("sz").as("sz_a"),
       explode(slice(col("hs"), lit(1), k)).as("h"))
@@ -2553,19 +2514,23 @@ object DedupQueries {
     def bound(c: DataFrame) = c.where(col("a") =!= col("b") &&
       col("sz_b").cast("double") >= col("sz_a").cast("double") * lit(ContainT))
       .select(col("a"), col("b"))
-    // both terms' batch-bounded sides broadcast when under the gate
-    // (round-17; gate r18): sub = the batch's prefix hashes vs the
-    // streamed corpus index; sup = the pre-pruned corpus postings vs
-    // the batch's own index
-    bound(hinted(probe.where(isBatch(col("a")))).join(full, Seq("h")))
-      .unionByName(bound(containmentSupProbe(sh, hintBatch)
-        .join(hinted(full.where(isBatch(col("b")))), Seq("h"))))
+    // both terms build on a batch-bounded side (round-17): sub = the
+    // batch's prefix hashes vs the streamed corpus index; sup = the
+    // pre-pruned corpus postings vs the batch's own index
+    bound(batch.hinted(probe.where(isIngestBatchId(col("a"))))
+        .join(full, Seq("h")))
+      .unionByName(bound(containmentSupProbe(sh, batch)
+        .join(batch.hinted(full.where(isIngestBatchId(col("b")))),
+          Seq("h"))))
       .distinct()
   }
 
+  /** Core of [[dedupContainmentIncremental]] over an explicit
+    * (doc_id, hs, sz) frame `sh` — the planted-fixture spec form too.
+    * `batch` holds `sh`'s batch rows and the broadcast decision for
+    * every join that builds on them. */
   private[graft] def incrementalContainmentOfSh(sh: DataFrame,
-      hintBatch: Boolean = true): DataFrame = {
-    def isBatch(c: Column) = pmod(c, lit(5)) === 0
+      batch: BatchSide): DataFrame = {
     // VERIFY-JOIN SHAPE (round-19, guide §8 — the emb restructure's
     // pattern at this family's scale): the old
     // cand → join(hs_a) → join(hs_b) tail sort-merge-joined the pair
@@ -2575,22 +2540,20 @@ object DedupQueries {
     // the CONTAINED side a (distinct a ≈ batch docs + sup matches —
     // bounded by the batch and its matching content), hs_a attaches
     // once per a, pairs explode back locally, and ONE hash join
-    // attaches hs_b. The grouped frame's broadcast rides the same
-    // store-metadata gate as the family's other batch-bounded sides
-    // (`hintBatch`; ungated paths stay planner/AQE-chosen — measured
+    // attaches hs_b. The grouped frame broadcasts on the batch's own
+    // decision (unbroadcast paths stay planner/AQE-chosen — measured
     // no slower than the old shape); the b-side join is SHUFFLE_HASH —
     // its build side is the shingle table hash-partitioned into the
     // session's shuffle width (index/P per task, the standard SHJ
     // sizing), and skipping the two sorts is the point. Measured ×100
     // (x100_ing, local[32]): full probe 5.4–5.5 s → 3.2–3.7 s,
     // verify tail 3.5 → 1.2 s; oracle rows/hashes unchanged.
-    val cand = incrementalContainmentCandidates(sh, hintBatch)
-    val grouped = cand.groupBy(col("a")).agg(collect_set(col("b")).as("bs"))
-    val hintedGrouped = if (hintBatch) broadcast(grouped) else grouped
+    val grouped = incrementalContainmentCandidates(sh, batch)
+      .groupBy(col("a")).agg(collect_set(col("b")).as("bs"))
     val verified = sh
       .select(col("doc_id").as("a"), col("hs").as("hs_a"),
         col("sz").as("sz_a"))
-      .join(hintedGrouped, Seq("a"))
+      .join(batch.hinted(grouped), Seq("a"))
       .select(col("a"), col("hs_a"), col("sz_a"), explode(col("bs")).as("b"))
       .join(sh.hint("shuffle_hash").select(col("doc_id").as("b"),
         col("hs").as("hs_b")), Seq("b"))
@@ -2598,9 +2561,10 @@ object DedupQueries {
         (size(array_intersect(col("hs_a"), col("hs_b"))).cast("double")
           / col("sz_a").cast("double")).as("containment"))
       .where(col("containment") >= lit(ContainT))
-    val bothBatch = isBatch(col("a")) && isBatch(col("b"))
+    val aBatch = isIngestBatchId(col("a"))
+    val bothBatch = aBatch && isIngestBatchId(col("b"))
     val incoming = when(bothBatch, greatest(col("a"), col("b")))
-      .when(isBatch(col("a")), col("a")).otherwise(col("b"))
+      .when(aBatch, col("a")).otherwise(col("b"))
     verified
       .select(
         incoming.as("doc_id"),
@@ -2770,9 +2734,10 @@ object DedupQueries {
   val dedupSpansIncremental: Q = (spark, dir) => {
     val win = spanAnchorStore(spark, dir)
     // probe side from the anchor chain's own delta dir (round-17);
-    // the df side (`all`) is the whole chain — that pass IS the query
-    spansProfileOf(storeBatchSide(spark, spanAnchorStorePath(dir), win),
-      win, SpanDfCap)
+    // the df side (`all`) is the whole chain — that pass IS the query.
+    // The probe streams through a left join, so only its rows are used.
+    spansProfileOf(storeBatchSide(spark, spanAnchorStorePath(dir), win,
+      BatchBroadcastMaxRows).frame, win, SpanDfCap)
   }
 
   /** [[dedupSpansIncremental]] over an explicit documents frame (no

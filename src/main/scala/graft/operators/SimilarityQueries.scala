@@ -500,7 +500,7 @@ object SimilarityQueries {
     * convention as [[operators.DedupQueries.isIngestBatch]], keyed on
     * vec_id. */
   private[graft] def isIngestBatchVec: Column =
-    pmod(col("vec_id"), lit(5)) === 0
+    DedupQueries.isIngestBatchId(col("vec_id"))
 
   /** (vec_id, table_id, sig) LSH signature postings of a vector frame
     * at a FIXED signature width — the row-local projection both the
@@ -624,29 +624,20 @@ object SimilarityQueries {
     val sigs = embSigsStored(spark, dir)
     // probe side from the signature chain's own delta dir (round-17):
     // a width-boundary rebuild folds the tag, in which case the
-    // filter fallback applies — row-identical either way. The
-    // broadcast hint rides the delta only under the metadata row
-    // budget (r17 advice: an unforced hint must not grow with the
-    // corpus past the broadcast cap).
+    // filter fallback applies — row-identical either way
     incrementalEmbOfSigs(sigs.where(!isIngestBatchVec),
-      ArtifactStore.deltaFrame(spark, embSigStorePath(dir),
-        DedupQueries.IngestBatchTag)
-        .map { d =>
-          if (ArtifactStore.deltaRowCount(embSigStorePath(dir),
-              DedupQueries.IngestBatchTag)
-              .exists(_ <= DedupQueries.BatchBroadcastMaxRows)) broadcast(d)
-          else d
-        }
-        .getOrElse(sigs.where(isIngestBatchVec)),
+      DedupQueries.storeBatchSide(spark, embSigStorePath(dir), sigs,
+        DedupQueries.BatchBroadcastMaxRows, id = "vec_id"),
       emb)
   }
 
   /** Core of [[dedupEmbIncremental]] over explicit posting + vector
-    * frames — the planted-fixture spec form. */
+    * frames — the planted-fixture spec form, whose batch side is the
+    * unbroadcast filter of `sigs`. */
   private[graft] def incrementalEmbOfSigs(sigs: DataFrame,
       emb: DataFrame): DataFrame =
     incrementalEmbOfSigs(sigs.where(!isIngestBatchVec),
-      sigs.where(isIngestBatchVec), emb)
+      DedupQueries.freshBatchSide(sigs, id = "vec_id"), emb)
 
   /** [[incrementalEmbOfSigs]] with the existing/batch split supplied
     * by the caller.
@@ -658,8 +649,8 @@ object SimilarityQueries {
     * `distinct → join(va) → join(vb)` tail sort-merge-joined that pair
     * stream against the vector table TWICE — the second exchange
     * carried every pair WITH its 512-byte va array (≈6 GB shuffled and
-    * sorted at ×100 for ~80 MB of actual vectors). Now the heavy bytes
-    * move once and only at data grain:
+    * sorted at ×100 for ~80 MB of actual vectors). When `inS`
+    * broadcasts, the heavy bytes move once and only at data grain:
     *
     *  - candidates stay KEYS-ONLY through dedup: one groupBy
     *    (match_id, match_src) with collect_set(vec_id) replaces the
@@ -668,53 +659,26 @@ object SimilarityQueries {
     *    ≤n-row match grain), never per pair, and the pair set explodes
     *    back LOCALLY — no exchange ever carries a per-pair vector;
     *  - the BATCH-side vectors (the vector table semi-joined down to
-    *    the probe's ids — batch-bounded by construction) attach
-    *    map-side under the same gated broadcast decision the batch
-    *    postings carry ([[graft.operators.DedupQueries.hasSpineHint]]
-    *    re-raises the store-metadata gate onto the derived frame);
-    *    ungated paths are planner/AQE-chosen, and AQE's runtime sizing
-    *    converts the join to a broadcast anyway once the semi-join's
-    *    true cardinality is visible.
+    *    the batch's ids) attach map-side; the semi join builds on the
+    *    batch ids under the same decision.
     *
     * Measured ×100 (x100_ing, local[32]): 6.8–17.8 s → 2.5–4.5 s,
     * identical 421,663 rows; the DuckDB oracle pins row/hash equality
-    * at the verify SFs. The grouped tail applies ONLY when the batch
-    * side carries the gated broadcast (see the shape gate below);
-    * ungated paths keep the classic two-join tail, which measures
-    * faster there. */
+    * at the verify SFs. When `inS` does not broadcast (cache-off, fresh
+    * frames, the rehearsal's parquet-posting protocol) the grouped
+    * form's exploded pair stream carries vb into a sort-merge join and
+    * measured 4× SLOWER than the classic distinct → join(va) →
+    * join(vb) tail (33.9 vs ~9 s at ×100), so those paths keep the
+    * classic shape. Both shapes are row-identical (same candidate set,
+    * same verify predicate — PipelineSpec pins the planted fixture
+    * through both, and the oracle hashes the broadcast path). */
   private[graft] def incrementalEmbOfSigs(exS: DataFrame,
-      inS: DataFrame, emb: DataFrame): DataFrame = {
+      inS: DedupQueries.BatchSide, emb: DataFrame): DataFrame = {
     import graft.functions.VectorExpressions.cosine_similarity
-    // single fused LONG join key (see [[fusedSigKey]])
-    val onKeys = fusedSigKey("a") === fusedSigKey("b")
-    // batch signatures carry the store-delta broadcast hint when the
-    // delta metadata says they fit (round-17 per_probe decomposition:
-    // the corpus posting store streams map-side, no exchange; r17
-    // advice: gated, not forced — fresh-frame callers get the
-    // planner/AQE choice)
-    val cross = DedupQueries.carryBroadcastHint(inS.as("a"))
-      .join(exS.as("b"), onKeys)
-      .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("match_id"),
-        lit("corpus").as("match_src"))
-    val inBatch = inS.as("a").join(DedupQueries.carryBroadcastHint(inS.as("b")),
-        onKeys && col("a.vec_id") < col("b.vec_id"))
-      .select(col("b.vec_id").as("vec_id"), col("a.vec_id").as("match_id"),
-        lit("batch").as("match_src"))
-    // SHAPE IS GATED BY THE SAME SIGNAL AS THE HINT (round-19): the
-    // grouped tail only wins when the batch-side vectors can attach
-    // map-side — i.e. exactly when the batch side carries the
-    // store-metadata broadcast gate. On UNGATED paths (cache-off,
-    // fresh frames, the rehearsal's r12 parquet-posting protocol) the
-    // grouped form's exploded pair stream carries vb into a
-    // sort-merge join and measured 4× SLOWER than the classic
-    // distinct → join(va) → join(vb) tail (33.9 vs ~9 s at ×100), so
-    // those paths keep the classic shape. Both shapes are
-    // row-identical (same candidate set, same verify predicate —
-    // StreamMlSpec pins the planted fixture through both, and the
-    // oracle hashes the gated path).
+    val pairs = embMatchesOf(exS, inS)
     val verified =
-      if (DedupQueries.hasSpineHint(inS)) {
-        val grouped = cross.unionByName(inBatch)
+      if (inS.broadcast) {
+        val grouped = pairs
           .groupBy(col("match_id"), col("match_src"))
           .agg(collect_set(col("vec_id")).as("vec_ids"))
         val pairsVb = grouped
@@ -723,14 +687,14 @@ object SimilarityQueries {
           .select(col("match_id"), col("match_src"), col("vb"),
             explode(col("vec_ids")).as("vec_id"))
         val vaSide = broadcast(emb
-          .join(inS.select(col("vec_id")).distinct(), Seq("vec_id"),
-            "left_semi")
+          .join(inS.hinted(inS.frame.select(col("vec_id")).distinct()),
+            Seq("vec_id"), "left_semi")
           .select(col("vec_id"), col("vec").as("va")))
         pairsVb.join(vaSide, Seq("vec_id"))
           .select(col("vec_id"), col("match_id"), col("match_src"),
             col("va"), col("vb"))
       } else
-        cross.unionByName(inBatch).distinct()
+        pairs.distinct()
           .join(emb.select(col("vec_id"), col("vec").as("va")), Seq("vec_id"))
           .join(emb.select(col("vec_id").as("match_id"), col("vec").as("vb")),
             Seq("match_id"))
@@ -743,20 +707,34 @@ object SimilarityQueries {
       .orderBy(col("vec_id"), col("match_src"), col("match_id"))
   }
 
+  /** Candidate matches of [[incrementalEmbOfSigs]]: (vec_id, match_id,
+    * match_src) per batch→corpus probe and per in-batch pair, on the
+    * single fused LONG join key ([[fusedSigKey]]). Every join here
+    * builds on the batch signatures: when they broadcast, the corpus
+    * posting store streams map-side with no exchange (round-17
+    * per_probe decomposition). */
+  private def embMatchesOf(exS: DataFrame,
+      inS: DedupQueries.BatchSide): DataFrame = {
+    val onKeys = fusedSigKey("a") === fusedSigKey("b")
+    val batch = inS.frame
+    val cross = inS.hinted(batch.as("a")).join(exS.as("b"), onKeys)
+      .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("match_id"),
+        lit("corpus").as("match_src"))
+    val inBatch = inS.hinted(batch.as("a")).join(inS.hinted(batch.as("b")),
+        onKeys && col("a.vec_id") < col("b.vec_id"))
+      .select(col("b.vec_id").as("vec_id"), col("a.vec_id").as("match_id"),
+        lit("batch").as("match_src"))
+    cross.unionByName(inBatch)
+  }
+
   /** The PRE-verify candidate frame of [[incrementalEmbOfSigs]] — the
     * blocked admission volume the scale rehearsal measures
     * (batch→corpus probes + in-batch pairs, distinct). */
-  private[graft] def incrementalEmbCandidates(sigs: DataFrame): DataFrame = {
-    val inS = sigs.where(isIngestBatchVec)
-    val exS = sigs.where(!isIngestBatchVec)
-    val onKeys = fusedSigKey("a") === fusedSigKey("b")
-    DedupQueries.carryBroadcastHint(inS.as("a")).join(exS.as("b"), onKeys)
-      .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("match_id"))
-      .unionByName(inS.as("a").join(DedupQueries.carryBroadcastHint(inS.as("b")),
-          onKeys && col("a.vec_id") < col("b.vec_id"))
-        .select(col("b.vec_id").as("vec_id"), col("a.vec_id").as("match_id")))
+  private[graft] def incrementalEmbCandidates(sigs: DataFrame): DataFrame =
+    embMatchesOf(sigs.where(!isIngestBatchVec),
+        DedupQueries.freshBatchSide(sigs, id = "vec_id"))
+      .select(col("vec_id"), col("match_id"))
       .distinct()
-  }
 
   /** [[dedupEmbIncremental]] over an explicit (vec_id, embedding)
     * frame (no store) — the planted-fixture spec form: signature width
@@ -1069,7 +1047,7 @@ object SimilarityQueries {
     * Every dot here is the codegen'd DotProduct expression, NOT the
     * zip_with+aggregate HOF: ArrayAggregate is CodegenFallback, and
     * the encode evaluates 8×64 sub-vector dots PER ROW — interpreted,
-    * that was 5.4 s steady-state at sf0.1 (BenchOne); the tight-loop
+    * that was 5.4 s steady-state at sf0.1; the tight-loop
     * expression computes the identical left-fold, bit-for-bit. */
   private def pqDecodedOn(emb: DataFrame): DataFrame = {
     import graft.functions.VectorExpressions.dot_product
@@ -1098,7 +1076,7 @@ object SimilarityQueries {
     // come from ONE PqEncode expression: the composed
     // array_min(array(512 × struct)) form exceeded Janino's 64 KB
     // method limit, silently disabling whole-stage codegen for the
-    // stage (5.4 s → 0.9 s steady-state at sf0.1, BenchOne;
+    // stage (5.4 s → 0.9 s steady-state at sf0.1;
     // VectorExpressions documents the bit-identical float contract)
     val cbFlat: Seq[Seq[Double]] =
       (0 until PqSubspaces).flatMap(s => (0 until k).map(j => cbVecs(s)(j).toSeq))

@@ -859,13 +859,17 @@ object EventStreams {
     // deltas and derives only the missing ones), so a partially
     // landed ingest COMPLETES on retry. A digest tag that is chained
     // but unreadable (folded into the base / cache off) cannot be
-    // identity-checked and keeps the loud failure.
+    // identity-checked and keeps the loud failure. The content hash is
+    // the bit_xor of per-row xxhash64 values: a sum of 64-bit hashes
+    // overflows under ANSI on any batch of realistic size, and xor
+    // cannot. It is sound because doc_id is unique within a batch, so
+    // no two equal rows cancel out.
     if (batch.isEmpty) return
     val digestOf = batch.select(col("doc_id"), md5(col("text")).as("text_hash"))
     if (ArtifactStore.tagChained(spark, D.digestStorePath(dir), tag)) {
       def sig(df: DataFrame): (Long, Long) = {
         val r = df.agg(count(lit(1)),
-          sum(xxhash64(col("doc_id"), col("text_hash")))).head
+          bit_xor(xxhash64(col("doc_id"), col("text_hash")))).head
         (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
       }
       val sameBatch = ArtifactStore

@@ -853,9 +853,12 @@ class AnalyticsOpsSpec extends AnyFunSuite {
       (1 to 6).map(i => s"u$i")).mkString(" ")               // 4 of 10 ⊂ big
     val docs = Seq(1L -> big, 2L -> smal, 5L -> sub, 10L -> sup,
       15L -> sub2, 20L -> big2, 25L -> half).toDF("doc_id", "text")
-    def run(nPart: Int) = operators.DedupQueries.incrementalContainmentOfSh(
-      operators.DedupQueries.containmentShOn(docs.repartition(nPart)))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
+    def run(nPart: Int) = {
+      val D = operators.DedupQueries
+      val sh = D.containmentShOn(docs.repartition(nPart))
+      D.incrementalContainmentOfSh(sh,
+        D.BatchSide(sh.where(D.isIngestBatch), broadcast = true))
+    }.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getString(3), r.getDouble(4))).toList
     val single = run(1)
     assert(single == List(
@@ -887,15 +890,16 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     val docs = Seq(1L -> big, 2L -> smal, 3L -> alien, 10L -> sup)
       .toDF("doc_id", "text")
     val sh = D.containmentShOn(docs)
+    val batch = D.BatchSide(sh.where(D.isIngestBatch), broadcast = true)
     // only the small RELATED corpus doc's prefix postings survive
-    val probed = D.containmentSupProbe(sh)
+    val probed = D.containmentSupProbe(sh, batch)
       .select("a").distinct().collect().map(_.getLong(0)).toSet
     assert(probed == Set(2L), s"probed=$probed")
     // both prunes sit in the plan below the sup candidate join: the
     // size cap (broadcast max_bsz filter) and the batch-membership
     // LEFT-SEMI, each filtering the corpus postings before they meet
     // the batch index
-    val out = D.incrementalContainmentOfSh(sh)
+    val out = D.incrementalContainmentOfSh(sh, batch)
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("max_bsz"),
       "batch-size cap missing from the sup-probe plan")
@@ -919,9 +923,11 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     val docs = Seq(1L -> big, 2L -> smal, 10L -> sup)
       .toDF("doc_id", "text")
     val sh = D.containmentShOn(docs)
+    def side(hinted: Boolean) =
+      D.BatchSide(sh.where(D.isIngestBatch), broadcast = hinted)
     def hints(hinted: Boolean): Int =
       "strategy=broadcast".r.findAllIn(
-        D.incrementalContainmentOfSh(sh, hintBatch = hinted)
+        D.incrementalContainmentOfSh(sh, side(hinted))
           .queryExecution.analyzed.toString).size
     // ungated: exactly the 1-row max_bsz scalar — a corpus-fraction
     // batch side must never be force-broadcast on the fresh path
@@ -932,7 +938,7 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     assert(hints(true) > hints(false),
       "gated form lost its batch-side hints")
     def rows(hinted: Boolean) =
-      D.incrementalContainmentOfSh(sh, hintBatch = hinted)
+      D.incrementalContainmentOfSh(sh, side(hinted))
         .collect().map(_.toString).toList
     assert(rows(true) == rows(false),
       "hint gating changed the admission verdicts")

@@ -706,8 +706,11 @@ class ArtifactStoreSpec extends AnyFunSuite {
     def contIncRows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3),
         r.getDouble(4))).toSeq
-    val contIncFresh = contIncRows(
-      D.incrementalContainmentOfSh(D.containmentShOn(docs)))
+    val contIncFresh = contIncRows({
+      val sh = D.containmentShOn(docs)
+      D.incrementalContainmentOfSh(sh,
+        D.BatchSide(sh.where(D.isIngestBatch), broadcast = true))
+    })
     val contIncLoaded = D.dedupContainmentIncremental(spark, sf)
     assert(contIncRows(contIncLoaded) == contIncFresh,
       "containment admission diverged through the shingle store")
@@ -891,8 +894,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     val pA = s"$root/fpostA_src_m2_aaaaaaaaaaaa"
     rmStore(pA); rmStore(ArtifactStore.childPathFor(pA, "ingestT"))
     val batchA = inv(5L -> 51L, 5L -> 52L)
-    val servedA = D.ngramFilteredMaintainedAppend(spark, pA, base, batchA,
-      "ingestT", cap)
+    val servedA = D.ngramFilteredMaintainedAppend(spark, pA, base,
+      D.BatchSide(batchA, broadcast = false), "ingestT", cap)
     assert(sortAll(servedA) ==
       sortAll(D.dfFilteredPostings(base.unionByName(batchA), cap)),
       "append arm diverged from the live full derivation")
@@ -904,8 +907,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     // warm serve: pure chain reads — no hot-set aggregation, no size
     // window, and the crossing check does not run (it lives behind the
     // unchained guard)
-    val warmA = D.ngramFilteredMaintainedAppend(spark, pA, base, batchA,
-      "ingestT", cap)
+    val warmA = D.ngramFilteredMaintainedAppend(spark, pA, base,
+      D.BatchSide(batchA, broadcast = false), "ingestT", cap)
     val planA = warmA.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode).toLowerCase
     assert(!planA.contains("window") && !planA.contains("aggregate"),
@@ -918,8 +921,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     val pB = s"$root/fpostB_src_m2_aaaaaaaaaaaa"
     rmStore(pB); rmStore(ArtifactStore.childPathFor(pB, "ingestT"))
     val batchB = inv(5L -> 100L, 5L -> 51L)
-    val servedB = D.ngramFilteredMaintainedAppend(spark, pB, base, batchB,
-      "ingestT", cap)
+    val servedB = D.ngramFilteredMaintainedAppend(spark, pB, base,
+      D.BatchSide(batchB, broadcast = false), "ingestT", cap)
     val liveB = D.dfFilteredPostings(base.unionByName(batchB), cap)
     assert(sortAll(servedB) == sortAll(liveB),
       "rebuild arm diverged from the live full derivation")
@@ -931,8 +934,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
         s"${ArtifactStore.childPathFor(pB, "ingestT")}/_GRAFT_OK").exists,
       "crossing batch wrote a delta dir despite the rebuild")
     // and the rebuilt chain serves warm without re-deriving
-    val warmB = D.ngramFilteredMaintainedAppend(spark, pB, base, batchB,
-      "ingestT", cap)
+    val warmB = D.ngramFilteredMaintainedAppend(spark, pB, base,
+      D.BatchSide(batchB, broadcast = false), "ingestT", cap)
     assert(sortAll(warmB) == sortAll(liveB))
 
     // arm 3: REPEATED ingest on the append chain — batch 2 arrives
@@ -941,7 +944,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     // served chain still equals the live full derivation
     val batchC = inv(15L -> 51L, 15L -> 61L)
     val servedC = D.ngramFilteredMaintainedAppend(spark, pA,
-      base.unionByName(batchA), batchC, "ingestU", cap)
+      base.unionByName(batchA), D.BatchSide(batchC, broadcast = false),
+      "ingestU", cap)
     assert(sortAll(servedC) == sortAll(D.dfFilteredPostings(
       base.unionByName(batchA).unionByName(batchC), cap)),
       "second-append arm diverged from the live full derivation")
@@ -952,8 +956,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     // rebuilds the two-delta chain at the new hot set
     val batchD = inv(20L -> 51L, 20L -> 71L)
     val servedD = D.ngramFilteredMaintainedAppend(spark, pA,
-      base.unionByName(batchA).unionByName(batchC), batchD, "ingestV",
-      cap)
+      base.unionByName(batchA).unionByName(batchC),
+      D.BatchSide(batchD, broadcast = false), "ingestV", cap)
     val liveD = D.dfFilteredPostings(base.unionByName(batchA)
       .unionByName(batchC).unionByName(batchD), cap)
     assert(sortAll(servedD) == sortAll(liveD),
@@ -1155,8 +1159,9 @@ class ArtifactStoreSpec extends AnyFunSuite {
       rmStore(p); tags.foreach(t => rmStore(ArtifactStore.childPathFor(p, t)))
     }
     val batchA = inv(5L -> 51L, 5L -> 52L)
-    val servedA = D.ngramFilteredMaintainedAppend(spark, pA, base, batchA,
-      "ingestT", cap, dfStorePath = Some(dp))
+    val servedA = D.ngramFilteredMaintainedAppend(spark, pA, base,
+      D.BatchSide(batchA, broadcast = false), "ingestT", cap,
+      dfStorePath = Some(dp))
     assert(sortAll(servedA) ==
       sortAll(D.dfFilteredPostings(base.unionByName(batchA), cap)),
       "df-store-probed append arm diverged from the live full derivation")
@@ -1175,7 +1180,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     // next warm serve — future crossing checks must never undercount
     rmStore(ArtifactStore.childPathFor(dp, "ingestT"))
     val servedHeal = D.ngramFilteredMaintainedAppend(spark, pA, base,
-      batchA, "ingestT", cap, dfStorePath = Some(dp))
+      D.BatchSide(batchA, broadcast = false), "ingestT", cap,
+      dfStorePath = Some(dp))
     assert(sortAll(servedHeal) == sortAll(servedA),
       "serve arm changed served rows while healing the df chain")
     assert(new java.io.File(
@@ -1191,8 +1197,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     // to fire exactly when the direct aggregation's would
     val batchC = inv(15L -> 51L, 15L -> 61L)
     val servedC = D.ngramFilteredMaintainedAppend(spark, pA,
-      base.unionByName(batchA), batchC, "ingestU", cap,
-      dfStorePath = Some(dp))
+      base.unionByName(batchA), D.BatchSide(batchC, broadcast = false),
+      "ingestU", cap, dfStorePath = Some(dp))
     assert(sortAll(servedC) == sortAll(D.dfFilteredPostings(
       base.unionByName(batchA).unionByName(batchC), cap)),
       "second df-store-probed append diverged from the live derivation")
@@ -1200,8 +1206,9 @@ class ArtifactStoreSpec extends AnyFunSuite {
       "df = cap batch must append (strict > rule), not rebuild")
     val batchD = inv(20L -> 51L, 20L -> 71L)
     val servedD = D.ngramFilteredMaintainedAppend(spark, pA,
-      base.unionByName(batchA).unionByName(batchC), batchD, "ingestV",
-      cap, dfStorePath = Some(dp))
+      base.unionByName(batchA).unionByName(batchC),
+      D.BatchSide(batchD, broadcast = false), "ingestV", cap,
+      dfStorePath = Some(dp))
     val liveD = D.dfFilteredPostings(base.unionByName(batchA)
       .unionByName(batchC).unionByName(batchD), cap)
     assert(sortAll(servedD) == sortAll(liveD),

@@ -92,32 +92,96 @@ class BroadcastGuardSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
   }
 
-  test("carryBroadcastHint re-raises only a SPINE hint (r18 advice): a " +
-    "store-delta hint under select/explode is carried to the join " +
-    "input, while a hint embedded in a JOIN BRANCH — the " +
-    "adaptiveChunksOf 1-row cardinality probe — leaves the frame " +
-    "unhinted (the fresh-fallback batch side must stay planner-chosen)") {
+  test("storeBatchSide decides the batch broadcast once, as a value: a " +
+    "delta under budget broadcasts and plans a BroadcastHashJoin that " +
+    "builds the batch side; an over-budget or delta-less side does not, " +
+    "nor does the fresh fallback whose plan embeds a 1-row broadcast") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
     import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    def rootHinted(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.analyzed.isInstanceOf[ResolvedHint]
-    // spine hint, buried under a derivation: select + explode over the
-    // hinted frame — the storeBatchSide consumer shape
-    val delta = broadcast(Tables.nation(spark, sf))
-    val derived = delta.select(col("n_nationkey"),
-      explode(split(col("n_name"), "")).as("ch"))
-    assert(rootHinted(operators.DedupQueries.carryBroadcastHint(derived)),
-      "spine hint under select/explode was not re-raised")
-    // join-branch hint: the fresh adaptive fallback embeds
-    // crossJoin(broadcast(1-row count)) — the whole-plan scan used to
-    // mistake it for a batch-side hint and force-broadcast the frame
-    val n = Tables.customer(spark, sf).agg(count(lit(1)).as("n"))
-    val freshLike = Tables.customer(spark, sf).crossJoin(broadcast(n))
-      .select(col("c_custkey"), col("n"))
-    val carried = operators.DedupQueries.carryBroadcastHint(freshLike)
-    assert(!rootHinted(carried),
-      "join-branch (cardinality-probe) hint wrongly re-raised onto the " +
-        "corpus-growing fresh frame")
-    assert(carried eq freshLike, "unhinted frame must be returned as-is")
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val D = operators.DedupQueries
+    val chain = D.digestStore(spark, sf) // base + the batch's delta
+    val path = D.digestStorePath(sf)
+    val side = D.storeBatchSide(spark, path, chain, D.BatchBroadcastMaxRows)
+    assert(side.broadcast, "a delta under the row budget must broadcast")
+    assert(side.frame.count() == chain.where(D.isIngestBatch).count(),
+      "the delta side must hold exactly the chain's batch rows")
+    // with auto-broadcast off the hint is the only path to a broadcast
+    // join, so the plan shows the decision directly
+    def builds(s: D.BatchSide) = {
+      val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try s.hinted(s.frame.as("a"))
+        .join(chain.where(!D.isIngestBatch).as("b"),
+          col("a.text_hash") === col("b.text_hash"))
+        .queryExecution.sparkPlan
+        .collect { case j: BroadcastHashJoinExec => j.buildSide }
+      finally
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
+    }
+    assert(builds(side) == Seq(BuildLeft),
+      "the broadcast join must build the batch side")
+    assert(builds(side.copy(broadcast = false)).isEmpty,
+      "an unbroadcast side must leave the join to the planner")
+    // over budget: the recorded row count is the whole test
+    val rows = ArtifactStore.deltaRowCount(path, D.IngestBatchTag).get
+    assert(D.storeBatchSide(spark, path, chain, rows).broadcast,
+      "the budget is inclusive")
+    assert(!D.storeBatchSide(spark, path, chain, rows - 1).broadcast,
+      "an over-budget delta must not broadcast")
+    // no delta behind the path: no metadata, no broadcast
+    assert(!D.storeBatchSide(spark, path + "_nodelta", chain,
+      D.BatchBroadcastMaxRows).broadcast, "a delta-less side must not broadcast")
+    // the fresh fallback: adaptiveChunksOf embeds
+    // crossJoin(broadcast(1-row count)) in the frame, and it is still
+    // not the batch side's broadcast
+    val docs = Tables.documents(spark, sf)
+    val fresh = D.adaptiveChunksOf(D.simhashesOn(docs), "simhash", docs)
+    assert(fresh.queryExecution.analyzed.exists(_.isInstanceOf[ResolvedHint]),
+      "fixture lost its embedded 1-row broadcast")
+    val freshSide = D.storeBatchSide(spark,
+      D.simhashChunkStorePath(sf) + "_nodelta", fresh, D.BatchBroadcastMaxRows)
+    assert(!freshSide.broadcast, "the fresh fallback must not broadcast")
+  }
+
+  test("store-served admission plans raise no 'is not supported' hint " +
+    "warning: the batch decision is applied only at joins that build " +
+    "on the batch side") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val queries = Seq("dedup_incremental", "pipe_corpus_clean_incremental",
+      "dedup_ngram_incremental", "dedup_simhash_incremental",
+      "dedup_containment_incremental", "dedup_spans_incremental",
+      "dedup_embedding_incremental", "pipe_admit_full")
+    // warm every store these serve from: building a frame derives and
+    // appends its chains, so the planning below sees served stores
+    queries.foreach(q => SparkEntry.queries(q)(spark, sf))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("hint-guard", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger")
+      .asInstanceOf[CoreLogger]
+    val prevLevel = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try queries.foreach { q =>
+      SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(prevLevel)
+      appender.stop()
+    }
+    val unsupported = seen.asScala.filter(_.contains("is not supported"))
+    assert(unsupported.isEmpty,
+      s"hints applied where Spark ignores them:\n${unsupported.mkString("\n")}")
   }
 
   test("plan-audit global-window census (r17 item 6): an unpartitioned " +

@@ -502,8 +502,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(got.toSet == expected,
       s"incremental diverged from batch-touching full pairs:\n$got\n$expected")
     // SHAPE-GATE parity (round-19): the verify tail has two shapes —
-    // the grouped/broadcast form on gated (spine-hinted) batch sides
-    // and the classic two-join form elsewhere. Drive both through the
+    // the grouped/broadcast form when the batch side broadcasts and
+    // the classic two-join form elsewhere. Drive both through the
     // split-form entry point on the same fixture and pin equal rows.
     val embV = emb.select($"vec_id", $"embedding".cast("array<double>").as("vec"))
     val bits = S.sigBitsFor(emb.count())
@@ -512,8 +512,7 @@ class PipelineSpec extends AnyFunSuite {
       val inS = sigs.where(expr("pmod(vec_id, 5) = 0"))
       val exS = sigs.where(expr("pmod(vec_id, 5) != 0"))
       S.incrementalEmbOfSigs(exS,
-          if (hinted) org.apache.spark.sql.functions.broadcast(inS) else inS,
-          embV)
+          operators.DedupQueries.BatchSide(inS, broadcast = hinted), embV)
         .collect().map(_.toString).toList
     }
     assert(viaSplit(hinted = true) == viaSplit(hinted = false),

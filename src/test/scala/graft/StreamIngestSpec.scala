@@ -187,4 +187,51 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("already chained"),
       s"second non-empty batch must fail loudly, got: ${ex.getMessage}")
   }
+
+  test("at-least-once replay of a 1000-document batch is recognised by " +
+    "content — the order-free identity hash cannot overflow under ANSI " +
+    "— while a different batch under the landed tag still fails loudly") {
+    import spark.implicits._
+    val D = operators.DedupQueries
+    val dir = "target/tmp/stream_ingest_replay"
+    rmTree(dir)
+    // a small base (ids ≢ 0 mod 5) and a 1000-document batch: a sum of
+    // 1000 xxhash64 values overflows a long almost surely
+    val ids = (1L to 20L).filter(_ % 5 != 0) ++ (5L to 5000L by 5L)
+    ids.map(i => (i, s"doc $i body w${i % 97} v${i % 89} tail$i"))
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), col("text"), lit("en").as("lang"),
+        lit("web").as("source"), length(col("text")).cast("long").as("n_chars"))
+      .repartition(2)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    (1L to 10L).map(i => (i, (0 until 8).map(d => if (d == i % 8) 1.0 else 0.0)))
+      .toDF("vec_id", "embedding")
+      .repartition(1)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    // the initial index build: the four row-local bases
+    val docs = Tables.documents(spark, dir)
+    val base = docs.where(!D.isIngestBatch)
+    ArtifactStore.cached(spark, D.digestStorePath(dir))(
+      base.select(col("doc_id"), md5(col("text")).as("text_hash")))
+    ArtifactStore.cached(spark, D.shingleStorePath(dir))(D.shingledMd5On(base))
+    ArtifactStore.cached(spark, D.ngramPostingStorePath(dir))(
+      D.ngramPostingsOn(base))
+    ArtifactStore.cached(spark, D.spanAnchorStorePath(dir))(
+      D.spanAnchorsOn(base))
+    val batch = docs.where(D.isIngestBatch)
+      .select(col("doc_id"), col("text"), col("n_chars"))
+    assert(batch.count() == 1000L)
+    streaming.EventStreams.ingestAdmissionBatch(spark, dir, batch)
+    // the crash-restart redelivery of the SAME batch must fall through
+    streaming.EventStreams.ingestAdmissionBatch(spark, dir, batch)
+    assert(ArtifactStore.deltaRowCount(D.digestStorePath(dir),
+        D.IngestBatchTag).contains(1000L),
+      "replay disturbed the landed digest delta")
+    val ex = intercept[RuntimeException] {
+      streaming.EventStreams.ingestAdmissionBatch(spark, dir,
+        batch.where(col("doc_id") =!= 5L))
+    }
+    assert(ex.getMessage.contains("already chained"),
+      s"a different batch must fail loudly, got: ${ex.getMessage}")
+  }
 }

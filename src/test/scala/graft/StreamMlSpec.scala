@@ -627,7 +627,9 @@ class StreamMlSpec extends AnyFunSuite {
       // corpus/sub matches are exactly what the stream must reproduce
       val all = (Seq(1L -> big, 2L -> smal) ++ incoming)
         .toDF("doc_id", "text")
-      val batch = D.incrementalContainmentOfSh(D.containmentShOn(all))
+      val sh = D.containmentShOn(all)
+      val batch = D.incrementalContainmentOfSh(sh,
+          D.BatchSide(sh.where(D.isIngestBatch), broadcast = true))
         .where($"match_src" === "corpus" && $"direction" === "sub")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
         .toSet
