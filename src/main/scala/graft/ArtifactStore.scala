@@ -180,7 +180,8 @@ object ArtifactStore {
   private[graft] val SupersededVariants: Seq[String] = Seq(
     "_ngram_j50_w3_minlabel_v1_", // r11 labeling, superseded r12
     "_ngram_j50_w3_minlabel_v2_", // r12→r13 posting-store edges, superseded by the r14 df-cap v3
-    "_w3b100_df1000_") // r14 pre-maintained ngram_fpostings (full-corpus monolith), superseded by the m2 base/delta chain
+    "_w3b100_df1000_", // r14 pre-maintained ngram_fpostings (full-corpus monolith), superseded by the m2 base/delta chain
+    "simhash_chunks_") // level-keyed simhash postings, superseded by the level-free simhash_hashes store (no live kind carries this token)
 
   private def pruneSiblings(path: String): Unit = {
     val f = new java.io.File(path)

@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   * band buckets, pigeonhole keys, name blocks) degenerating as the key
   * space fills — which is exactly what rehearsal v1 caught for the
   * single-level 15-bit simhash/pHash chunks (candidates ×85/×177 at
-  * 10×), fixed by the two-level keys (DedupQueries.twoLevelKeys).
+  * 10×), fixed by the two-level keys (DedupQueries.pigeonholeKeys at
+  * level 2).
   * Caveat recorded in BENCH_NOTES: within-replica hot shingles still
   * collide (the base corpus's ~30-word vocabulary makes ngram postings
   * hot); cross-replica they cannot, by construction — i.e. this
@@ -286,8 +287,9 @@ object ScaleRehearsal {
       Fam("dedup_minhash_lsh", D.minhashCandidatesOn, D.minhashLshOn,
         d => (Seq("band", "key"), D.minhashBandsOn(d))),
       Fam("dedup_simhash",
-        d => D.simhashCandidatesOfChunks(D.simhashChunksForN(d, d.count())),
-        d => D.simhashPairsOfChunks(D.simhashChunksForN(d, d.count())),
+        d => D.hammingCandidatesOf(D.simhashChunksForN(d, d.count()),
+          "simhash"),
+        d => D.hammingPairsOf(D.simhashChunksForN(d, d.count()), "simhash"),
         d => (Seq("chunk_idx", "chunk_val"),
           D.simhashChunksForN(d, d.count()))),
       Fam("dedup_containment",
@@ -299,8 +301,9 @@ object ScaleRehearsal {
         c => (Seq("blk"), c.select(
           expr("substring(c_name, 1, length(c_name) - 2)").as("blk")))),
       Fam("mm_dedup_phash",
-        d => M.phashCandidatesOfChunks(M.phashChunksForN(media(d), d.count())),
-        d => M.phashPairsOfChunks(M.phashChunksForN(media(d), d.count())),
+        d => D.hammingCandidatesOf(M.phashChunksForN(media(d), d.count()),
+          "phash"),
+        d => D.hammingPairsOf(M.phashChunksForN(media(d), d.count()), "phash"),
         d => (Seq("chunk_idx", "chunk_val"),
           M.phashChunksForN(media(d), d.count()))),
       // spans: "candidates" = selected anchor postings (the shuffled
@@ -394,12 +397,12 @@ object ScaleRehearsal {
     // ---- incremental-ingest admission rehearsal -----------------------
     // The claim behind the round-12 incremental roster, measured: a
     // FIXED-size ingest batch admitted against a GROWING corpus whose
-    // pigeonhole postings are persisted (the serving-path shape — the
-    // existing side is a parquet posting read, never a text
+    // hashes are persisted (the serving-path shape — the existing side
+    // is a parquet hash read keyed at read time, never a text
     // re-derivation). Expect admission wall time to stay near-flat
     // relative to the full derivation's growth (the batch's hash+key
-    // work is constant; the posting probe is an equi join against a
-    // corpus-sized but 8-byte-per-posting read), candidates ~linear in
+    // work is constant; the probe is an equi join against a
+    // corpus-sized read of 8-byte hashes), candidates ~linear in
     // corpus size (bucket density × constant batch), and matches
     // tracking the planted cross-replica structure. The x{k} existing
     // corpus keeps only non-mod-5 ids (the admission predicate's
@@ -416,11 +419,10 @@ object ScaleRehearsal {
           .where(pmod(col("doc_id"), lit(5)) =!= 0)
         val nEx = existing.count()
         val level = D.pigeonholeLevelsFor(nEx + nBatch)
-        val postPath = s"$dir/simhash_postings.parquet"
-        D.chunksAtLevel(D.simhashesOn(existing), "simhash", level)
-          .write.mode("overwrite").parquet(postPath)
-        def admissionChunks = spark.read.parquet(postPath).unionByName(
-          D.chunksAtLevel(D.simhashesOn(batchDocs), "simhash", level))
+        val hashPath = s"$dir/simhash_hashes.parquet"
+        D.simhashesOn(existing).write.mode("overwrite").parquet(hashPath)
+        def admissionChunks = D.chunksAtLevel(spark.read.parquet(hashPath)
+          .unionByName(D.simhashesOn(batchDocs)), "simhash", level)
         D.incrementalHammingOfChunks(admissionChunks, "simhash").count() // warm
         val t0 = System.nanoTime()
         val outN = D.incrementalHammingOfChunks(admissionChunks, "simhash")
@@ -750,11 +752,10 @@ object ScaleRehearsal {
         // simhash: probe floor under correlated votes (level from the
         // grown corpus size — the serving-path rule)
         val level = D.pigeonholeLevelsFor(nEx + nBatch)
-        val chPath = s"$dir/simhash_chunks_ov.parquet"
-        D.chunksAtLevel(D.simhashesOn(existing), "simhash", level)
-          .write.mode("overwrite").parquet(chPath)
-        def chunks = spark.read.parquet(chPath).unionByName(
-          D.chunksAtLevel(D.simhashesOn(batchDocs), "simhash", level))
+        val hashPath = s"$dir/simhash_hashes_ov.parquet"
+        D.simhashesOn(existing).write.mode("overwrite").parquet(hashPath)
+        def chunks = D.chunksAtLevel(spark.read.parquet(hashPath)
+          .unionByName(D.simhashesOn(batchDocs)), "simhash", level)
         val (shOut, shSec) = timed(
           D.incrementalHammingOfChunks(chunks, "simhash").count())
         val shCand = D.incrementalHammingCandidates(chunks, "simhash").count()
@@ -1020,7 +1021,7 @@ object ScaleRehearsal {
     // pipe_admit_full end-to-end per scale: the COLD call pays every
     // once-per-corpus-version store derivation for the rehearsal
     // corpus (digests, ngram postings + filtered chain, base labels,
-    // shingles, span anchors, simhash chunks, emb sigs — the corpora
+    // shingles, span anchors, simhash hashes, emb sigs — the corpora
     // are regenerated each run, so fresh fingerprints make the first
     // call genuinely cold); the WARM call is the production per-batch
     // shape — one batch text scan plus seven store probes. The claim
@@ -1053,7 +1054,7 @@ object ScaleRehearsal {
     // call then pays exactly one steady-state ingest: every store's
     // delta append (digest, ngram postings, df-filtered postings
     // INCLUDING the fpost crossing check, shingles, span anchors,
-    // simhash chunks, emb sigs), the one batch text scan, and the
+    // simhash hashes, emb sigs), the one batch text scan, and the
     // battery's store probes. The claim the numbers back: sec_ingest is
     // flat in corpus size. A chain the warm-up REBUILT (batch tag
     // folded — e.g. the emb chain when this scale's corpus crosses a

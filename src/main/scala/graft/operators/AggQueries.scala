@@ -770,7 +770,7 @@ object AggQueries {
     * Index of the order-value distribution, early era (order < 1998)
     * vs late — THE standard "did my feature distribution move"
     * monitor a training pipeline runs between data drops. Fixed
-    * $60k-wide value buckets (top-coded at bucket 9), Laplace-smoothed
+    * $60k-wide value buckets (clamped to 0..9), Laplace-smoothed
     * shares, per-bucket PSI contribution (p−q)·ln(p/q).
     *
     * Determinism: buckets come from exact integer cents (floor over a
@@ -796,8 +796,8 @@ object AggQueries {
       : org.apache.spark.sql.DataFrame = {
     val counts = obs
       .select(
-        least(floor(Tables.cents(col("value")).cast("long")
-          / lit(6000000.0)), lit(9.0)).cast("int").as("bucket"),
+        greatest(least(floor(Tables.cents(col("value")).cast("long")
+          / lit(6000000.0)), lit(9.0)), lit(0.0)).cast("int").as("bucket"),
         col("early"))
       .groupBy(col("bucket"))
       .agg(sum(when(col("early"), lit(1L)).otherwise(lit(0L))).as("n_early"),
@@ -807,9 +807,11 @@ object AggQueries {
     // exactly ONCE (a second totals aggregate would re-read it; the
     // single-partition window is over bucket-grain rows, never
     // data-sized). The identity limit stamps the structural bound into
-    // the plan (r17 item 6): `bucket` is least(·, 9) — domain
-    // {0..9, null}, ≤ 11 groups — so the limit never drops a row and
-    // the unpartitioned-window census can prove the bound.
+    // the plan (r17 item 6): `bucket` is clamped to [0, 9] from BOTH
+    // sides — domain {0..9, null}, ≤ 11 groups; a negative value lands
+    // in bucket 0 instead of a group of its own — so the limit never
+    // drops a row and the unpartitioned-window census can prove the
+    // bound.
     val all = Window.partitionBy()
     val pS = (col("n_early").cast("double") + lit(1.0)) /
       (col("tot_early").cast("double") + lit(10.0))
@@ -828,7 +830,7 @@ object AggQueries {
     * Smirnov D statistic between the early (< 1998) and late order-
     * value distributions — the sharper companion to [[profDriftPsi]]:
     * D = max |F̂_early − F̂_late| over the bucketed empirical CDFs
-    * ($6k bins, top-coded at 99).
+    * ($6k bins, clamped to 0..99).
     *
     * Determinism: bucket counts and the cumulative/total sums are
     * exact longs; each CDF value is ONE IEEE division, and D is built
@@ -849,17 +851,17 @@ object AggQueries {
       : org.apache.spark.sql.DataFrame = {
     val counts = obs
       .select(
-        least(floor(Tables.cents(col("value")).cast("long")
-          / lit(600000.0)), lit(99.0)).cast("int").as("bucket"),
+        greatest(least(floor(Tables.cents(col("value")).cast("long")
+          / lit(600000.0)), lit(99.0)), lit(0.0)).cast("int").as("bucket"),
         col("early"))
       .groupBy(col("bucket"))
       .agg(sum(when(col("early"), lit(1L)).otherwise(lit(0L))).as("n_early"),
         sum(when(!col("early"), lit(1L)).otherwise(lit(0L))).as("n_late"))
     // bounded-global-window: both windows run over the ≤100-row bucket
     // aggregate (the KS statistic's CDF grid), never the observations.
-    // Identity limit (r17 item 6): `bucket` is least(·, 99) — domain
-    // {0..99, null}, ≤ 101 groups — a plan-provable maxRows for the
-    // unpartitioned-window census, never a dropped row.
+    // Identity limit (r17 item 6): `bucket` is clamped to [0, 99] from
+    // both sides — domain {0..99, null}, ≤ 101 groups — a plan-provable
+    // maxRows for the unpartitioned-window census, never a dropped row.
     val cum = Window.orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val all = Window.partitionBy()
@@ -1277,8 +1279,8 @@ object AggQueries {
     },
     "prof_ks_test" ->
       """WITH c AS (
-        |  SELECT CAST(least(floor(floor(o_totalprice * 100.0 + 0.5)
-        |                          / 600000.0), 99.0) AS INT) AS bucket,
+        |  SELECT CAST(greatest(least(floor(floor(o_totalprice * 100.0 + 0.5)
+        |                          / 600000.0), 99.0), 0.0) AS INT) AS bucket,
         |    SUM(CASE WHEN CAST(o_orderdate AS DATE) < DATE '1998-01-01'
         |             THEN 1 ELSE 0 END) AS n_early,
         |    SUM(CASE WHEN NOT (CAST(o_orderdate AS DATE) < DATE '1998-01-01')
@@ -1379,8 +1381,8 @@ object AggQueries {
         |FROM f GROUP BY 1 ORDER BY 1""".stripMargin),
     "prof_drift_psi" ->
       """WITH c AS (
-        |  SELECT CAST(least(floor(floor(o_totalprice * 100.0 + 0.5)
-        |                          / 6000000.0), 9.0) AS INT) AS bucket,
+        |  SELECT CAST(greatest(least(floor(floor(o_totalprice * 100.0 + 0.5)
+        |                          / 6000000.0), 9.0), 0.0) AS INT) AS bucket,
         |    SUM(CASE WHEN CAST(o_orderdate AS DATE) < DATE '1998-01-01'
         |             THEN 1 ELSE 0 END) AS n_early,
         |    SUM(CASE WHEN NOT (CAST(o_orderdate AS DATE) < DATE '1998-01-01')

@@ -757,14 +757,6 @@ object DedupQueries {
       shingledMd5On(docs.where(isIngestBatch)))
   }
 
-  /** 64 minhash values per doc: h_i(s) = (a_i·(s mod p) + b_i) mod p
-    * over the replayable shingle hashes, folded over the shingle set
-    * (order-independent: min). a_i ≤ 127 × (p−1) ≈ 2.7e11 — no
-    * overflow, ANSI-safe, and the DuckDB oracle replays it term for
-    * term. */
-  def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    minhashSignaturesOn(Tables.documents(spark, dir))
-
   /** ROW-LOCAL minhash signature array — the same 64 (a·s+b) mod p
     * minima as [[minhashSignaturesOn]] computed by a single
     * `aggregate` HOF traversal of the shingle array, no explode and no
@@ -784,6 +776,11 @@ object DedupQueries {
           pmod(pmod(s, lit(Prime)) * (i * 2L + 1L) + (lit(7919L) * i + 1L),
             lit(Prime)))))
 
+  /** 64 minhash values per doc: h_i(s) = (a_i·(s mod p) + b_i) mod p
+    * over the replayable shingle hashes, folded over the shingle set
+    * (order-independent: min). a_i ≤ 127 × (p−1) ≈ 2.7e11 — no
+    * overflow, ANSI-safe, and the DuckDB oracle replays it term for
+    * term. */
   private[graft] def minhashSignaturesOn(docs: DataFrame): DataFrame =
     minhashSignaturesOfShingles(shingledMd5On(docs))
 
@@ -902,9 +899,6 @@ object DedupQueries {
     * shingle hashes (their 60 bits are already well-mixed — no spread
     * multiply needed, and the whole vote table replays in the DuckDB
     * oracle). */
-  def simhashes(spark: SparkSession, dir: String): DataFrame =
-    simhashesOn(Tables.documents(spark, dir))
-
   private[graft] def simhashesOn(docs: DataFrame): DataFrame =
     simhashesOfShingles(shingledMd5On(docs))
 
@@ -951,30 +945,6 @@ object DedupQueries {
     aggregate(votes, lit(0L), (acc, v) => acc + v)
   }
 
-  /** TWO-LEVEL pigeonhole blocking keys for hamming ≤ 3 over a 60-bit
-    * hash — 16 (chunk_idx, chunk_val) postings per doc.
-    *
-    * Level 1 is the classic 4 × 15-bit split (≤3 errors ⇒ ≥1 chunk
-    * exact). Level 1 ALONE saturates: its key space is 2^15 per chunk
-    * slot, so beyond ~30k docs random chunk collisions dominate and
-    * candidate pairs go quadratic — MEASURED in the round-9 10× scale
-    * rehearsal (dedup_simhash candidates ×85, mm_dedup_phash ×177 at
-    * 10× corpus; SCALE10.json). Level 2 restores the bound: given the
-    * exact chunk c, all ≤3 errors live in c's 45-bit complement (the
-    * other three chunks, concatenated in cyclic order); pigeonhole over
-    * its 12+11+11+11-bit sub-chunks gives ≥1 exact sub-chunk. So every
-    * true pair shares a (c·4+s, chunk_val·2^12 + sub_val) key, and the
-    * key space per slot grows from 2^15 to 2^27 — saturation pushed
-    * from ~10^4 to ~10^8 docs per slot (re-measured: candidate growth
-    * back to ~linear at 10×). Recall is exact, not probabilistic: the
-    * candidate set is a SUPERSET of all hamming ≤ 3 pairs by
-    * construction, and the exact hamming filter downstream makes the
-    * final result identical to the single-level form (oracles and
-    * fixture specs unchanged). Cost: 16 postings/doc instead of 4 —
-    * fixed-width rows, the same shuffle shape, 4× the posting volume
-    * for a quadratic→linear candidate collapse. */
-  private[graft] def twoLevelKeys(h: Column): Column = pigeonholeKeys(h, 2)
-
   /** Corpus size above which the pigeonhole blocking engages its THIRD
     * level — the key-width-∝-n lever the round-9 rehearsal left
     * documented but unimplemented. The 2-level slot space is 2^27;
@@ -1014,8 +984,18 @@ object DedupQueries {
   /** Generalized pigeonhole blocking keys for hamming ≤ 3 over the
     * 60-bit hash, at 2, 3, or 4 levels.
     *
-    * Level 2 (16 postings/doc, ~2^27 key space/slot) is the round-9
-    * scheme documented above. Level 3 recurses once more: given the
+    * Level 1, the classic 4 × 15-bit split (≤3 errors ⇒ ≥1 chunk
+    * exact), saturates: its key space is 2^15 per chunk slot, so
+    * beyond ~30k docs random chunk collisions dominate and candidate
+    * pairs go quadratic — MEASURED in the round-9 10× scale rehearsal
+    * (dedup_simhash candidates ×85, mm_dedup_phash ×177 at 10× corpus;
+    * SCALE10.json). Level 2 (16 postings/doc) restores the bound:
+    * given the exact chunk c, all ≤3 errors live in c's 45-bit
+    * complement (the other three chunks, concatenated in cyclic
+    * order); pigeonhole over its 12+11+11+11-bit sub-chunks gives ≥1
+    * exact sub-chunk, so every true pair shares a (c·4+s,
+    * chunk_val·2^12 + sub_val) key and the key space per slot grows
+    * from 2^15 to 2^27. Level 3 recurses once more: given the
     * exact 15-bit chunk c AND the exact sub-chunk s of its 45-bit
     * complement, the ≤3 errors all live in the REMAINING 33–34 bits
     * (the other three sub-chunks, concatenated cyclically); pigeonhole
@@ -1095,9 +1075,8 @@ object DedupQueries {
     *
     * The cardinality probe is RELATIONAL AND LAZY (round-11 advice —
     * the indexUpsertOn lesson applied here too): a 1-row count
-    * aggregate over `counted`, broadcast onto the hash frame, with
-    * `when(n > switch, 3-level keys).otherwise(2-level keys)` choosing
-    * the key array per row. An eager `docs.count()` at
+    * aggregate over `counted`, broadcast onto the hash frame, chooses
+    * the level's slot table per row. An eager `docs.count()` at
     * query-CONSTRUCTION time made a mere explain() trigger a full
     * corpus job (PlanProbe probes these families); now nothing
     * executes until the query itself runs, and the probe is one
@@ -1113,151 +1092,140 @@ object DedupQueries {
     // anyway): plans as a BNLJ whose build side is one row, which the
     // family plan specs permit by name while still requiring the
     // CANDIDATE join itself to be equi on the chunk keys.
-    //
-    // The lazy form caps at LEVEL 3: the 2-vs-3 CASE WHEN already
-    // sits near the Janino method-size edge (the round-11 lesson
-    // below), and every corpus large enough to want level 4 reaches
-    // this family through the posting STORE, whose metadata makes the
-    // level a plan-time constant ([[simhashChunkStore]]) — fixed-level
-    // construction, no probe stage, no CASE. Level choice is
-    // output-invisible either way (exact-recall superset + hamming
-    // filter), so the cap costs candidate volume only in the
-    // storeless-huge-corpus corner that production never takes.
-    val n = counted.agg(count(lit(1)).as("n_docs"))
-    stagedPigeonhole(hashes.crossJoin(broadcast(n)), hashCol, 3)
-      .select(col("doc_id"), col(hashCol),
-        explode(when(col("n_docs") > lit(ThirdLevelMinDocs), stagedKeys(3))
-          .otherwise(stagedKeys(2))).as("k"))
-      .select(col("doc_id"), col(hashCol),
-        col("k.chunk_idx").as("chunk_idx"), col("k.chunk_val").as("chunk_val"))
+    val n = col("n_docs")
+    keysBySlot(
+      hashes.crossJoin(broadcast(counted.agg(count(lit(1)).as("n_docs")))),
+      hashCol,
+      when(n > lit(FourthLevelMinDocs), keySlots(4))
+        .when(n > lit(ThirdLevelMinDocs), keySlots(3))
+        .otherwise(keySlots(2)))
   }
 
   /** [[adaptiveChunksOf]] at a FIXED level known at plan time (store
-    * metadata or an explicit corpus count): same staged construction,
-    * no count probe, no CASE WHEN — the serving-path form. */
+    * metadata or an explicit corpus count): no count probe — the
+    * serving-path form. */
   private[graft] def chunksAtLevel(hashes: DataFrame, hashCol: String,
       level: Int): DataFrame =
-    stagedPigeonhole(hashes, hashCol, level)
-      .select(col("doc_id"), col(hashCol),
-        explode(stagedKeys(level)).as("k"))
-      .select(col("doc_id"), col(hashCol),
-        col("k.chunk_idx").as("chunk_idx"), col("k.chunk_val").as("chunk_val"))
+    keysBySlot(hashes, hashCol, keySlots(level))
 
-  private val PigSubW   = Seq(12, 11, 11, 11) // widths over the 45-bit complement
-  private val PigSubOff = Seq(0, 12, 23, 34)
-  // staged-column accessors (1-indexed element_at)
-  private def pigL2(cs: Int)    = element_at(col("__l2"), cs + 1)
-  private def pigRest(cs: Int)  = element_at(col("__rest"), cs + 1)
-  private def pigL3(k: Int)     = element_at(col("__l3"), k + 1)
-  private def pigRest2(k: Int)  = element_at(col("__rest2"), k + 1)
-  /** Sub-sub-chunk widths of the `rest` complement for level-1 chunk
-    * slot s (restW = 45 − subW(s), remainder bits to the low slots). */
-  private def pigSsW(s: Int): Seq[Int] = {
+  private val PigSubW = Seq(12, 11, 11, 11) // widths over the 45-bit complement
+  private val PigSubOff = PigSubW.scanLeft(0)(_ + _)
+  private def mask(w: Int): Long = (1L << w) - 1
+  /** `w` bits split into four pieces, remainder bits to the low slots. */
+  private def fourWidths(w: Int): Seq[Int] =
+    (0 until 4).map(i => w / 4 + (if (i < w % 4) 1 else 0))
+
+  /** Constants of one key slot: its chunk_idx and level, then the
+    * shift or rotation amount and mask of each step of [[keysBySlot]]. */
+  private[graft] final case class KeySlot(idx: Int, level: Int,
+      chOff: Int, compRot: Int, subOff: Int, subMask: Long,
+      restRot: Int, restW: Int, ssOff: Int, ssMask: Long,
+      rest2Rot: Int, rest2W: Int, sssOff: Int, sssMask: Long)
+
+  /** The constants of every key slot of [[pigeonholeKeys]] at `level`,
+    * as ONE literal array of [[KeySlot]] structs. Each cyclic
+    * "complement" in that construction is a ROTATION: the 45-bit
+    * complement of chunk c is the 60-bit hash rotated right by
+    * 15·(c+1); the rest after sub-chunk s is that complement rotated
+    * right by the offset of sub-chunk s+1 and cut to 45 − subW(s)
+    * bits; likewise one level down. So a slot is just shift amounts and
+    * masks, and [[keysBySlot]] evaluates the same small expression for
+    * every slot. */
+  private def keySlots(level: Int): Column = typedLit(for {
+    c <- 0 until 4; s <- 0 until 4
+    t <- if (level == 2) Seq(0) else 0 until 4
+    u <- if (level <= 3) Seq(0) else 0 until 4
+  } yield {
     val restW = 45 - PigSubW(s)
-    (0 until 4).map(i => restW / 4 + (if (i < restW % 4) 1 else 0))
-  }
-  /** Sub³-chunk widths of the level-4 `rest2` complement for slots
-    * (s, t): rest2W = restW − ssW(t). */
-  private def pigSssW(s: Int, t: Int): Seq[Int] = {
-    val rest2W = (45 - PigSubW(s)) - pigSsW(s)(t)
-    (0 until 4).map(i => rest2W / 4 + (if (i < rest2W % 4) 1 else 0))
+    val ssW = fourWidths(restW)
+    val ssOff = ssW.scanLeft(0)(_ + _)
+    val rest2W = restW - ssW(t)
+    val sssW = fourWidths(rest2W)
+    val sssOff = sssW.scanLeft(0)(_ + _)
+    val idx = level match {
+      case 2 => c * 4 + s
+      case 3 => (c * 4 + s) * 4 + t
+      case _ => ((c * 4 + s) * 4 + t) * 4 + u
+    }
+    KeySlot(idx, level, 15 * c, 15 * (c + 1) % 60,
+      PigSubOff(s), mask(PigSubW(s)), PigSubOff((s + 1) % 4), restW,
+      ssOff(t), mask(ssW(t)), ssOff((t + 1) % 4), rest2W,
+      sssOff(u), mask(sssW(u)))
+  })
+
+  /** One (doc_id, `hashCol`, chunk_idx, chunk_val) row per hash and key
+    * slot of `slots` ([[keySlots]], or a per-row choice between them):
+    * exactly [[pigeonholeKeys]], which PipelineSpec pins at every
+    * level. The expression is the same few shifts and masks at every
+    * level, so the generated code stays small; the earlier
+    * construction built all 64 or 256 key structs per row and derived
+    * level-3 and level-4 keys 7× and 13× slower (45k hashes of the ×10
+    * admit_ingest corpus, 4 cores), which made read-time keys cost
+    * more than reading persisted ones. */
+  private def keysBySlot(hashes: DataFrame, hashCol: String,
+      slots: Column): DataFrame = {
+    def p(f: String) = col(s"__slot.$f")
+    def shr(x: Column, n: Column) = call_function("shiftright", x, n)
+    def shl(x: Column, n: Column) = call_function("shiftleft", x, n)
+    // the low w bits of x rotated right by r (0 ≤ r < w)
+    def rot(x: Column, w: Column, r: Column) =
+      shr(x, r).bitwiseOR(shl(x, w - r)).bitwiseAND(shl(lit(1L), w) - 1)
+    val h = col(hashCol).bitwiseAND(lit(mask(60)))
+    val comp = rot(h, lit(60), p("compRot")).bitwiseAND(lit(mask(45)))
+    val l2 = shiftleft(shr(h, p("chOff")).bitwiseAND(lit(0x7FFFL)), 12)
+      .bitwiseOR(shr(comp, p("subOff")).bitwiseAND(p("subMask")))
+    val rest = rot(comp, lit(45), p("restRot"))
+      .bitwiseAND(shl(lit(1L), p("restW")) - 1)
+    val l3 = shiftleft(l2, 9)
+      .bitwiseOR(shr(rest, p("ssOff")).bitwiseAND(p("ssMask")))
+    val rest2 = rot(rest, p("restW"), p("rest2Rot"))
+      .bitwiseAND(shl(lit(1L), p("rest2W")) - 1)
+    val l4 = shiftleft(l3, 7)
+      .bitwiseOR(shr(rest2, p("sssOff")).bitwiseAND(p("sssMask")))
+    hashes.select(col("doc_id"), col(hashCol), explode(slots).as("__slot"))
+      .select(col("doc_id"), col(hashCol), p("idx").as("chunk_idx"),
+        when(p("level") === 2, l2).when(p("level") === 3, l3).otherwise(l4)
+          .as("chunk_val"))
   }
 
-  /** Stage the pigeonhole bit-arithmetic through materialized
-    * intermediate array columns (__ch/__comp/__l2/__rest, plus
-    * __l3/__rest2 at level 4) instead of inlining [[pigeonholeKeys]]'
-    * full trees into the generator: the monolithic 16+64-struct CASE
-    * WHEN repeated the ~30-op complement arithmetic per entry and blew
-    * the generated `generate_doConsume` past Janino's 64 KB method
-    * limit — a SILENT fall-back to interpreted evaluation that cost
-    * +1.9 s on dedup_simhash and +2.7 s on mm_dedup_phash at sf0.1
-    * (the round-6 PqEncode lesson again). Multiple references to each
-    * non-cheap alias keep CollapseProject from re-inlining them.
-    * Equality with the reference [[pigeonholeKeys]] form is spec-pinned
-    * at ALL levels (PipelineSpec), so the constructions cannot drift.
-    * Only the columns `maxLevel` needs are added — a level-2 plan
-    * carries no level-4 baggage. */
-  private def stagedPigeonhole(df: DataFrame, hashCol: String,
-      maxLevel: Int): DataFrame = {
-    def ch(c: Int)   = element_at(col("__ch"), c + 1)
-    def comp(c: Int) = element_at(col("__comp"), c + 1)
-    val base = df
-      .withColumn("__ch", array((0 until 4).map(c =>
-        shiftright(col(hashCol), c * 15).bitwiseAND(lit(0x7FFFL))): _*))
-      .withColumn("__comp", array((0 until 4).map { c =>
-        val o = (1 to 3).map(i => element_at(col("__ch"), (c + i) % 4 + 1))
-        o(0).bitwiseOR(shiftleft(o(1), 15)).bitwiseOR(shiftleft(o(2), 30))
-      }: _*))
-      .withColumn("__l2", array((for { c <- 0 until 4; s <- 0 until 4 } yield {
-        val sub = shiftright(comp(c), PigSubOff(s))
-          .bitwiseAND(lit((1L << PigSubW(s)) - 1))
-        shiftleft(ch(c), 12).bitwiseOR(sub)
-      }): _*))
-    if (maxLevel < 3) base
-    else {
-      val with3 = base
-        .withColumn("__rest", array((for { c <- 0 until 4; s <- 0 until 4 }
-          yield {
-            (1 to 3).map(i => (s + i) % 4)
-              .foldLeft((lit(0L), 0)) { case ((acc, w), j) =>
-                (acc.bitwiseOR(shiftleft(shiftright(comp(c), PigSubOff(j))
-                  .bitwiseAND(lit((1L << PigSubW(j)) - 1)), w)), w + PigSubW(j))
-              }._1
-          }): _*))
-      if (maxLevel < 4) with3
-      else with3
-        .withColumn("__l3", array((for { cs <- 0 until 16; t <- 0 until 4 }
-          yield {
-            val ssW = pigSsW(cs % 4)
-            val ssOff = ssW.scanLeft(0)(_ + _)
-            shiftleft(pigL2(cs), 9).bitwiseOR(
-              shiftright(pigRest(cs), ssOff(t))
-                .bitwiseAND(lit((1L << ssW(t)) - 1)))
-          }): _*))
-        .withColumn("__rest2", array((for { cs <- 0 until 16; t <- 0 until 4 }
-          yield {
-            val ssW = pigSsW(cs % 4)
-            val ssOff = ssW.scanLeft(0)(_ + _)
-            (1 to 3).map(i => (t + i) % 4)
-              .foldLeft((lit(0L), 0)) { case ((acc, w), j) =>
-                (acc.bitwiseOR(shiftleft(shiftright(pigRest(cs), ssOff(j))
-                  .bitwiseAND(lit((1L << ssW(j)) - 1)), w)), w + ssW(j))
-              }._1
-          }): _*))
+  /** A hamming-family index (simhash here, pHash in MultimodalQueries)
+    * over its hash store `hashes` at `storePath`, which persists one
+    * (doc_id, `hashCol`) row per document. The pigeonhole keys are
+    * derived here, at read time, so nothing persisted depends on the
+    * blocking level: the level is [[pigeonholeLevelsFor]] of the
+    * store's recorded row count, a plan-time constant with no count
+    * probe. Without that metadata (cache off, uncacheable source) the
+    * keys fall back to the lazy [[adaptiveChunksOf]] probe counted over
+    * `counted`, which only that fallback evaluates. [[split]] keys the ingest batch from the hash store's
+    * own delta ([[storeBatchSide]]) at the corpus side's level, so the
+    * two sides always share one key scheme. Any level is exact-recall
+    * (a candidate superset, then the exact hamming filter), so every
+    * consumer returns the same rows at whichever level it reads. */
+  private[graft] final class HammingIndex(spark: SparkSession,
+      storePath: String, hashes: DataFrame, hashCol: String,
+      counted: => DataFrame) {
+    private val level =
+      ArtifactStore.storedRowCount(storePath).map(pigeonholeLevelsFor)
+
+    /** (doc_id, `hashCol`, chunk_idx, chunk_val) over the whole corpus. */
+    def keyed: DataFrame = level match {
+      case Some(l) => chunksAtLevel(hashes, hashCol, l)
+      case None => adaptiveChunksOf(hashes, hashCol, counted)
+    }
+
+    /** The keyed existing corpus and the keyed ingest batch. The batch
+      * broadcasts within [[BatchBroadcastMaxRows]] KEYED rows, i.e.
+      * that budget over the 4^level keys each hashed document explodes
+      * to. */
+    def split: (DataFrame, BatchSide) = level match {
+      case Some(l) =>
+        val side = storeBatchSide(spark, storePath, hashes,
+          BatchBroadcastMaxRows >> (2 * l))
+        (keyed.where(!isIngestBatch),
+          side.copy(frame = chunksAtLevel(side.frame, hashCol, l)))
+      case None => (keyed.where(!isIngestBatch), freshBatchSide(keyed))
     }
   }
-
-  /** The (chunk_idx, chunk_val) key array at `level` over the staged
-    * columns — each entry a handful of ops on [[stagedPigeonhole]]'s
-    * aliases, which is what keeps 256-entry generator inputs inside
-    * Janino's method limit. */
-  private def stagedKeys(level: Int): Column = level match {
-    case 2 => array((for { cs <- 0 until 16 } yield
-      struct(lit(cs).as("chunk_idx"), pigL2(cs).as("chunk_val"))): _*)
-    case 3 => array((for { cs <- 0 until 16; t <- 0 until 4 } yield {
-      val ssW = pigSsW(cs % 4)
-      val ssOff = ssW.scanLeft(0)(_ + _)
-      val ss = shiftright(pigRest(cs), ssOff(t))
-        .bitwiseAND(lit((1L << ssW(t)) - 1))
-      struct(lit(cs * 4 + t).as("chunk_idx"),
-        shiftleft(pigL2(cs), 9).bitwiseOR(ss).as("chunk_val"))
-    }): _*)
-    case 4 => array((for { k <- 0 until 64; u <- 0 until 4 } yield {
-      val sssW = pigSssW((k / 4) % 4, k % 4)
-      val sssOff = sssW.scanLeft(0)(_ + _)
-      val sss = shiftright(pigRest2(k), sssOff(u))
-        .bitwiseAND(lit((1L << sssW(u)) - 1))
-      struct(lit(k * 4 + u).as("chunk_idx"),
-        shiftleft(pigL3(k), 7).bitwiseOR(sss).as("chunk_val"))
-    }): _*)
-    case other =>
-      throw new IllegalArgumentException(s"unsupported pigeonhole level $other")
-  }
-
-  /** [[adaptiveChunksOf]] for the simhash family over a documents
-    * frame; the cheap count side is the documents scan itself. */
-  private[graft] def simhashChunksOn(docs: DataFrame): DataFrame =
-    adaptiveChunksOf(simhashesOn(docs), "simhash", docs)
 
   /** Fixed-level simhash chunks for a corpus whose size is ALREADY
     * known (the scale rehearsal counts its input anyway) — the same
@@ -1266,83 +1234,36 @@ object DedupQueries {
   private[graft] def simhashChunksForN(docs: DataFrame, n: Long): DataFrame =
     chunksAtLevel(simhashesOn(docs), "simhash", pigeonholeLevelsFor(n))
 
-  /** The simhash pigeonhole POSTING frame as a maintained, appended
-    * artifact (round-12 judge item — the dedup_incremental_near
-    * discipline extended to the hamming family): the existing corpus's
-    * postings are an artifact read; the ingest batch is hashed and
-    * keyed ALONE off its own shingle-store delta and appended as a
-    * fingerprint-chained delta. Two structural wins over the round-11
-    * form: (a) corpus growth no longer re-runs the vote aggregate over
-    * the whole corpus — only the batch is signed; (b) the pigeonhole
-    * LEVEL comes from the shingle store's row-count METADATA
-    * ([[graft.ArtifactStore.storedRowCount]]), so on the serving path
-    * the level is a plan-time constant — the per-query lazy count
-    * broadcast on both sides of the candidate self-join (the r11
-    * regression suspect) is gone. Key construction is row-local given
-    * the level, and the level is fixed per corpus fingerprint (n is a
-    * pure function of the fingerprinted corpus), so
-    * append(store(base), chunks(batch)) ≡ chunks(base ∪ batch)
-    * row-for-row — ArtifactStoreSpec pins it, and any SINGLE level is
-    * exact-recall anyway. None when store metadata is unavailable
-    * (cache disabled / unfingerprintable source): callers fall back to
-    * the lazy adaptive probe over the fresh frame. */
+  /** The simhash HASH store: one (doc_id, simhash) row per document, a
+    * maintained, appended artifact. The base hashes the shingle chain's
+    * non-batch rows; the ingest batch is hashed ALONE off the shingle
+    * store's own delta dir (an O(batch) read, where the mod-5 filter of
+    * the chain would re-read every base shingle) and appended as a
+    * fingerprint-chained delta, so corpus growth never re-runs the vote
+    * aggregate over the whole corpus. The hash is row-local per
+    * document, so append(store(base), hashes(batch)) ≡ hashes(base ∪
+    * batch) row-for-row (ArtifactStoreSpec). Keys are derived at read
+    * time by [[simhashIndex]]; the accessors keep their `Chunk` names
+    * because the benchmark times this append under them. */
   private[graft] def simhashChunkStorePath(dir: String): String =
-    ArtifactStore.pathFor("simhash_chunks", dir, "documents.parquet", "v1")
+    ArtifactStore.pathFor("simhash_hashes", dir, "documents.parquet", "v1")
 
   private[graft] def simhashChunkStore(spark: SparkSession,
-      dir: String): Option[DataFrame] = {
-    val sh = shingleStore(spark, dir) // materializes chain + metadata
-    ArtifactStore.storedRowCount(shingleStorePath(dir)).map { n =>
-      val level = pigeonholeLevelsFor(n)
-      ArtifactStore.appendedCached(spark, simhashChunkStorePath(dir),
-        IngestBatchTag)(
-        chunksAtLevel(simhashesOfShingles(sh.where(!isIngestBatch)),
-          "simhash", level))(
-        // batch side from the shingle chain's OWN delta dir — the r16
-        // `weak`'s first named term (SCALE10: 1.9→5.7 s across
-        // ×1→×100 for this one derivation, because the mod-5 filter
-        // on the resolved chain re-read every base shingle per
-        // ingest); the delta dir holds exactly the batch's rows, so
-        // signing is O(batch)
-        chunksAtLevel(simhashesOfShingles(
-          storeBatchSide(spark, shingleStorePath(dir), sh,
-            BatchArrayBroadcastMaxRows).frame),
-          "simhash", level))
-    }
+      dir: String): DataFrame = {
+    val sh = shingleStore(spark, dir)
+    ArtifactStore.appendedCached(spark, simhashChunkStorePath(dir),
+      IngestBatchTag)(
+      simhashesOfShingles(sh.where(!isIngestBatch)))(
+      simhashesOfShingles(storeBatchSide(spark, shingleStorePath(dir), sh,
+        BatchArrayBroadcastMaxRows).frame))
   }
 
-  /** The simhash posting frame every consumer reads: the persisted
-    * posting store when metadata is available, else the lazy adaptive
-    * derivation off the (possibly fresh) shingle frame — identical
-    * final pairs either way (exact recall at any level). */
-  private[graft] def simhashChunksStored(spark: SparkSession,
-      dir: String): DataFrame =
-    simhashChunkStore(spark, dir).getOrElse {
-      val sh = shingleStore(spark, dir)
-      adaptiveChunksOf(simhashesOfShingles(sh), "simhash", sh)
-    }
-
-  /** The (existing, batch) split of the simhash posting frame, kept
-    * COHERENT with whichever source [[simhashChunkStore]] actually
-    * served (r17 advice): pairing the fresh adaptive frame with an
-    * independently re-probed store delta would mix pigeonhole levels
-    * when store metadata is unavailable while a previously persisted
-    * chunk delta still loads — mismatched (chunk_idx, chunk_val) keys
-    * silently miss matches. The delta-dir batch side is taken ONLY
-    * when the chain itself came from the store; the fresh fallback
-    * splits the one frame it derived, unbroadcast. */
-  private[graft] def simhashChunksSplit(spark: SparkSession,
-      dir: String): (DataFrame, BatchSide) =
-    simhashChunkStore(spark, dir) match {
-      case Some(chain) =>
-        (chain.where(!isIngestBatch),
-          storeBatchSide(spark, simhashChunkStorePath(dir), chain,
-            BatchBroadcastMaxRows))
-      case None =>
-        val sh = shingleStore(spark, dir)
-        val chunks = adaptiveChunksOf(simhashesOfShingles(sh), "simhash", sh)
-        (chunks.where(!isIngestBatch), freshBatchSide(chunks))
-    }
+  /** [[HammingIndex]] over the simhash store; the storeless fallback
+    * counts the shingle frame. */
+  private[graft] def simhashIndex(spark: SparkSession,
+      dir: String): HammingIndex =
+    new HammingIndex(spark, simhashChunkStorePath(dir),
+      simhashChunkStore(spark, dir), "simhash", shingleStore(spark, dir))
 
   /** The pigeonhole key pair (chunk_idx, chunk_val) FUSED into one
     * LONG — `chunk_idx << 48 | chunk_val` — the hamming families' join
@@ -1355,7 +1276,7 @@ object DedupQueries {
     * measured at ×100). INJECTIVE by construction, so the
     * fused equi-join is row-identical to the pair join: chunk_idx is
     * at most 255 (level 4 = 256 slots) and chunk_val is at most
-    * 43 bits wide (the staged widths: 15-bit ch + 12-bit sub + 9-bit
+    * 43 bits wide (the slot widths: 15-bit ch + 12-bit sub + 9-bit
     * ss + 7-bit sss at level 4; narrower at lower levels), so the two
     * fields never overlap in the 64-bit fusion. Used on BOTH sides of
     * every hamming-family candidate join (simhash + pHash, full and
@@ -1364,75 +1285,64 @@ object DedupQueries {
     shiftleft(col(s"$side.chunk_idx").cast("long"), 48)
       .bitwiseOR(col(s"$side.chunk_val"))
 
-  /** SimHash candidate pairs of an explicit chunk frame (distinct,
-    * pre-hamming-filter) — the blocked candidate set the scale
-    * rehearsal measures. */
-  private[graft] def simhashCandidatesOfChunks(chunks: DataFrame): DataFrame =
+  /** Hamming-family candidate pairs of an explicit chunk frame
+    * (distinct, pre-hamming-filter) — the blocked candidate set the
+    * scale rehearsal measures. */
+  private[graft] def hammingCandidatesOf(chunks: DataFrame,
+      hashCol: String): DataFrame =
     chunks.as("a").join(chunks.as("b"),
         fusedChunkKey("a") === fusedChunkKey("b") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
+        bit_count(col(s"a.$hashCol").bitwiseXOR(col(s"b.$hashCol")))
+          .as("hamming"))
       .distinct()
 
-  private[graft] def simhashCandidatesOn(docs: DataFrame): DataFrame =
-    simhashCandidatesOfChunks(simhashChunksOn(docs))
-
-  /** SimHash near-dup pairs at hamming distance ≤ 3, blocked by the
-    * adaptive pigeonhole scheme — candidate join is equi with a
-    * 2^27-or-wider key space per slot, not quadratic. */
-  private[graft] def simhashPairsOn(docs: DataFrame): DataFrame =
-    simhashCandidatesOn(docs).where(col("hamming") <= 3)
-      .orderBy(col("doc_a"), col("doc_b"))
-
-  /** [[simhashPairsOn]] over an explicit posting frame — the shared
-    * tail of the store-served and fresh forms. */
-  private[graft] def simhashPairsOfChunks(chunks: DataFrame): DataFrame =
-    simhashCandidatesOfChunks(chunks)
+  /** Near-dup pairs at hamming distance ≤ 3 of an explicit chunk frame
+    * — the shared tail of both families' store-served and fresh forms;
+    * the candidate join is equi with a 2^27-or-wider key space per
+    * slot, not quadratic. */
+  private[graft] def hammingPairsOf(chunks: DataFrame,
+      hashCol: String): DataFrame =
+    hammingCandidatesOf(chunks, hashCol)
       .where(col("hamming") <= 3)
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** `dedup_simhash` — the Q-level form reads the persisted POSTING
-    * store ([[simhashChunkStore]]): the serving plan is a parquet read
-    * + one equi self-join + the exact-hamming filter — no text scan,
-    * no vote aggregate, no cardinality probe. */
+  /** SimHash near-dup pairs over an arbitrary documents frame (no
+    * store), blocked by the lazy adaptive probe. */
+  private[graft] def simhashPairsOn(docs: DataFrame): DataFrame =
+    hammingPairsOf(adaptiveChunksOf(simhashesOn(docs), "simhash", docs),
+      "simhash")
+
+  /** `dedup_simhash` — the Q-level form reads the persisted hash store
+    * ([[simhashIndex]]): the serving plan is a parquet read of 8-byte
+    * hashes, the key projection, one equi self-join and the
+    * exact-hamming filter — no text scan, no vote aggregate, no
+    * cardinality probe. */
   val dedupSimhash: Q = (spark, dir) =>
-    simhashPairsOfChunks(simhashChunksStored(spark, dir))
+    hammingPairsOf(simhashIndex(spark, dir).keyed, "simhash")
 
   /** `dedup_simhash_incremental`: incremental ingest for the hamming
     * family (round-12 judge item — the [[dedupIncrementalNear]] shape
     * applied verbatim to simhash): the ingest batch's pigeonhole
-    * postings are assigned against the EXISTING corpus's posting store
-    * plus the in-batch postings; candidates are exact-hamming verified;
+    * postings are assigned against the EXISTING corpus's postings plus
+    * the in-batch postings; candidates are exact-hamming verified;
     * output is every admission-blocking near-dup match
     * (doc_id [incoming], match_id, match_src 'corpus'|'batch',
     * hamming ≤ 3), in-batch matches pointing the LATER doc at the
-    * earlier one. At 100 TB the existing side is the maintained
-    * posting store (appended each ingest, never re-derived — literal
-    * here via [[simhashChunkStore]]: the batch/existing split is a
-    * filter on the loaded postings, pushed to the parquet scan), the
-    * batch side is small, and the join is equi on the pigeonhole keys
-    * with candidates bounded by the blocking scheme. FULLY oracled:
-    * the DuckDB replay derives simhashes from the same md5 shingle
-    * votes and blocks at level 1 — level-invisible by the exact-recall
-    * superset + hamming-filter argument the full query already relies
-    * on. */
+    * earlier one. Both sides read the maintained hash store
+    * ([[simhashIndex]]): the existing side is a filter on the loaded
+    * hashes, pushed to the parquet scan, and the batch side is the
+    * store's own O(batch) delta; the join is equi on the pigeonhole
+    * keys with candidates bounded by the blocking scheme. FULLY
+    * oracled: the DuckDB replay derives simhashes from the same md5
+    * shingle votes and blocks at level 1 — level-invisible by the
+    * exact-recall superset + hamming-filter argument the full query
+    * already relies on. */
   val dedupSimhashIncremental: Q = (spark, dir) => {
-    // probe side from the chunk store's OWN delta dir (round-17):
-    // only the existing-corpus side still scans the chain — that read
-    // IS the index probe; the batch side is an O(batch) delta read.
-    // The split comes from [[simhashChunksSplit]] so the batch side is
-    // only a delta-dir read when the chain itself was store-served
-    // (r17 advice: a stale delta against a fresh adaptive frame would
-    // mix pigeonhole levels).
-    val (exC, inC) = simhashChunksSplit(spark, dir)
+    val (exC, inC) = simhashIndex(spark, dir).split
     incrementalHammingOfChunks(exC, inC, "simhash")
   }
-
-  /** Core of [[dedupSimhashIncremental]] over an explicit posting
-    * frame. */
-  private[graft] def incrementalSimhashOfChunks(chunks: DataFrame): DataFrame =
-    incrementalHammingOfChunks(chunks, "simhash")
 
   /** Incremental hamming-family admission over ANY pigeonhole posting
     * frame (doc_id, `hashCol`, chunk_idx, chunk_val) — shared by
@@ -1448,7 +1358,8 @@ object DedupQueries {
 
   /** [[incrementalHammingOfChunks]] with the existing/batch split
     * supplied by the caller — the form store-served consumers use to
-    * read the batch side from the chain's own delta dir. */
+    * read the batch side from the store's own delta dir
+    * ([[HammingIndex.split]]). */
   private[graft] def incrementalHammingOfChunks(exC: DataFrame,
       inC: BatchSide, hashCol: String): DataFrame =
     hammingMatchesOf(exC, inC, hashCol)
@@ -1496,13 +1407,14 @@ object DedupQueries {
     * — the spec form (plants a cross-batch near-dup, an in-batch near
     * pair, and an unrelated incoming hash). */
   private[graft] def incrementalSimhashOfHashes(hashes: DataFrame): DataFrame =
-    incrementalSimhashOfChunks(adaptiveChunksOf(hashes, "simhash", hashes))
+    incrementalHammingOfChunks(adaptiveChunksOf(hashes, "simhash", hashes),
+      "simhash")
 
   /** [[dedupSimhashIncremental]] over an arbitrary documents frame (no
     * store) — text-deriving spec form. */
   private[graft] def incrementalSimhashOn(docs: DataFrame): DataFrame =
-    incrementalSimhashOfChunks(
-      adaptiveChunksOf(simhashesOn(docs), "simhash", docs))
+    incrementalHammingOfChunks(
+      adaptiveChunksOf(simhashesOn(docs), "simhash", docs), "simhash")
 
   /** Connected components over the near-dup pair graph → canonical
     * keeper per duplicate group (the step that turns pairwise dedup
@@ -1851,9 +1763,14 @@ object DedupQueries {
     // ≤ graph-diameter rounds; the cap is a runaway guard that FAILS
     // rather than silently returning non-converged components.
     val maxIters = 1000
-    var prevSum = -1L
+    // Σ labels as decimal(38,0): a long sum of doc-id labels overflows
+    // under ANSI once ids reach 2^62, and decimal(38,0) holds the sum
+    // of ~10^19 such ids
+    def labelSum(l: DataFrame): java.math.BigDecimal =
+      l.agg(sum(col("comp").cast("decimal(38,0)"))).head.getDecimal(0)
+    var prevSum: java.math.BigDecimal = null
     var iter = 0
-    var sum0 = labels.agg(sum(col("comp"))).head.getLong(0)
+    var sum0 = labelSum(labels)
     while (sum0 != prevSum && iter < maxIters) {
       prevSum = sum0
       val viaNeighbors = edges.join(labels, edges("src") === labels("doc"))
@@ -1862,7 +1779,7 @@ object DedupQueries {
         .unionAll(viaNeighbors)
         .groupBy(col("doc")).agg(min(col("comp")).as("comp"))
         .cache()
-      sum0 = updated.agg(sum(col("comp"))).head.getLong(0) // materializes updated
+      sum0 = labelSum(updated) // materializes updated
       labels.unpersist() // previous round's blocks are now dead
       labels = updated
       iter += 1

@@ -184,9 +184,10 @@ object MultimodalQueries extends Serializable {
     * points the decoder's 32×32 luma output at the same expression.
     *
     * Pigeonhole blocking: the round-9 TWO-LEVEL scheme
-    * ([[graft.operators.DedupQueries.twoLevelKeys]] — hamming ≤ 3 ⇒
-    * some 15-bit chunk exact AND some sub-chunk of its complement
-    * exact), candidates from an EQUI-join on (chunk_idx, chunk_val),
+    * ([[graft.operators.DedupQueries.pigeonholeKeys]] at level 2 —
+    * hamming ≤ 3 ⇒ some 15-bit chunk exact AND some sub-chunk of its
+    * complement exact; deeper levels as the corpus grows), candidates
+    * from an EQUI-join on (chunk_idx, chunk_val),
     * exact hamming on candidates only. The final pair set is identical
     * to single-level blocking (both are exact-recall supersets filtered
     * by true hamming — the oracle replays the simpler single-level form
@@ -209,12 +210,13 @@ object MultimodalQueries extends Serializable {
     * pairs at sf0.1 (verified non-trivially: the integer DCT, median
     * threshold, and blocking all replay bit-for-bit in DuckDB). */
   val mmDedupPhash: Q = (spark, dir) =>
-    phashPairsOfChunks(phashChunksStored(spark, dir))
+    graft.operators.DedupQueries.hammingPairsOf(phashIndex(spark, dir).keyed,
+      "phash")
 
   /** Core of [[mmDedupPhash]] over any frame with (doc_id, data) —
     * exposed so specs can plant noisy/unrelated blob pairs. */
   private[graft] def mmDedupPhashOn(media: DataFrame): DataFrame =
-    phashPairsOfChunks(phashChunksOn(media))
+    graft.operators.DedupQueries.hammingPairsOf(phashChunksOn(media), "phash")
 
   /** `mm_dedup_phash_incremental`: incremental ingest admission for the
     * IMAGE hamming family — completes the incremental roster
@@ -223,31 +225,28 @@ object MultimodalQueries extends Serializable {
     * recomputing per corpus version). The ingest batch's blobs are
     * hashed ALONE (appended to the [[phashStorePath]] artifact as a
     * fingerprint-chained delta — no base blob is ever re-decoded), the
-    * batch's pigeonhole postings probe the existing corpus's persisted
-    * postings plus the in-batch postings, and candidates are
-    * exact-hamming verified: (doc_id [incoming], match_id, match_src
-    * 'corpus'|'batch', hamming ≤ 3), in-batch matches pointing the
-    * LATER doc at the earlier one. At 100 TB this is the admission
+    * batch's pigeonhole postings — keyed off that delta, the O(batch)
+    * read — probe the existing corpus's postings plus the in-batch
+    * postings, and candidates are exact-hamming verified: (doc_id
+    * [incoming], match_id, match_src 'corpus'|'batch', hamming ≤ 3),
+    * in-batch matches pointing the LATER doc at the earlier one. At
+    * 100 TB this is the admission
     * check an image-ingest pipeline runs per batch: the expensive
     * decode+DCT touches only new blobs, the existing side is an 8-byte-
-    * per-image posting read, and the join is equi on pigeonhole keys.
+    * per-image hash read, and the join is equi on pigeonhole keys.
     * FULLY oracled: the mm_dedup_phash integer-DCT replay composed with
     * the mod-5 base/batch split — level-invisible by the same
     * exact-recall superset + hamming-filter argument. */
-  val mmDedupPhashIncremental: Q = (spark, dir) =>
-    graft.operators.DedupQueries.incrementalHammingOfChunks(
-      phashChunksStored(spark, dir), "phash")
+  val mmDedupPhashIncremental: Q = (spark, dir) => {
+    val (exC, inC) = phashIndex(spark, dir).split
+    graft.operators.DedupQueries.incrementalHammingOfChunks(exC, inC, "phash")
+  }
 
   /** [[mmDedupPhashIncremental]] over an explicit (doc_id, data) frame
     * (no store) — the planted-fixture spec form. */
   private[graft] def incrementalPhashOn(media: DataFrame): DataFrame =
     graft.operators.DedupQueries.incrementalHammingOfChunks(
       phashChunksOn(media), "phash")
-
-  private[graft] def phashPairsOfChunks(chunks: DataFrame): DataFrame =
-    phashCandidatesOfChunks(chunks)
-      .where(col("hamming") <= 3)
-      .orderBy(col("doc_a"), col("doc_b"))
 
   /** (doc_id, phash) of every non-empty blob — the expensive
     * scan-stage collapse of each blob to 8 bytes. */
@@ -268,17 +267,12 @@ object MultimodalQueries extends Serializable {
     * roster): the existing corpus's (doc_id, phash) rows are an
     * artifact read; an ingest batch's blobs are hashed ALONE and
     * appended as a fingerprint-chained delta — no base blob is ever
-    * re-decoded. The pigeonhole LEVEL comes from the store's row-count
-    * metadata, so the serving plan emits fixed-level keys with no
-    * cardinality probe (the hash is row-local and key construction is
-    * level-pure, so stored ≡ fresh row-for-row at any single level —
-    * and the level is fixed per corpus fingerprint). Falls back to the
-    * lazy adaptive probe (counted over the pre-filter media frame, the
-    * population the round-10 switch measured) when the cache is off or
-    * the source is unfingerprintable — final pairs identical either
-    * way. */
-  private[graft] def phashChunksStored(spark: SparkSession,
-      dir: String): DataFrame = {
+    * re-decoded. The pigeonhole keys are derived at read time by
+    * [[graft.operators.DedupQueries.HammingIndex]]; its storeless
+    * fallback probe counts the pre-filter media frame, the population
+    * the round-10 switch measured. */
+  private[graft] def phashIndex(spark: SparkSession,
+      dir: String): graft.operators.DedupQueries.HammingIndex = {
     val D = graft.operators.DedupQueries
     val media = mediaTable(spark, dir)
     val path = phashStorePath(dir)
@@ -286,11 +280,7 @@ object MultimodalQueries extends Serializable {
       D.IngestBatchTag)(
       phashesOn(media.where(!D.isIngestBatch)))(
       phashesOn(media.where(D.isIngestBatch)))
-    graft.ArtifactStore.storedRowCount(path) match {
-      case Some(n) =>
-        D.chunksAtLevel(hashes, "phash", D.pigeonholeLevelsFor(n))
-      case None => D.adaptiveChunksOf(hashes, "phash", media)
-    }
+    new D.HammingIndex(spark, path, hashes, "phash", media)
   }
 
   /** Fixed-level chunks for a corpus of known size — the scale
@@ -321,20 +311,6 @@ object MultimodalQueries extends Serializable {
   private[graft] def phashChunksOn(media: DataFrame): DataFrame =
     graft.operators.DedupQueries.adaptiveChunksOf(
       phashesOn(media), "phash", media)
-
-  /** pHash candidate pairs (distinct, pre-hamming-filter) — the scale
-    * rehearsal's measured frame for this family. */
-  private[graft] def phashCandidatesOfChunks(chunks: DataFrame): DataFrame =
-    chunks.as("a").join(chunks.as("b"),
-        graft.operators.DedupQueries.fusedChunkKey("a") ===
-          graft.operators.DedupQueries.fusedChunkKey("b") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.phash").bitwiseXOR(col("b.phash"))).as("hamming"))
-      .distinct()
-
-  private[graft] def phashCandidatesOn(media: DataFrame): DataFrame =
-    phashCandidatesOfChunks(phashChunksOn(media))
 
   /** Hex image of the planted 29-byte PNG stream for `doc_id`'s
     * synthetic image: 8-byte signature, IHDR length 13, "IHDR",

@@ -487,33 +487,21 @@ object EventStreams {
     * arriving doc is signed IN-FLIGHT with a ROW-LOCAL simhash fold
     * ([[graft.operators.DedupQueries.simhashArrayCol]] — an append
     * stream cannot run the batch per-bit vote aggregate, a per-row
-    * array fold it can), its pigeonhole chunk keys are constructed at
-    * `level` — a PLAN-TIME constant the caller reads from the static
-    * posting store's row-count metadata
-    * ([[graft.operators.DedupQueries.pigeonholeLevelsFor]]), the same
-    * source the batch serving path uses — and probe the STATIC
-    * simhash_chunks posting-store artifact; candidates verify with
-    * exact hamming ≤ 3. Every join is stream-static and STATELESS:
-    * nothing buffers, each micro-batch probes the store and emits its
-    * matches. Emits one row per (doc_id, match_id, hamming) chunk
-    * hit; compose with `dropDuplicatesWithinWatermark` to collapse
-    * multi-chunk hits, exactly as the minhash dual composes per-band
-    * hits. `corpusChunks` MUST be built at exactly `level`: the three
-    * levels emit mutually INCOMPATIBLE (chunk_idx, chunk_val) schemes
-    * (different idx ranges and chunk-value bit widths), so probing a
-    * store built at another level silently drops even hamming-0
-    * duplicates — it is NOT a recall-safe mismatch. That is why the
-    * level parameter must come from the SAME store the probe reads
-    * (its row-count metadata via
-    * [[graft.operators.DedupQueries.pigeonholeLevelsFor]] — the
-    * batch serving path's source), never from a count the stream job
-    * remembers across restarts; if the corpus crossed a level
-    * boundary while the stream was down, the store was rebuilt at the
-    * new level and the restarted stream must re-read the level with
-    * it. StreamMlSpec pins stream matches ≡ the batch
-    * incremental operator's corpus matches and the row-local simhash
-    * ≡ the batch vote aggregate, doc for doc. */
-  def simhashStreamAppend(docs: DataFrame, corpusChunks: DataFrame,
+    * array fold it can), and its pigeonhole keys probe the STATIC
+    * corpus hashes `corpusHashes` (doc_id, simhash) — the simhash hash
+    * store. Both sides are keyed HERE at `level`, so they always share
+    * one key scheme; any level is exact-recall, and callers pick it
+    * with [[graft.operators.DedupQueries.pigeonholeLevelsFor]] of the
+    * corpus size only to bound candidate volume. Candidates verify
+    * with exact hamming ≤ 3. Every join is stream-static and
+    * STATELESS: nothing buffers, each micro-batch probes the corpus
+    * and emits its matches. Emits one row per (doc_id, match_id,
+    * hamming) chunk hit; compose with `dropDuplicatesWithinWatermark`
+    * to collapse multi-chunk hits, exactly as the minhash dual
+    * composes per-band hits. StreamMlSpec pins stream matches ≡ the
+    * batch incremental operator's corpus matches and the row-local
+    * simhash ≡ the batch vote aggregate, doc for doc. */
+  def simhashStreamAppend(docs: DataFrame, corpusHashes: DataFrame,
       level: Int): DataFrame = {
     import graft.operators.{DedupQueries => D}
     val signed = docs
@@ -529,8 +517,9 @@ object EventStreams {
     // over the corpus index as the batch probe did — LongHashedRelation
     // via the injective fusion, identical matches
     D.chunksAtLevel(signed, "simhash", level).as("a")
-      .join(corpusChunks.select(col("chunk_idx"), col("chunk_val"),
-        col("doc_id").as("match_id"), col("simhash").as("match_simhash"))
+      .join(D.chunksAtLevel(corpusHashes, "simhash", level)
+        .select(col("chunk_idx"), col("chunk_val"),
+          col("doc_id").as("match_id"), col("simhash").as("match_simhash"))
         .as("b"),
         D.fusedChunkKey("a") === D.fusedChunkKey("b"))
       .select(col("a.doc_id").as("doc_id"), col("match_id"),
@@ -742,12 +731,11 @@ object EventStreams {
     * hits. In-stream (batch-internal) matches are the batch operator's
     * in-batch term, exactly as in every other dual.
     *
-    * `corpusSigs` MUST be built at exactly `bits` (the simhash dual's
-    * level rule, same reasoning): signature widths emit mutually
-    * INCOMPATIBLE sig values — a bits-b signature is the low bits of
-    * no other width — so probing a store built at another width
-    * silently drops even identical vectors; it is NOT a recall-safe
-    * mismatch. `bits` must therefore come from the SAME store the
+    * `corpusSigs` MUST be built at exactly `bits`: signature widths
+    * emit mutually INCOMPATIBLE sig values — a bits-b signature is the
+    * low bits of no other width — so probing a store built at another
+    * width silently drops even identical vectors; it is NOT a
+    * recall-safe mismatch. `bits` must therefore come from the SAME store the
     * probe reads — its row-count metadata via
     * `sigBitsFor(storedRowCount / DedupTables)`, the invariant
     * [[graft.operators.SimilarityQueries.embSigsMaintainedAppend]]
@@ -816,9 +804,8 @@ object EventStreams {
     *    chain (including the ngram_df crossing check — a batch that
     *    pushes a shingle over the cap REBUILDS the chain under the
     *    stream writer, exactly as in batch ingest), the simhash
-    *    pigeonhole chunks (level from shingle-store metadata), and
-    *    the embedding signatures (vectors ride the corpus's
-    *    embeddings table, not this document stream).
+    *    hashes, and the embedding signatures (vectors ride the
+    *    corpus's embeddings table, not this document stream).
     *
     * The four row-local stores' BASE artifacts must exist before the
     * stream starts (the initial index build — the store contract's
@@ -921,7 +908,7 @@ object EventStreams {
     * over the posting store (tiny by construction: ≤ |postings|/cap
     * keys; a bounded catalog read, the codebook convention) — and
     * `corpusFiltered`/`corpusArrays` MUST be filtered at exactly that
-    * set (the simhash level / embedding width rule, same reasoning):
+    * set (the embedding width rule, same reasoning):
     * an ingest that pushes a shingle over the cap REBUILDS the
     * filtered store (the maintained-append dichotomy), and the
     * restarted stream must re-read the hot set with it — never carry

@@ -580,6 +580,22 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     assert(!plan.contains("Join"),
       "totals must ride the bucket window, not a self-join:\n" +
         plan.take(600))
+    // negative values clamp into bucket 0: twenty negative $60k buckets
+    // of their own would overrun the 16-row identity limit and drop
+    // rows silently. Eras become 14 vs 14: early bucket 0 = 2 + 10,
+    // late bucket 0 = 1 + 10.
+    val withNeg = obs.unionByName((1 to 20)
+      .map(i => (-i * 60000.0 - 1000.0, i % 2 == 0)).toDF("value", "early"))
+    def share14(n: Long) = (n + 1.0) / (14.0 + 10.0)
+    def term14(ne: Long, nl: Long) =
+      r6((share14(ne) - share14(nl)) * math.log(share14(ne) / share14(nl)))
+    val neg = operators.AggQueries.driftPsiOn(withNeg.repartition(4))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toList
+    assert(neg == List(
+      (0, 12L, 11L, term14(12, 11)),
+      (1, 1L, 2L, term14(1, 2)),
+      (2, 1L, 1L, 0.0)), neg.toString)
   }
 
   test("Markov transitions: a hand-countable chain with an equal-" +
@@ -703,6 +719,17 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     val g0 = operators.AggQueries.ksTestOn(same)
       .collect().map(r => r.getDouble(2)).head
     assert(g0 == 0.0, s"identical eras must give D = 0, got $g0")
+    // negative values clamp into bucket 0: 150 early and 150 late
+    // values in 300 distinct negative $6k buckets would overrun the
+    // 128-row identity limit and drop rows silently. Eras become 154
+    // vs 154; CDFs early 152,153,154 / late 151,151,154 → D = 2/154.
+    val withNeg = obs.unionByName((1 to 300)
+      .map(i => (-i * 6000.0 - 1.0, i <= 150)).toDF("value", "early"))
+    val neg = operators.AggQueries.ksTestOn(withNeg.repartition(4))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .head
+    assert(neg == (154L, 154L, math.abs(153.0 / 154.0 - 151.0 / 154.0)),
+      neg.toString)
   }
 
   test("inter-arrival: hand-spaced gaps aggregate exactly, an equal-" +

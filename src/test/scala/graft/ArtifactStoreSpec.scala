@@ -625,8 +625,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
       "documents.parquet", "w3")
     val bandBase = ArtifactStore.pathFor("minhash_bands", sf,
       "documents.parquet", "h64b16")
-    val chunkBase = ArtifactStore.pathFor("simhash_chunks", sf,
-      "documents.parquet", "v1")
+    val chunkBase = D.simhashChunkStorePath(sf)
     Seq(shBase, ArtifactStore.childPathFor(shBase, D.IngestBatchTag),
       bandBase, ArtifactStore.childPathFor(bandBase, D.IngestBatchTag),
       chunkBase, ArtifactStore.childPathFor(chunkBase, D.IngestBatchTag))
@@ -662,6 +661,15 @@ class ArtifactStoreSpec extends AnyFunSuite {
     assert(simStore == simFresh, "simhash pairs differ through the store")
     assert(new java.io.File(s"$chunkBase/_GRAFT_OK").exists,
       "simhash posting store not persisted")
+    // the store holds the level-free hashes: one (doc_id, simhash) row
+    // per shingled document, no pigeonhole key columns
+    val simStored = D.simhashChunkStore(spark, sf)
+    assert(simStored.columns.toSeq == Seq("doc_id", "simhash"),
+      s"simhash store persists more than the hash: ${simStored.columns.toSeq}")
+    val nShingled = D.shingledMd5On(docs).where(size(col("sh")) >= 1).count()
+    assert(ArtifactStore.storedRowCount(chunkBase).contains(nShingled) &&
+      simStored.select("doc_id").distinct().count() == nShingled,
+      "simhash store must hold exactly one row per document")
     val simLoaded = D.dedupSimhash(spark, sf) // pure posting-store load
     assert(simLoaded.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       == simFresh, "simhash pairs differ on the load path")

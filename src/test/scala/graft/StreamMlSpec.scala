@@ -570,10 +570,10 @@ class StreamMlSpec extends AnyFunSuite {
     assert(viaFold == viaAgg,
       "row-local simhash fold diverged from the batch vote aggregate")
 
-    val corpusChunks = D.chunksAtLevel(D.simhashesOn(existing), "simhash", 2)
+    val corpusHashes = D.simhashesOn(existing)
     val src = MemoryStream[(Long, String)]
     val q = streaming.EventStreams.simhashStreamAppend(
-        src.toDF.toDF("doc_id", "text"), corpusChunks, level = 2)
+        src.toDF.toDF("doc_id", "text"), corpusHashes, level = 2)
       .writeStream.format("memory").queryName("simhash_sink")
       .outputMode("append").start()
     try {
