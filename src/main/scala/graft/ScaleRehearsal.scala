@@ -42,7 +42,8 @@ import org.apache.spark.sql.functions._
   *
   * Writes /tmp/graft_scale/x{k}/{documents,customer}.parquet
   * (re-generated deterministically each run; /root/testdata is never
-  * touched) and emits SCALE10.json + one stdout line.
+  * touched) and emits one stdout line, which an unfiltered run also
+  * writes to SCALE10.json.
   */
 object ScaleRehearsal {
 
@@ -194,8 +195,8 @@ object ScaleRehearsal {
     def scalesFor(fam: String): Seq[Int] =
       if (adaptiveFams(fam)) adaptiveScales else scales
     // SPARK_GRAFT_FAMILIES=f1,f2 filters to named families while
-    // iterating (default: all). Filtered runs still write SCALE10.json
-    // — restore the committed artifact after local iteration.
+    // iterating (default: all). A filtered run only prints its line;
+    // SCALE10.json is written by unfiltered runs alone.
     val famFilter = sys.env.get("SPARK_GRAFT_FAMILIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def famActive(name: String): Boolean = famFilter.forall(_.contains(name))
@@ -1219,8 +1220,9 @@ object ScaleRehearsal {
         s""""base":"$baseDir","cpus":$cpus,"families":{$famJson}""" +
         s"""$incJson$admJson$ovJson$entityHotJson$chainJson$widthJson""" +
         s"""$fpostJson$admitJson$ingJson}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("SCALE10.json"),
-      (line + "\n").getBytes("UTF-8"))
+    if (famFilter.isEmpty)
+      java.nio.file.Files.write(java.nio.file.Paths.get("SCALE10.json"),
+        (line + "\n").getBytes("UTF-8"))
     println(line)
     spark.stop()
   }

@@ -331,23 +331,13 @@ object DedupQueries {
   /** The corpus's HOT (boilerplate) shingle set: shingles whose
     * document frequency over `inv` exceeds the cap. Tiny by
     * construction (≤ |postings| / cap keys), so consumers broadcast
-    * it — or, for the streaming dual, collect it driver-side as a
-    * literal (a bounded catalog read, the codebook convention). */
+    * it. */
   private[graft] def hotShinglesOf(inv: DataFrame,
       cap: Long = NgramDfCap): DataFrame =
     inv.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
       .where(col("df") > cap)
       .select(col("shingle"))
-
-  /** Per-doc FILTERED shingle arrays of a df-filtered posting frame —
-    * the static verify side of the streaming ngram dual: (doc_id, fsh
-    * [surviving shingles], sz_b). sz_b is the store's maintained size
-    * (== size(fsh) by construction). */
-  private[graft] def filteredArraysOf(inv: DataFrame): DataFrame =
-    inv.groupBy(col("doc_id"))
-      .agg(collect_list(col("shingle")).as("fsh"),
-        first(col("sz")).as("sz_b"))
 
   /** Postings with boilerplate shingles removed and per-doc sizes
     * recomputed over the surviving set — the frame EVERY edge consumer
@@ -757,25 +747,6 @@ object DedupQueries {
       shingledMd5On(docs.where(isIngestBatch)))
   }
 
-  /** ROW-LOCAL minhash signature array — the same 64 (a·s+b) mod p
-    * minima as [[minhashSignaturesOn]] computed by a single
-    * `aggregate` HOF traversal of the shingle array, no explode and no
-    * aggregation. This is the STREAMING-SAFE form: an append-mode
-    * stream cannot run the groupBy(doc_id) signature aggregate, but a
-    * per-row fold is just a projection ([[graft.streaming.EventStreams
-    * .incrementalNearStreamAppend]]). Equality with the batch
-    * signatures is spec-pinned (StreamMlSpec). The shingle column is
-    * referenced exactly ONCE (the fold's input) — the generator-
-    * inlining trap cannot multiply the tokenizer/md5 tree. */
-  private[graft] def minhashSigArray(sh: Column): Column =
-    aggregate(sh,
-      array_repeat(lit(Prime), NumHashes),
-      (acc, s) => zip_with(acc,
-        sequence(lit(0L), lit(NumHashes - 1L)),
-        (a, i) => least(a,
-          pmod(pmod(s, lit(Prime)) * (i * 2L + 1L) + (lit(7919L) * i + 1L),
-            lit(Prime)))))
-
   /** 64 minhash values per doc: h_i(s) = (a_i·(s mod p) + b_i) mod p
     * over the replayable shingle hashes, folded over the shingle set
     * (order-independent: min). a_i ≤ 127 × (p−1) ≈ 2.7e11 — no
@@ -917,32 +888,6 @@ object DedupQueries {
       when(col(s"v_$j") * 2 > col("n_sh"), lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
     votes.select(col("doc_id"), simhash.as("simhash"))
-  }
-
-  /** ROW-LOCAL 60-bit simhash — the same per-bit majority vote as
-    * [[simhashesOfShingles]] computed by a single `aggregate` HOF
-    * traversal of the shingle array, no explode and no aggregation.
-    * This is the STREAMING-SAFE form (the [[minhashSigArray]]
-    * precedent): an append-mode stream cannot run the groupBy(doc_id)
-    * vote aggregate, but a per-row fold is just a projection
-    * ([[graft.streaming.EventStreams.simhashStreamAppend]]). Bit
-    * extraction is via power-of-two MASKS zipped against the counter
-    * array — `shiftright` needs a plan-time shift amount, a mask
-    * column does not — and the vote/pack step re-reads the counter
-    * array exactly ONCE (a second zip_with + sum fold), so the fold
-    * tree is never duplicated by CollapseProject. Equality with the
-    * batch vote aggregate is spec-pinned (StreamMlSpec). Caller must
-    * pass a MATERIALIZED shingle column (it is referenced twice: the
-    * fold input and the majority denominator). */
-  private[graft] def simhashArrayCol(sh: Column): Column = {
-    val masks = array((0 until SimBits).map(j => lit(1L << j)): _*)
-    val counts = aggregate(sh, array_repeat(lit(0L), SimBits),
-      (acc, h) => zip_with(acc, masks,
-        (a, m) => a + when(h.bitwiseAND(m) =!= 0L, lit(1L))
-          .otherwise(lit(0L))))
-    val votes = zip_with(counts, masks,
-      (c, m) => when(c * lit(2L) > size(sh), m).otherwise(lit(0L)))
-    aggregate(votes, lit(0L), (acc, v) => acc + v)
   }
 
   /** Corpus size above which the pigeonhole blocking engages its THIRD
@@ -2041,10 +1986,10 @@ object DedupQueries {
     * characters: a default or empty name replicated corpus-wide) whose
     * pair expansion is O(B²) rows of an already-known fact, landing on
     * one hash partition. Hot blocks are EXCLUDED from candidate
-    * generation in all three family forms (full, incremental,
-    * streaming), and the DuckDB oracle replays the same rule — the
-    * contract change is in the intended direction (a 10⁶-member name
-    * block is reported as hot, not pair-expanded into 5·10¹¹ rows).
+    * generation in both family forms (full, incremental), and the
+    * DuckDB oracle replays the same rule — the contract change is in
+    * the intended direction (a 10⁶-member name block is reported as
+    * hot, not pair-expanded into 5·10¹¹ rows).
     * Value matches [[NgramDfCap]]/[[SpanDfCap]]; the digit-suffix
     * blocking bounds real test-SF blocks at 10² ≤ cap, so every
     * test-SF result is numerically unchanged — only the planted
@@ -2234,8 +2179,8 @@ object DedupQueries {
     // full corpus-shingle EXCHANGE (40M+ rows at ×100, on every probe)
     // that recomputed what sort_array(sh)/size(sh) compute per row with
     // no shuffle at all. Row-identical: collect_list over one doc's
-    // exploded elements is that doc's own multiset (the streaming
-    // containment dual has always used this equivalence, spec-pinned);
+    // exploded elements is that doc's own multiset (AnalyticsOpsSpec's
+    // containment tests pin the exact n_common/containment values);
     // the one divergence — explode EMITS NOTHING for an empty array,
     // dropping <k-token docs from the aggregate — is preserved by the
     // size filter; the count(*) → size() type change is cast back to
@@ -2363,9 +2308,9 @@ object DedupQueries {
     * ⌊(1−t)·sz⌋+1 computed as sz − ⌈t·sz⌉ + 1 = sz − (sz·4+4) div 5
     * + 1, floored at 1, over the named size column. Every consumer
     * (the full query's candidates, the admission candidates, the sup
-    * probe, the streaming dual, and the scale rehearsal's uncapped
-    * reference) derives it HERE, so the t = 4/5 integer-math
-    * assumption is asserted exactly once. */
+    * probe, and the scale rehearsal's uncapped reference) derives it
+    * HERE, so the t = 4/5 integer-math assumption is asserted exactly
+    * once. */
   private[graft] def containPrefixLen(szCol: String): Column = {
     require(ContainT == 0.8, "integer prefix math assumes t = 4/5")
     greatest(col(szCol) - expr(s"($szCol * 4 + 4) div 5") + lit(1L),

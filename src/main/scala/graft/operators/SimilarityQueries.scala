@@ -390,9 +390,9 @@ object SimilarityQueries {
     * calibrated to this fixture's top-similarity tail (the synthetic
     * corpus has no true duplicate vectors — max cosine ≈ 0.47); a
     * production corpus runs the same plan at ≥ 0.95 where per-bit
-    * agreement ≈ 0.9 keeps recall ≈ 1. Shared by the full query, the
-    * incremental admission, and the streaming dual; the DuckDB oracles
-    * carry the same literal. */
+    * agreement ≈ 0.9 keeps recall ≈ 1. Shared by the full query and
+    * the incremental admission; the DuckDB oracles carry the same
+    * literal. */
   val EmbDupTau = 0.3
 
   /** Signature width for a corpus of `n` vectors: ceil(log₂(n)/2),

@@ -15,7 +15,11 @@ import org.apache.spark.sql.types._
   * Batch and stream share the SAME aggregation logic: the batch
   * queries below are the oracle-checked semantics; [[tumblingStream]]
   * runs the identical plan incrementally with a watermark
-  * (EventStreamsSpec asserts batch ≡ stream on the same input).
+  * (StreamMlSpec asserts batch ≡ stream on the same input).
+  *
+  * Streaming admission has one path: `foreachBatch` over
+  * [[ingestAdmissionBatch]], which lands each micro-batch in the
+  * artifact stores; the batch admission queries then read them.
   */
 object EventStreams {
 
@@ -386,411 +390,15 @@ object EventStreams {
       .withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Streaming form of [[graft.operators.DedupQueries.dedupIncremental]]:
-    * admit only documents whose content digest is NOT in the existing
-    * corpus — a stream-static LEFT ANTI join (the static digest store
-    * re-resolves per micro-batch, so a store appended between batches
-    * is honored without restart). Composes with
-    * `dropDuplicatesWithinWatermark` upstream for in-stream repeats;
-    * the anti join itself is STATELESS (nothing buffers — each batch
-    * probes the store and passes novel rows through). At 100 TB the
-    * static side is the bucketed digest store, exactly as in the batch
-    * form; only digests are compared, the document payload rides
-    * through untouched. StreamMlSpec plants known-vs-novel digests and
-    * asserts only novel ones emerge. */
-  def incrementalDedupStreamAppend(docs: DataFrame,
-      existingDigests: DataFrame): DataFrame =
-    docs
-      .withColumn("text_hash", md5(col("text")))
-      .join(existingDigests, Seq("text_hash"), "left_anti")
-
-  /** Streaming corpus-clean admission — the stream form of
-    * `pipe_corpus_clean_incremental`'s STATELESS stages: each arriving
-    * doc gets ONE verdict row (doc_id, exact_ok, lang_ok, qual_ok, 0/1
-    * ints matching the batch funnel's encoding) from row-local scoring
-    * plus a stream-static left join against the corpus's distinct
-    * digest set (1:1 after distinct, so the stream stays append-mode
-    * stateless — an anti join would FILTER admitted docs, a left join
-    * REPORTS the verdict, which is what an admission log wants). The
-    * near-dup stage is deliberately not folded in: its band probe is
-    * multi-row per doc and re-aggregating per doc would force stateful
-    * aggregation — compose this stream with
-    * [[incrementalNearStreamAppend]] (its matches BLOCK the docs they
-    * name) and `dropDuplicatesWithinWatermark` for in-stream repeats,
-    * exactly as the batch funnel composes its stages. StreamMlSpec
-    * pins stream verdicts ≡ the batch funnel's per-doc flags on a
-    * planted fixture. */
-  def corpusCleanStreamAppend(docs: DataFrame,
-      existingDigests: DataFrame): DataFrame = {
-    import graft.operators.{TextQueries => T}
-    val t = graft.functions.TextFunctions.tokens(col("text"))
-    def asInt(c: org.apache.spark.sql.Column) = when(c, 1).otherwise(0)
-    docs.select(col("doc_id"), md5(col("text")).as("text_hash"),
-        (T.predictedLangCol(t) === col("lang")).as("l_ok"),
-        (T.qualityScoreCol(col("text"), t) >= 0.5).as("q_ok"))
-      .join(existingDigests.select(col("text_hash")).distinct()
-        .withColumn("__hit", lit(1)), Seq("text_hash"), "left")
-      .select(col("doc_id"),
-        asInt(col("__hit").isNull).as("exact_ok"),
-        asInt(col("l_ok")).as("lang_ok"),
-        asInt(col("q_ok")).as("qual_ok"))
-  }
-
-  /** Streaming NEAR-dup admission — the stream form of
-    * `dedup_incremental_near`, the sibling of
-    * [[incrementalDedupStreamAppend]]'s digest anti-join: each
-    * arriving doc is SIGNED IN-FLIGHT (row-local minhash fold,
-    * [[graft.operators.DedupQueries.minhashSigArray]] — an append
-    * stream cannot run the batch groupBy signature aggregate, a
-    * per-row projection it can), its band keys probe the STATIC
-    * corpus band-posting store (the [[graft.ArtifactStore]] table
-    * dedup_minhash_lsh maintains), and matches verify with exact
-    * Jaccard against the static shingle store — every join
-    * stream-static and STATELESS, nothing buffers. Emits one row per
-    * (doc_id, match_id, jaccard ≥ 0.5) band hit; compose with
-    * `dropDuplicatesWithinWatermark` to collapse multi-band hits,
-    * exactly as the digest form composes for in-stream repeats.
-    * StreamMlSpec pins: stream matches ≡ the batch operator's corpus
-    * matches on a planted near-dup batch, and the row-local
-    * signatures ≡ the batch aggregate's. */
-  def incrementalNearStreamAppend(docs: DataFrame, corpusBands: DataFrame,
-      corpusShingles: DataFrame): DataFrame = {
-    import graft.operators.{DedupQueries => D}
-    val signed = docs
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.tokens(col("text")).as("w"))
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.shingleHashesMd5(col("w")).as("sh"))
-      .where(size(col("sh")) >= 1)
-      .withColumn("sigs", D.minhashSigArray(col("sh")))
-    val bandStructs = array((0 until D.Bands).map { bnd =>
-      struct(lit(bnd).as("band"),
-        concat_ws("_", (0 until D.Rows).map(r =>
-          element_at(col("sigs"), bnd * D.Rows + r + 1).cast("string")): _*)
-          .as("key"))
-    }: _*)
-    signed
-      .select(col("doc_id"), col("sh"), explode(bandStructs).as("bk"))
-      .select(col("doc_id"), col("sh"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-      .join(corpusBands.select(col("band"), col("key"),
-        col("doc_id").as("match_id")), Seq("band", "key"))
-      .join(corpusShingles.select(col("doc_id").as("match_id"),
-        col("sh").as("match_sh")), Seq("match_id"))
-      .select(col("doc_id"), col("match_id"),
-        D.jaccard(col("sh"), col("match_sh")).as("jaccard"))
-      .where(col("jaccard") >= 0.5)
-  }
-
-  /** Streaming SIMHASH near-dup admission — the hamming-family dual of
-    * [[incrementalNearStreamAppend]] (round-13 judge item): each
-    * arriving doc is signed IN-FLIGHT with a ROW-LOCAL simhash fold
-    * ([[graft.operators.DedupQueries.simhashArrayCol]] — an append
-    * stream cannot run the batch per-bit vote aggregate, a per-row
-    * array fold it can), and its pigeonhole keys probe the STATIC
-    * corpus hashes `corpusHashes` (doc_id, simhash) — the simhash hash
-    * store. Both sides are keyed HERE at `level`, so they always share
-    * one key scheme; any level is exact-recall, and callers pick it
-    * with [[graft.operators.DedupQueries.pigeonholeLevelsFor]] of the
-    * corpus size only to bound candidate volume. Candidates verify
-    * with exact hamming ≤ 3. Every join is stream-static and
-    * STATELESS: nothing buffers, each micro-batch probes the corpus
-    * and emits its matches. Emits one row per (doc_id, match_id,
-    * hamming) chunk hit; compose with `dropDuplicatesWithinWatermark`
-    * to collapse multi-chunk hits, exactly as the minhash dual
-    * composes per-band hits. StreamMlSpec pins stream matches ≡ the
-    * batch incremental operator's corpus matches and the row-local
-    * simhash ≡ the batch vote aggregate, doc for doc. */
-  def simhashStreamAppend(docs: DataFrame, corpusHashes: DataFrame,
-      level: Int): DataFrame = {
-    import graft.operators.{DedupQueries => D}
-    val signed = docs
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.tokens(col("text")).as("w"))
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.shingleHashesMd5(col("w")).as("sh"))
-      .where(size(col("sh")) >= 1)
-      .select(col("doc_id"), D.simhashArrayCol(col("sh")).as("simhash"))
-    // single fused LONG join key (see
-    // [[graft.operators.DedupQueries.fusedChunkKey]]): the stream-
-    // static probe pays the same per-row UnsafeHashedRelation cost
-    // over the corpus index as the batch probe did — LongHashedRelation
-    // via the injective fusion, identical matches
-    D.chunksAtLevel(signed, "simhash", level).as("a")
-      .join(D.chunksAtLevel(corpusHashes, "simhash", level)
-        .select(col("chunk_idx"), col("chunk_val"),
-          col("doc_id").as("match_id"), col("simhash").as("match_simhash"))
-        .as("b"),
-        D.fusedChunkKey("a") === D.fusedChunkKey("b"))
-      .select(col("a.doc_id").as("doc_id"), col("match_id"),
-        col("a.simhash").as("simhash"), col("match_simhash"))
-      .select(col("doc_id"), col("match_id"),
-        bit_count(col("simhash").bitwiseXOR(col("match_simhash")))
-          .as("hamming"))
-      .where(col("hamming") <= 3)
-  }
-
-  /** Streaming CONTAINMENT admission — the asymmetric family's dual,
-    * covering the admission-BLOCKING direction (the arriving doc is a
-    * near-subset of existing content; the superset direction needs a
-    * corpus-side probe and stays a batch/ingest concern): each
-    * arriving doc's sorted md5 hash array is a row-local projection
-    * (`sort_array` of its own shingle multiset ≡ the batch explode →
-    * collect aggregate), its integer-exact ⌊(1−t)|A|⌋+1-hash PREFIX
-    * explodes and probes the STATIC corpus posting index (pigeonhole:
-    * a ≥0.8-contained doc must hit the corpus on one of its prefix
-    * hashes), and candidates verify with the exact intersection
-    * against the static sorted-array table — every join stream-static
-    * and STATELESS. Emits one (doc_id, match_id, containment ≥ 0.8)
-    * row per prefix HIT (a pair sharing several prefix hashes emits
-    * several identical rows — a stream-side distinct would be a
-    * stateful aggregate); compose with
-    * `dropDuplicatesWithinWatermark` to collapse multi-hit pairs and
-    * in-stream repeats, exactly as the minhash dual composes per-band
-    * hits.
-    * StreamMlSpec pins stream matches ≡ the batch admission
-    * operator's corpus/sub matches on planted subset / sub-threshold
-    * docs. */
-  def containmentStreamAppend(docs: DataFrame,
-      corpusSh: DataFrame): DataFrame = {
-    import graft.operators.{DedupQueries => D}
-    val signed = docs
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.tokens(col("text")).as("w"))
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.shingleHashesMd5(col("w")).as("sh"))
-      .where(size(col("sh")) >= 1)
-      .select(col("doc_id"), sort_array(col("sh")).as("hs_a"),
-        size(col("sh")).cast("long").as("sz_a"))
-    val k = D.containPrefixLen("sz_a")
-    val index = corpusSh.select(col("doc_id").as("match_id"),
-      col("sz").as("sz_b"), explode(col("hs")).as("h"))
-    signed
-      .select(col("doc_id"), col("hs_a"), col("sz_a"),
-        explode(slice(col("hs_a"), lit(1), k)).as("h"))
-      .join(index, Seq("h"))
-      .where(col("sz_b").cast("double") >=
-        col("sz_a").cast("double") * lit(D.ContainT))
-      .select(col("doc_id"), col("match_id"), col("hs_a"), col("sz_a"))
-      .join(corpusSh.select(col("doc_id").as("match_id"),
-        col("hs").as("hs_b")), Seq("match_id"))
-      .select(col("doc_id"), col("match_id"),
-        (size(array_intersect(col("hs_a"), col("hs_b"))).cast("double")
-          / col("sz_a").cast("double")).as("containment"))
-      .where(col("containment") >= lit(D.ContainT))
-  }
-
-  /** Streaming SPAN (verbatim-copy) admission — the substring family's
-    * dual, completing the roster's streaming column (round-14 judge
-    * item): each arriving doc's content-defined 64-char anchor hashes
-    * are a ROW-LOCAL projection (the same sequence → md5-window →
-    * h ≡ 0 mod SpanSel selection as
-    * [[graft.operators.DedupQueries.spanAnchorsOn]] — selection
-    * depends on window BYTES only, so it needs no corpus context),
-    * and each anchor probes the STATIC corpus anchor-spread table
-    * (`corpusSpread` = [[graft.operators.DedupQueries.spanSpreadOn]]
-    * over the anchor store, UNFILTERED — the stream classifies) with
-    * a stream-static LEFT join. Emits one VERDICT ROW PER ANCHOR
-    * (doc_id, h, is_dup, is_boiler): a per-doc profile would need a
-    * stateful per-doc aggregate, so — the family convention of the
-    * minhash/simhash/containment duals, which emit per-hit rows —
-    * aggregation composes downstream (a watermarked groupBy(doc_id),
-    * or the batch operator at the next ingest). Verdict rules are the
-    * solo-doc image of the batch profile's: the arriving doc's own
-    * anchor would enter the store with nd = corpus nd + 1, so
-    * dup ⟺ corpus nd ≥ 1 (batch: grown nd > 1) and
-    * boiler ⟺ corpus nd ≥ cap (batch: grown nd > cap) — exactly
-    * equivalent for a doc not yet appended, which StreamMlSpec pins
-    * against `dedup_spans_incremental` on a planted fixture. */
-  def spansStreamAppend(docs: DataFrame, corpusSpread: DataFrame,
-      cap: Long = graft.operators.DedupQueries.SpanDfCap): DataFrame = {
-    import graft.operators.{DedupQueries => D}
-    D.spanAnchorsOn(docs.select(col("doc_id"), col("text"),
-        length(col("text")).cast("long").as("n_chars")))
-      .join(corpusSpread.select(col("h"), col("nd")), Seq("h"), "left")
-      .select(col("doc_id"), col("h"),
-        when(col("nd").isNotNull && col("nd") < cap, 1).otherwise(0)
-          .as("is_dup"),
-        when(col("nd") >= cap, 1).otherwise(0).as("is_boiler"))
-  }
-
-  /** Streaming ENTITY-linkage admission — the structured-record
-    * family's dual (round-14 judge item, the last family without
-    * one): each arriving record's block key is a ROW-LOCAL projection
-    * (name minus its last 2 chars — the same alphabet-bounded
-    * blocking as [[graft.operators.DedupQueries.dedupEntityBlock]]),
-    * it equi-joins the STATIC corpus block index, and the banded
-    * levenshtein (≤ 1) runs on block-mates only — stream-static,
-    * stateless, one row per (custkey, match_id, dist) corpus match;
-    * in-stream duplicates are the batch operator's in-batch term,
-    * exactly as in every other dual. StreamMlSpec pins stream matches
-    * ≡ the batch admission operator's corpus rows on a planted
-    * fixture.
-    *
-    * HOT-BLOCK rule (the SOLO-RECORD image of
-    * [[graft.operators.DedupQueries.EntityBlockCap]], same convention
-    * as [[spansStreamAppend]]'s verdicts): the arriving record's own
-    * row would enter the table with block frequency bf + 1, so the
-    * batch rule "grown bf > cap" reads here as "corpus bf ≥ cap". The
-    * filter lives on the STATIC side (hot corpus blocks are removed
-    * from the probed index before the stream-static join), so a
-    * stream record in a hot block simply finds no partners —
-    * stateless, no stream-side aggregation.
-    *
-    * The solo-record image is an APPROXIMATION, not an equivalence
-    * (r16 advice): per-micro-batch block counts are NOT folded into
-    * the predicate — with N ≥ 2 same-block records in one micro-batch
-    * (or records accumulating across micro-batches against the same
-    * static index), the batch operator's grown frequency is
-    * corpus bf + N, so a block at corpus bf in [cap − N + 1, cap − 1]
-    * is suppressed by the batch form but still matched by the stream.
-    * Folding the batch's own counts in would require a stream-side
-    * aggregation (stateful, update-mode) that this dual deliberately
-    * avoids; the divergence window is ≤ the micro-batch's per-block
-    * multiplicity, closes at the next ingest (the batch operator
-    * re-scores admission against the grown corpus), and is pinned as
-    * a CONTRACT by StreamMlSpec's multi-record fixture alongside the
-    * solo-record equivalence pin. At a foreachBatch ingest point —
-    * where a micro-batch boundary exists and the batch is a plain
-    * DataFrame — use [[entityAdmitBatch]], which folds the batch's own
-    * block counts in and is EXACT (round-19, r17 item 4). */
-  /** BATCH-EXACT entity admission for a foreachBatch INGEST POINT —
-    * the exact form of [[entityStreamAppend]]'s hot-block rule
-    * (round-19, r17 item 4): inside foreachBatch the micro-batch is a
-    * plain DataFrame, so its own per-block counts fold into the hot
-    * predicate at no stateless-streaming cost — a block is hot iff its
-    * GROWN frequency (corpus bf + the batch's own members) exceeds the
-    * cap, exactly [[graft.operators.DedupQueries.incrementalEntityBlockOn]]'s
-    * rule, so ingest-point verdicts are bit-equal to the batch
-    * admission operator's corpus matches (StreamMlSpec pins the N ≥ 2
-    * same-block fixture the append-mode dual's solo-record
-    * approximation diverges on). The append-mode dual keeps the
-    * solo-record rule — BETWEEN ingest points, a continuous stream has
-    * no well-defined batch multiplicity (N would depend on arbitrary
-    * micro-batch boundaries), so the solo-record image is the correct
-    * continuous semantics and this form is the exact one wherever a
-    * micro-batch boundary exists. Same output contract as the
-    * append-mode dual: one (custkey, match_id, dist) row per corpus
-    * match; in-batch matches remain the batch operator's term. */
-  def entityAdmitBatch(records: DataFrame, corpusIndex: DataFrame,
-      cap: Long = graft.operators.DedupQueries.EntityBlockCap): DataFrame = {
-    import graft.operators.{DedupQueries => D}
-    val batchB  = D.entityBlocked(records)
-    val corpusB = D.entityBlocked(corpusIndex)
-    // hot set over the GROWN table — corpus ∪ this micro-batch — the
-    // grown-frequency rule; tiny by construction (≤ n / cap keys)
-    val hot = D.hotEntityBlocksOf(batchB.unionByName(corpusB), cap)
-    batchB.join(broadcast(hot), Seq("blk"), "left_anti")
-      .select(col("blk"), col("c_custkey").as("custkey"),
-        col("c_name").as("na"))
-      .join(corpusB.select(col("blk"), col("c_custkey").as("match_id"),
-        col("c_name").as("nb")), Seq("blk"))
-      .where(col("custkey") =!= col("match_id"))
-      .withColumn("dist", levenshtein(col("na"), col("nb"), 1))
-      .where(col("dist") =!= -1)
-      .select(col("custkey"), col("match_id"), col("dist"))
-  }
-
-  def entityStreamAppend(records: DataFrame, corpusIndex: DataFrame,
-      cap: Long = graft.operators.DedupQueries.EntityBlockCap): DataFrame = {
-    import graft.operators.{DedupQueries => D}
-    val blocked = D.entityBlocked(corpusIndex)
-    val safe = blocked.join(
-      broadcast(blocked.groupBy(col("blk")).agg(count(lit(1)).as("bf"))
-        .where(col("bf") >= cap).select(col("blk"))),
-      Seq("blk"), "left_anti")
-    records
-      .select(col("c_custkey").as("custkey"), col("c_name").as("na"),
-        expr("substring(c_name, 1, length(c_name) - 2)").as("blk"))
-      .join(safe
-        .select(col("c_custkey").as("match_id"), col("c_name").as("nb"),
-          col("blk")),
-        Seq("blk"))
-      .where(col("custkey") =!= col("match_id"))
-      .withColumn("dist", levenshtein(col("na"), col("nb"), 1))
-      .where(col("dist") =!= -1)
-      .select(col("custkey"), col("match_id"), col("dist"))
-  }
-
-  /** Streaming EMBEDDING near-dup admission — the vector-space dual,
-    * completing the streaming column for EVERY near-dup family (exact,
-    * minhash, ngram-via-corpus-clean, simhash, containment, spans,
-    * entity, and now embedding cosine): each arriving vector is signed
-    * IN-FLIGHT against the [[graft.operators.SimilarityQueries]]
-    * hyperplane tables — a ROW-LOCAL projection (each signature is
-    * `bits` dot products against literal weight arrays; no corpus
-    * context) — its ([[graft.operators.SimilarityQueries.DedupTables]]
-    * × (table_id, sig)) postings probe the STATIC emb_sigs posting
-    * store, and candidates verify with exact cosine ≥
-    * [[graft.operators.SimilarityQueries.EmbDupTau]] against the
-    * static vector table. Every join is stream-static and STATELESS.
-    * Emits one (vec_id, match_id, cos_sim) row per TABLE hit (a pair
-    * sharing several table signatures emits several identical rows);
-    * compose with `dropDuplicatesWithinWatermark` to collapse
-    * multi-table hits, exactly as the minhash dual composes per-band
-    * hits. In-stream (batch-internal) matches are the batch operator's
-    * in-batch term, exactly as in every other dual.
-    *
-    * `corpusSigs` MUST be built at exactly `bits`: signature widths
-    * emit mutually INCOMPATIBLE sig values — a bits-b signature is the
-    * low bits of no other width — so probing a store built at another
-    * width silently drops even identical vectors; it is NOT a
-    * recall-safe mismatch. `bits` must therefore come from the SAME store the
-    * probe reads — its row-count metadata via
-    * `sigBitsFor(storedRowCount / DedupTables)`, the invariant
-    * [[graft.operators.SimilarityQueries.embSigsMaintainedAppend]]
-    * maintains (rebuilds run exactly when that expression changes) —
-    * never from a count the stream job remembers across restarts: if
-    * the corpus crossed a 4^k width boundary while the stream was
-    * down, the store was rebuilt at the new width and the restarted
-    * stream must re-read the width with it. StreamMlSpec pins stream
-    * matches ≡ the batch incremental operator's corpus matches on a
-    * planted verbatim-copy fixture. */
-  def embStreamAppend(vecs: DataFrame, corpusSigs: DataFrame,
-      corpusVecs: DataFrame, bits: Int, dim: Int): DataFrame = {
-    import graft.operators.{SimilarityQueries => S}
-    graft.functions.VectorExpressions.register(vecs.sparkSession)
-    import graft.functions.VectorExpressions.cosine_similarity
-    vecs
-      .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("va"))
-      .select(col("vec_id"), col("va"),
-        posexplode(array((0 until S.DedupTables).map(t =>
-          S.signatureOf(t, col("va"), bits, dim)): _*))
-          .as(Seq("table_id", "sig")))
-      // single fused LONG join key (see
-      // [[graft.operators.SimilarityQueries.fusedSigKey]]): the
-      // stream-static probe of the corpus posting index pays the same
-      // per-row relation cost as the batch probe — identical matches
-      .as("a")
-      .join(corpusSigs.select(col("table_id"), col("sig"),
-        col("vec_id").as("match_id")).as("b"),
-        S.fusedSigKey("a") === S.fusedSigKey("b"))
-      .select(col("a.vec_id").as("vec_id"), col("a.va").as("va"),
-        col("match_id"))
-      .join(corpusVecs.select(col("vec_id").as("match_id"),
-        col("embedding").cast("array<double>").as("vb")), Seq("match_id"))
-      .select(col("vec_id"), col("match_id"),
-        Tables.round6(cosine_similarity(col("va"), col("vb")))
-          .as("cos_sim"))
-      .where(col("cos_sim") >= S.EmbDupTau)
-  }
-
-  /** Plan-literal budget for [[ngramStreamAppend]]'s boilerplate hot
-    * set: 100k 8-byte keys is a sub-MB array literal (fine to ship
-    * per micro-batch); reaching it takes > NgramHotMaxKeys ·
-    * NgramDfCap ≈ 10^8 corpus postings of PURE boilerplate — a corpus
-    * pathology worth failing loudly on, not absorbing. See
-    * [[ngramStreamAppend]]'s scaladoc for why the bound exists only
-    * on the streaming form. */
-  val NgramHotMaxKeys: Int = 100000
-
-  /** foreachBatch body of the PRODUCTION ingest loop over the FULL
-    * admission surface (round-17 judge item — the r16 digest-chain
-    * loop extended to every store `pipe_admit_full` serves from): land
-    * the micro-batch `batch` (the ingest batch's documents, with
-    * doc_id/text/n_chars) as each maintained text store's tagged
-    * delta, then let the DOWNSTREAM stores derive their deltas from
+  /** The one streaming admission path: the foreachBatch body of the
+    * production ingest loop over every store `pipe_admit_full` serves
+    * from. There is no stream-static form of any admission family;
+    * after this lands a micro-batch, the batch admission queries read
+    * the stores, so stream and batch admission give identical
+    * verdicts by construction. It lands the micro-batch `batch` (the
+    * ingest batch's documents, with doc_id/text/n_chars) as each
+    * maintained text store's tagged delta, then lets the DOWNSTREAM
+    * stores derive their deltas from
     * the just-landed upstream ones — the same O(batch) upstream-delta
     * reads the batch ingest path takes
     * ([[graft.ArtifactStore.deltaFrame]]), so stream and batch ingest
@@ -881,99 +489,6 @@ object EventStreams {
     D.simhashChunkStore(spark, dir)
     S.embSigsStored(spark, dir)
     ()
-  }
-
-  /** Streaming NGRAM/JACCARD near-dup admission — the lexical edge
-    * family's own dual (its admission was previously streamed only
-    * indirectly, through the minhash-based near stage of
-    * [[corpusCleanStreamAppend]]): each arriving doc's word-3 shingle
-    * set is a ROW-LOCAL projection (the same tokenize → xxhash64 →
-    * distinct as the batch store build), its BOILERPLATE shingles are
-    * removed in-flight (`array_except` against the `hot` literal —
-    * the [[graft.operators.DedupQueries.NgramDfCap]] rule), its ±1
-    * length-bucket probes explode and equi-join the STATIC df-filtered
-    * posting store on (shingle, bucket) — the batch candidate join's
-    * exact shape — and candidates verify with the exact Jaccard over
-    * the FILTERED sets (`array_intersect` against the static per-doc
-    * array table, sizes from the store) at the family's ≥ 0.5
-    * threshold. Every join is stream-static and STATELESS. Emits one
-    * (doc_id, match_id, jaccard) row per SHARED SHINGLE (each shared
-    * shingle matches exactly one of the three bucket probes); compose
-    * with `dropDuplicatesWithinWatermark` to collapse multi-hit pairs,
-    * the family convention. In-stream matches are the batch operator's
-    * in-batch term, exactly as in every other dual.
-    *
-    * `hot` is the CURRENT store's corpus-df fact — collected
-    * driver-side from [[graft.operators.DedupQueries.hotShinglesOf]]
-    * over the posting store (tiny by construction: ≤ |postings|/cap
-    * keys; a bounded catalog read, the codebook convention) — and
-    * `corpusFiltered`/`corpusArrays` MUST be filtered at exactly that
-    * set (the embedding width rule, same reasoning):
-    * an ingest that pushes a shingle over the cap REBUILDS the
-    * filtered store (the maintained-append dichotomy), and the
-    * restarted stream must re-read the hot set with it — never carry
-    * one across corpus versions. The arriving doc itself is not yet
-    * appended, so the stream's hot set is the corpus's — identical to
-    * the batch operator's grown-corpus rule whenever the batch does
-    * not itself cross the cap (the append-arm invariant; a crossing
-    * batch rebuilds and re-serves before the next probe). StreamMlSpec
-    * pins stream matches ≡ the batch incremental operator's corpus
-    * matches on a planted near-dup + boilerplate-only-overlap
-    * fixture.
-    *
-    * GROWTH BOUND of the literal (round-15 judge item): `hot` is
-    * embedded in the plan as a `typedLit` array, so its size is a
-    * DRIVER/plan budget, not executor data — and it is bounded by
-    * construction at |corpus postings| / cap (every hot shingle needs
-    * > [[graft.operators.DedupQueries.NgramDfCap]] postings of its
-    * own), but that bound still grows with the corpus, so past
-    * [[NgramHotMaxKeys]] this constructor FAILS LOUDLY rather than
-    * ship a multi-MB plan every micro-batch. Why the asymmetry with
-    * the batch path (which has no such bound): the batch operator
-    * df-filters by JOINING the distributed hot frame
-    * ([[graft.operators.DedupQueries.dfFilteredPostings]] — never
-    * collected); the stream dual cannot, because recovering the
-    * per-doc FILTERED ARRAY (`fsh`, needed row-locally for both sz_a
-    * and the exact-Jaccard verify) from an explode → anti-join would
-    * take a per-doc re-aggregation — a STATEFUL streaming aggregate —
-    * where `array_except` against a literal keeps the dual stateless.
-    * The literal is the price of statelessness; the guard makes the
-    * budget explicit. Past it, trim the stream to the hottest
-    * [[NgramHotMaxKeys]] shingles is NOT sound (a stale/partial hot
-    * set demonstrably admits boilerplate — the restart-contract spec);
-    * route arriving docs through the batch admission path instead. */
-  def ngramStreamAppend(docs: DataFrame, corpusFiltered: DataFrame,
-      corpusArrays: DataFrame, hot: Seq[Long]): DataFrame = {
-    require(hot.size <= NgramHotMaxKeys,
-      s"ngramStreamAppend: hot set has ${hot.size} keys > " +
-        s"$NgramHotMaxKeys (NgramHotMaxKeys) — the plan-literal budget " +
-        "is exhausted; a truncated hot set would silently admit " +
-        "boilerplate edges, so this fails instead. Route ingest " +
-        "through the batch admission path (dedup_ngram_incremental), " +
-        "which df-filters via a distributed join with no literal.")
-    import graft.operators.{DedupQueries => D}
-    D.shingledOn(docs.select(col("doc_id"), col("text"),
-        length(col("text")).cast("long").as("n_chars")))
-      .select(col("doc_id"), col("len_bucket"),
-        array_except(col("sh"), typedLit(hot)).as("fsh"))
-      .where(size(col("fsh")) >= 1)
-      .select(col("doc_id"), col("fsh"),
-        size(col("fsh")).cast("long").as("sz_a"),
-        explode(array(col("len_bucket") - 1, col("len_bucket"),
-          col("len_bucket") + 1)).as("probe_bucket"))
-      .select(col("doc_id"), col("fsh"), col("sz_a"), col("probe_bucket"),
-        explode(col("fsh")).as("shingle"))
-      .join(corpusFiltered.select(col("shingle"),
-        col("len_bucket").as("probe_bucket"),
-        col("doc_id").as("match_id")), Seq("shingle", "probe_bucket"))
-      .join(corpusArrays.select(col("doc_id").as("match_id"),
-        col("fsh").as("fsh_b"), col("sz_b")), Seq("match_id"))
-      .withColumn("n_common",
-        size(array_intersect(col("fsh"), col("fsh_b"))).cast("double"))
-      .select(col("doc_id"), col("match_id"),
-        (col("n_common") / (col("sz_a").cast("double")
-          + col("sz_b").cast("double") - col("n_common"))).as("jaccard"))
-      .where(col("jaccard") >= 0.5)
   }
 
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,

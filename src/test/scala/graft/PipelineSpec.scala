@@ -123,6 +123,68 @@ class PipelineSpec extends AnyFunSuite {
     assert(pairs(D.ngramJaccardOn(docs)) == uncapped)
   }
 
+  private val ngramBoiler = "license header boilerplate text block"
+  private def ngramWords(seed: Int, n: Int) =
+    (0 until n).map(i => f"s$seed%02dw$i%02d").mkString(" ")
+  private def ngramPostings(docs: Seq[(Long, String)]) = {
+    import spark.implicits._
+    operators.DedupQueries.ngramPostingsOn(docs.toDF("doc_id", "text")
+      .withColumn("n_chars", length($"text").cast("long")))
+  }
+  /** Corpus matches `(doc_id, match_id)` of the incremental ngram
+    * admission over `docs` (batch ids ≡ 0 mod 5) at `cap`. */
+  private def ngramCorpusMatches(docs: Seq[(Long, String)], cap: Long) = {
+    val D = operators.DedupQueries
+    D.incrementalNgramOfEdges(D.ngramJaccardTouchingOfPostings(
+        D.dfFilteredPostings(ngramPostings(docs), cap)))
+      .where(col("match_src") === "corpus")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  }
+
+  test("incremental ngram admission: a near-dup of a corpus doc matches " +
+    "on its surviving shingles and boilerplate-only overlap stays " +
+    "silent") {
+    val boiler = ngramBoiler
+    def words(seed: Int, n: Int) = ngramWords(seed, n)
+    // corpus (ids ≢ 0 mod 5): all three carry the boilerplate block, so
+    // its shingles' df > cap; batch (ids ≡ 0 mod 5): 5 = light edit of
+    // doc 1, 10 shares ONLY the boilerplate, 15 unrelated
+    val existing = Seq(
+      1L -> s"${words(1, 20)} $boiler",
+      2L -> s"${words(2, 12)} $boiler",
+      3L -> s"${words(3, 12)} $boiler")
+    val incoming = Seq(
+      5L -> s"${words(1, 20).replace("s01w07", "edited")} $boiler",
+      10L -> s"${words(9, 12)} $boiler",
+      15L -> words(8, 12))
+    val got = ngramCorpusMatches(existing ++ incoming, cap = 2L)
+    assert(got.contains((5L, 1L)), s"planted near-dup match lost: $got")
+    assert(!got.exists(_._1 == 10L),
+      s"boilerplate-only overlap leaked into the matches: $got")
+  }
+
+  test("incremental ngram admission at a cap crossing: a boilerplate-only " +
+    "doc stops matching once the grown corpus pushes the boilerplate " +
+    "over the cap") {
+    val cap = 2L
+    val boiler = ngramBoiler
+    def words(seed: Int, n: Int) = ngramWords(seed, n)
+    // a batch doc that IS the boilerplate: against a corpus where the
+    // boilerplate stands alone in doc 2 it is a verbatim copy, and the
+    // third corpus doc pushes the block over the cap
+    val before = Seq(1L -> s"${words(1, 12)} $boiler", 2L -> boiler)
+    val after = before :+ (3L -> s"${words(3, 12)} $boiler")
+    def hotOf(docs: Seq[(Long, String)]) =
+      operators.DedupQueries.hotShinglesOf(ngramPostings(docs), cap).count()
+    assert(hotOf(before) == 0L && hotOf(after) > 0L,
+      "fixture must cross the cap exactly at the third doc")
+    val boilerOnly = Seq(10L -> boiler)
+    assert(ngramCorpusMatches(after ++ boilerOnly, cap).isEmpty,
+      "the grown-corpus rule must suppress a boilerplate-only match")
+    assert(ngramCorpusMatches(after ++ boilerOnly, Long.MaxValue)
+      .contains((10L, 2L)), "uncapped control: the copy of doc 2 is real")
+  }
+
   test("exact dedup keeps one keeper per distinct text") {
     val d = operators.DedupQueries.dedupExact(spark, sf)
     val total = Tables.documents(spark, sf).count()
@@ -199,6 +261,38 @@ class PipelineSpec extends AnyFunSuite {
     assert(D.entityBlockOn(Tables.customer(spark, sf)).count() ==
       D.entityBlockOn(Tables.customer(spark, sf), cap = Long.MaxValue)
         .count())
+  }
+
+  test("incremental entity hot-block cap counts every batch member: two " +
+    "batch records in one warm corpus block push it over the cap and " +
+    "neither reports; a live block's match is kept") {
+    import spark.implicits._
+    // cap = 3: the WarmName block has corpus bf 2, and two batch records
+    // grow it to 4 > 3, so neither reports (nor their in-batch pair);
+    // AcmeCorp (corpus bf 1, grown 2) stays live
+    val warm = Seq(1L -> "WarmName001", 2L -> "WarmName002",
+      3L -> "AcmeCorp01", 5L -> "WarmName003", 10L -> "WarmName004",
+      15L -> "AcmeCorp02").toDF("c_custkey", "c_name")
+    val warmInc = operators.DedupQueries
+      .incrementalEntityBlockOn(warm, cap = 3L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+    assert(warmInc == Set((15L, 3L, 1)), s"grown-frequency rule: $warmInc")
+  }
+
+  test("incremental entity admission: a same-block distance-1 record " +
+    "matches its corpus partner; a same-block distance-2 record and a " +
+    "cross-block near-name stay silent") {
+    import spark.implicits._
+    // corpus keys ≢ 0 mod 5; batch keys ≡ 0 mod 5. 5 matches 1 (same
+    // block, dist 1); 10 is same-block but dist 2; 15 is dist 1 from
+    // doc 1 but in a DIFFERENT block (the blocking rule)
+    val cust = Seq(1L -> "AcmeCorp01", 2L -> "BetaLtd07",
+      5L -> "AcmeCorp02", 10L -> "BetaLtd99", 15L -> "AcmeCorz01")
+      .toDF("c_custkey", "c_name")
+    val got = operators.DedupQueries.incrementalEntityBlockOn(cust)
+      .where($"match_src" === "corpus")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+    assert(got == Set((5L, 1L, 1)), s"planted entity match: $got")
   }
 
   test("LSH ANN recall@10 vs brute force is high on sf0.001") {
@@ -468,6 +562,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(got(15L) == ((1, 1)), s"in-batch keeper blocked: $got")
     assert(got(25L) == ((0, 0)), s"in-batch later dup admitted: $got")
     assert(got(20L) == ((1, 1)), s"clean doc blocked: $got")
+  }
+
+  test("incremental corpus-clean flags on a planted fixture: a corpus " +
+    "duplicate is blocked, a fresh doc passes, Spanish text fails the " +
+    "en lang gate, and every batch doc gets a verdict row") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "the and of to in that it was for on", "en"),
+      (2L, "shared corpus content here words tokens", "en"),
+      (5L, "the and of to in that it was for on", "en"),   // = doc 1
+      (10L, "el la de que en los se del las por", "en"),    // es text
+      (15L, "fresh original prose with the and of to in many words", "en"))
+      .toDF("doc_id", "text", "lang")
+      .withColumn("n_chars", length($"text").cast("long"))
+    // (exact_keep, lang_ok) per batch doc
+    val got = operators.DedupQueries.incrementalCorpusCleanOn(docs).collect()
+      .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(3)))).toMap
+    assert(got.keySet == Set(5L, 10L, 15L), s"verdict rows: $got")
+    assert(got(5L)._1 == 0, s"corpus duplicate not flagged: $got")
+    assert(got(15L)._1 == 1, s"fresh doc flagged as dup: $got")
+    assert(got(10L)._2 == 0, s"Spanish text passed the en lang gate: $got")
   }
 
   test("incremental embedding admission: cross-batch exact copy flagged " +
@@ -1179,6 +1294,22 @@ class PipelineSpec extends AnyFunSuite {
       s"incremental diverged from batch-touching full pairs:\n$got\n$expected")
   }
 
+  test("incremental simhash admission from text: a verbatim copy of a " +
+    "corpus document is a 'corpus' match at hamming 0") {
+    import spark.implicits._
+    def toks(seed: Int) = (0 until 40).map(i => f"s$seed%02dw$i%02d")
+    // corpus (ids ≢ 0 mod 5); batch (ids ≡ 0 mod 5): a verbatim copy
+    // of doc 1, a lightly-edited near-dup of doc 2, one unrelated
+    val docs = Seq(1L -> toks(1).mkString(" "), 2L -> toks(2).mkString(" "),
+      5L -> toks(1).mkString(" "),
+      10L -> toks(2).updated(7, "edited").mkString(" "),
+      15L -> toks(9).mkString(" ")).toDF("doc_id", "text")
+    val got = operators.DedupQueries.incrementalSimhashOn(docs)
+      .where($"match_src" === "corpus")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+    assert(got.contains((5L, 1L, 0)), s"planted verbatim match lost: $got")
+  }
+
   test("substring spans: misaligned verbatim copy is detected (content-" +
     "defined anchors), unrelated doc reports zero duplication") {
     import spark.implicits._
@@ -1249,6 +1380,33 @@ class PipelineSpec extends AnyFunSuite {
       assert(d == capped(id)._2 + capped(id)._3,
         "uncapped dup = capped dup + boiler")
     }
+  }
+
+  test("incremental spans admission profile: a misaligned copy of a " +
+    "corpus doc reports dup anchors, boilerplate past the cap reports " +
+    "boiler anchors, fresh content reports no dups") {
+    import spark.implicits._
+    def blob(seed: Int, n: Int): String =
+      (0 until n).map(i => f"w$seed%02d${i}%03d").mkString(" ")
+    // corpus docs 1+2 share a 100-char boilerplate block; batch doc 5
+    // embeds a misaligned 400-char copy from doc 1 plus the
+    // boilerplate (grown df 3 > cap 2); batch doc 10 is fresh content
+    val boiler = blob(9, 20).substring(0, 100)
+    val base = blob(1, 120)
+    val shared = base.substring(100, 500)
+    val docs = Seq(
+      1L -> s"$base $boiler",
+      2L -> s"${blob(2, 80)} $boiler",
+      5L -> s"pre13charpref $shared $boiler ${blob(5, 30)}",
+      10L -> blob(3, 80)).toDF("doc_id", "text")
+      .withColumn("n_chars", length($"text").cast("long"))
+    // (n_anchors, n_dup_anchors, n_boiler_anchors) per batch doc
+    val got = operators.DedupQueries.incrementalSpansOn(docs, cap = 2L)
+      .collect().map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    assert(got(5L)._2 > 0, s"planted copy not detected: $got")
+    assert(got(5L)._3 > 0, s"planted boilerplate not detected: $got")
+    assert(got(10L)._2 == 0, s"fresh doc reports dups: $got")
   }
 
   test("langid predicts a language for every doc; fingerprint is stable " +

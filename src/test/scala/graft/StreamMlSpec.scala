@@ -422,662 +422,6 @@ class StreamMlSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming incremental dedup: a stream-static anti join admits " +
-    "only documents whose digest is not in the existing store") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions.md5
-    val existing = Seq("alpha", "omega").toDF("text")
-      .select(md5($"text").as("text_hash"))
-    val src = MemoryStream[(Long, String)]
-    val q = streaming.EventStreams
-      .incrementalDedupStreamAppend(src.toDF.toDF("doc_id", "text"), existing)
-      .writeStream.format("memory").queryName("incdedup_sink")
-      .outputMode("append").start()
-    try {
-      src.addData((1L, "alpha"), (2L, "beta"))   // alpha known → dropped
-      q.processAllAvailable()
-      src.addData((3L, "omega"), (4L, "gamma"))  // omega known → dropped
-      q.processAllAvailable()
-      val admitted = spark.table("incdedup_sink")
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(admitted == Set(2L, 4L), s"got $admitted")
-    } finally q.stop()
-  }
-
-  test("streaming corpus-clean admission: per-doc stream verdicts == the " +
-    "batch funnel's stateless flags (exact-vs-corpus, langid, quality) " +
-    "on a planted fixture; the stream REPORTS rather than filters") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val existing = Seq(
-      (1L, "the and of to in that it was for on", "en"),
-      (2L, "shared corpus content here words tokens", "en"))
-      .toDF("doc_id", "text", "lang")
-    val incoming = Seq(
-      (5L, "the and of to in that it was for on", "en"),   // = doc 1: blocked
-      (10L, "el la de que en los se del las por", "en"),    // es text: lang 0
-      (15L, "fresh original prose with the and of to in many words", "en"))
-    import org.apache.spark.sql.functions.{md5, length}
-    val digests = existing.select(md5($"text").as("text_hash"))
-    val src = MemoryStream[(Long, String, String)]
-    val q = streaming.EventStreams.corpusCleanStreamAppend(
-        src.toDF.toDF("doc_id", "text", "lang"), digests)
-      .writeStream.format("memory").queryName("ccadm_sink")
-      .outputMode("append").start()
-    try {
-      src.addData(incoming: _*)
-      q.processAllAvailable()
-      val got = spark.table("ccadm_sink").collect()
-        .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getInt(3))))
-        .toMap
-      assert(got.keySet == Set(5L, 10L, 15L),
-        s"stream filtered instead of reporting: $got")
-      assert(got(5L)._1 == 0, s"corpus duplicate not flagged: $got")
-      assert(got(15L)._1 == 1, s"fresh doc flagged as dup: $got")
-      assert(got(10L)._2 == 0, s"Spanish text passed the en lang gate: $got")
-      // the stateless flags equal the BATCH funnel's on the same docs
-      // (single-copy digests, so corpus-only exact == full exact rule)
-      val D = operators.DedupQueries
-      val all = existing.unionByName(incoming.toDF("doc_id", "text", "lang"))
-        .withColumn("n_chars", length($"text").cast("long"))
-      val batch = D.incrementalCorpusCleanOn(all).collect()
-        .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(3), r.getInt(4))))
-        .toMap
-      assert(got == batch,
-        s"stream verdicts $got != batch funnel flags $batch")
-    } finally q.stop()
-  }
-
-  test("streaming NEAR-dup admission: in-flight row-local signatures == " +
-    "the batch aggregate's; stream-static band-store probe + Jaccard " +
-    "verify reproduces the batch operator's corpus matches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val D = operators.DedupQueries
-    def toks(seed: Int) = (0 until 40).map(i => f"s$seed%02dw$i%02d")
-    // existing corpus (ids not divisible by 5), incoming batch (ids ≡ 0
-    // mod 5 — the batch operator's split convention, so the two forms
-    // are comparable): one near-dup of doc 1, one unrelated
-    val existing = Seq(1L -> toks(1).mkString(" "),
-      2L -> toks(2).mkString(" ")).toDF("doc_id", "text")
-    val incoming = Seq(5L -> toks(1).updated(7, "edited").mkString(" "),
-      10L -> toks(9).mkString(" "))
-    val all = (Seq(1L -> toks(1).mkString(" "),
-      2L -> toks(2).mkString(" ")) ++ incoming).toDF("doc_id", "text")
-
-    // row-local fold ≡ batch groupBy signatures, column for column
-    val viaFold = D.shingledMd5On(all)
-      .select($"doc_id", D.minhashSigArray($"sh").as("sigs"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
-    val viaAgg = D.minhashSignaturesOn(all)
-      .collect().map(r => r.getLong(0) ->
-        (1 to 64).map(i => r.getLong(i)).toList).toMap
-    assert(viaFold == viaAgg, "row-local minhash fold diverged from the " +
-      "batch aggregate")
-
-    val corpusBands = D.minhashBandsOn(existing)
-    val corpusSh = D.shingledMd5On(existing)
-    val src = MemoryStream[(Long, String)]
-    val q = streaming.EventStreams.incrementalNearStreamAppend(
-        src.toDF.toDF("doc_id", "text"), corpusBands, corpusSh)
-      .writeStream.format("memory").queryName("incnear_sink")
-      .outputMode("append").start()
-    try {
-      src.addData(incoming: _*)
-      q.processAllAvailable()
-      val got = spark.table("incnear_sink")
-        .select("doc_id", "match_id").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val batch = D.incrementalNearOn(all)
-        .where($"match_src" === "corpus")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(batch == Set((5L, 1L)), s"fixture lost its planted match: $batch")
-      assert(got == batch,
-        s"stream matches $got != batch corpus matches $batch")
-    } finally q.stop()
-  }
-
-  test("streaming SIMHASH admission: in-flight row-local simhash fold == " +
-    "the batch vote aggregate doc-for-doc; stream-static chunk-store " +
-    "probe + exact hamming reproduces the batch operator's corpus " +
-    "matches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val D = operators.DedupQueries
-    def toks(seed: Int) = (0 until 40).map(i => f"s$seed%02dw$i%02d")
-    // existing corpus (ids ≢ 0 mod 5), incoming batch (ids ≡ 0 mod 5):
-    // one verbatim copy of doc 1 (hamming 0 — a guaranteed match), one
-    // lightly-edited near-dup of doc 2, one unrelated
-    val existing = Seq(1L -> toks(1).mkString(" "),
-      2L -> toks(2).mkString(" ")).toDF("doc_id", "text")
-    val incoming = Seq(5L -> toks(1).mkString(" "),
-      10L -> toks(2).updated(7, "edited").mkString(" "),
-      15L -> toks(9).mkString(" "))
-    val all = (Seq(1L -> toks(1).mkString(" "),
-      2L -> toks(2).mkString(" ")) ++ incoming).toDF("doc_id", "text")
-
-    // row-local fold ≡ batch per-bit vote aggregate, doc for doc
-    val viaFold = D.shingledMd5On(all)
-      .select($"doc_id", D.simhashArrayCol($"sh").as("simhash"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaAgg = D.simhashesOn(all)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaFold == viaAgg,
-      "row-local simhash fold diverged from the batch vote aggregate")
-
-    val corpusHashes = D.simhashesOn(existing)
-    val src = MemoryStream[(Long, String)]
-    val q = streaming.EventStreams.simhashStreamAppend(
-        src.toDF.toDF("doc_id", "text"), corpusHashes, level = 2)
-      .writeStream.format("memory").queryName("simhash_sink")
-      .outputMode("append").start()
-    try {
-      src.addData(incoming: _*)
-      q.processAllAvailable()
-      val got = spark.table("simhash_sink")
-        .select("doc_id", "match_id", "hamming").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val batch = D.incrementalSimhashOn(all)
-        .where($"match_src" === "corpus")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-      assert(batch.contains((5L, 1L, 0)),
-        s"fixture lost its planted verbatim match: $batch")
-      assert(got == batch,
-        s"stream matches $got != batch corpus matches $batch")
-    } finally q.stop()
-  }
-
-  test("streaming CONTAINMENT admission: in-flight row-local sorted " +
-    "hashes + prefix probe against the static corpus index reproduces " +
-    "the batch admission operator's corpus/sub matches; sub-threshold " +
-    "overlap stays silent") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val D = operators.DedupQueries
-    val big  = (1 to 20).map(i => f"w$i%02d").mkString(" ")  // 18 shingles
-    val smal = (1 to 8).map(i => s"m$i").mkString(" ")
-    // incoming: 5 ⊂ doc 1 (match), 10 = half-overlap (4/10 < 0.8 — silent),
-    // 15 unrelated
-    val existing = Seq(1L -> big, 2L -> smal).toDF("doc_id", "text")
-    val incoming = Seq(
-      5L -> (3 to 12).map(i => f"w$i%02d").mkString(" "),
-      10L -> ((1 to 6).map(i => f"w$i%02d") ++
-        (1 to 6).map(i => s"u$i")).mkString(" "),
-      15L -> (1 to 10).map(i => s"z$i").mkString(" "))
-    val corpusSh = D.containmentShOn(existing)
-    val src = MemoryStream[(Long, String)]
-    val q = streaming.EventStreams.containmentStreamAppend(
-        src.toDF.toDF("doc_id", "text"), corpusSh)
-      .writeStream.format("memory").queryName("contain_sink")
-      .outputMode("append").start()
-    try {
-      src.addData(incoming: _*)
-      q.processAllAvailable()
-      val got = spark.table("contain_sink")
-        .select("doc_id", "match_id", "containment").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet
-      // batch admission operator over the same planted corpus: the
-      // corpus/sub matches are exactly what the stream must reproduce
-      val all = (Seq(1L -> big, 2L -> smal) ++ incoming)
-        .toDF("doc_id", "text")
-      val sh = D.containmentShOn(all)
-      val batch = D.incrementalContainmentOfSh(sh,
-          D.BatchSide(sh.where(D.isIngestBatch), broadcast = true))
-        .where($"match_src" === "corpus" && $"direction" === "sub")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(4)))
-        .toSet
-      assert(batch == Set((5L, 1L, 1.0)),
-        s"fixture lost its planted containment match: $batch")
-      assert(got == batch,
-        s"stream matches $got != batch corpus/sub matches $batch")
-    } finally q.stop()
-  }
-
-  test("streaming SPANS admission: row-local anchor selection + static " +
-    "spread probe, aggregated per doc, == the batch admission profile; " +
-    "solo-doc dup/boiler rules match the grown-corpus rules exactly") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val D = operators.DedupQueries
-    def blob(seed: Int, n: Int): String =
-      (0 until n).map(i => f"w$seed%02d${i}%03d").mkString(" ")
-    // corpus docs 1+2 share a 100-char boilerplate block (corpus df 2 =
-    // cap -> stream classifies boiler; batch grown df 3 > cap — the
-    // solo-doc equivalence under test); doc 5 (incoming) embeds a
-    // misaligned 400-char copy from doc 1 plus the boilerplate; doc 10
-    // is fresh content
-    val boiler = blob(9, 20).substring(0, 100)
-    val base = blob(1, 120)
-    val shared = base.substring(100, 500)
-    val existing = Seq(
-      1L -> s"$base $boiler",
-      2L -> s"${blob(2, 80)} $boiler")
-    val incoming = Seq(
-      5L -> s"pre13charpref $shared $boiler ${blob(5, 30)}",
-      10L -> blob(3, 80))
-    val cap = 2L
-    val corpusSpread = D.spanSpreadOn(D.spanAnchorsOn(
-      existing.toDF("doc_id", "text")
-        .withColumn("n_chars", length($"text").cast("long"))))
-    val src = MemoryStream[(Long, String)]
-    val q = streaming.EventStreams.spansStreamAppend(
-        src.toDF.toDF("doc_id", "text"), corpusSpread, cap)
-      .writeStream.format("memory").queryName("spans_sink")
-      .outputMode("append").start()
-    try {
-      src.addData(incoming: _*)
-      q.processAllAvailable()
-      val got = spark.table("spans_sink")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_anchors"),
-          sum($"is_dup").as("n_dup_anchors"),
-          sum($"is_boiler").as("n_boiler_anchors"))
-        .collect().map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-      val all = (existing ++ incoming).toDF("doc_id", "text")
-        .withColumn("n_chars", length($"text").cast("long"))
-      val batch = D.incrementalSpansOn(all, cap)
-        .collect().map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-      assert(batch(5L)._2 > 0, s"fixture lost its planted copy: $batch")
-      assert(batch(5L)._3 > 0, s"fixture lost its planted boiler: $batch")
-      assert(batch(10L)._2 == 0, s"fresh doc reports dups: $batch")
-      assert(got == batch, s"stream profile $got != batch profile $batch")
-    } finally q.stop()
-  }
-
-  test("streaming ENTITY admission: row-local block key + static block " +
-    "index + banded levenshtein reproduces the batch admission " +
-    "operator's corpus matches; cross-block near-names stay silent") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val D = operators.DedupQueries
-    // corpus keys ≢ 0 mod 5; incoming keys ≡ 0 mod 5. 5 matches 1
-    // (same block, dist 1); 10 is same-block but dist 2 (silent); 15
-    // is a near-name in a DIFFERENT block (blocking rule, silent)
-    val existing = Seq(1L -> "AcmeCorp01", 2L -> "BetaLtd07")
-    val incoming = Seq(5L -> "AcmeCorp02", 10L -> "BetaLtd99",
-      15L -> "AcmeCorz01")
-    val src = MemoryStream[(Long, String)]
-    val q = streaming.EventStreams.entityStreamAppend(
-        src.toDF.toDF("c_custkey", "c_name"),
-        existing.toDF("c_custkey", "c_name"))
-      .writeStream.format("memory").queryName("entity_sink")
-      .outputMode("append").start()
-    try {
-      src.addData(incoming: _*)
-      q.processAllAvailable()
-      val got = spark.table("entity_sink")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val batch = D.incrementalEntityBlockOn(
-          (existing ++ incoming).toDF("c_custkey", "c_name"))
-        .where($"match_src" === "corpus")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-      assert(batch == Set((5L, 1L, 1)),
-        s"fixture lost its planted entity match: $batch")
-      assert(got == batch, s"stream matches $got != batch $batch")
-    } finally q.stop()
-  }
-
-  test("streaming ENTITY admission hot-block cap: a corpus block at " +
-    "bf >= cap vanishes from the probed index — the solo-record image " +
-    "of the batch rule (grown bf > cap), pinned equal to the batch " +
-    "admission operator at the same cap") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val D = operators.DedupQueries
-    // cap = 3: the HotName corpus block has bf = 3 ≥ 3 — an arriving
-    // record would grow it to 4 > 3, so both forms must silence it;
-    // the AcmeCorp block (bf = 1) stays live
-    val existing = Seq(1L -> "AcmeCorp01",
-      2L -> "HotName001", 3L -> "HotName002", 4L -> "HotName003")
-    val incoming = Seq(5L -> "AcmeCorp02", 10L -> "HotName004")
-    val src = MemoryStream[(Long, String)]
-    val q = streaming.EventStreams.entityStreamAppend(
-        src.toDF.toDF("c_custkey", "c_name"),
-        existing.toDF("c_custkey", "c_name"), cap = 3L)
-      .writeStream.format("memory").queryName("entity_hot_sink")
-      .outputMode("append").start()
-    try {
-      src.addData(incoming: _*)
-      q.processAllAvailable()
-      val got = spark.table("entity_hot_sink")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val batch = D.incrementalEntityBlockOn(
-          (existing ++ incoming).toDF("c_custkey", "c_name"), cap = 3L)
-        .where($"match_src" === "corpus")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-      assert(batch == Set((5L, 1L, 1)),
-        s"batch rule must keep only the AcmeCorp match: $batch")
-      assert(got == batch, s"stream matches $got != batch $batch")
-      // uncapped control: the hot block's matches are real — the cap,
-      // not the fixture, is what silences them
-      assert(D.incrementalEntityBlockOn(
-          (existing ++ incoming).toDF("c_custkey", "c_name"),
-          cap = Long.MaxValue)
-        .where($"match_src" === "corpus").count() == 4L)
-    } finally q.stop()
-  }
-
-  test("streaming ENTITY hot-block cap, multi-record micro-batch: the " +
-    "solo-record approximation's documented divergence — a block the " +
-    "batch rule suppresses only via the micro-batch's own multiplicity " +
-    "(corpus bf + N > cap, corpus bf < cap) still matches in the " +
-    "stream; it closes at the next ingest (r16 advice, pinned as the " +
-    "contract the docstring states)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val D = operators.DedupQueries
-    // cap = 3: WarmName corpus bf = 2 < 3 → live for the stream
-    // (solo-record rule: grown-by-one 3 is NOT > 3). The micro-batch
-    // carries TWO WarmName records, so the batch operator's grown bf
-    // is 2 + 2 = 4 > 3 → suppressed there. Both behaviors asserted.
-    val existing = Seq(1L -> "WarmName001", 2L -> "WarmName002")
-    val incoming = Seq(5L -> "WarmName003", 10L -> "WarmName004")
-    val src = MemoryStream[(Long, String)]
-    val q = streaming.EventStreams.entityStreamAppend(
-        src.toDF.toDF("c_custkey", "c_name"),
-        existing.toDF("c_custkey", "c_name"), cap = 3L)
-      .writeStream.format("memory").queryName("entity_warm_sink")
-      .outputMode("append").start()
-    try {
-      src.addData(incoming: _*)
-      q.processAllAvailable()
-      val got = spark.table("entity_warm_sink")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      // stream: both arriving records match both corpus records —
-      // the solo-record rule keeps the bf=2 block live
-      assert(got == Set((5L, 1L), (5L, 2L), (10L, 1L), (10L, 2L)),
-        s"stream under-/over-matched the warm block: $got")
-      // batch: the SAME ingest suppresses the block (grown bf 4 > 3)
-      val batch = D.incrementalEntityBlockOn(
-          (existing ++ incoming).toDF("c_custkey", "c_name"), cap = 3L)
-        .where($"match_src" === "corpus").count()
-      assert(batch == 0L,
-        s"batch rule must suppress the grown-past-cap block: $batch rows")
-      // and the divergence CLOSES at the next corpus version: with the
-      // batch absorbed, the block sits at bf = 4 ≥ cap — a later
-      // stream probe of the grown index finds no partners
-      val grownIndex = (existing ++ incoming).toDF("c_custkey", "c_name")
-      val later = MemoryStream[(Long, String)]
-      val q2 = streaming.EventStreams.entityStreamAppend(
-          later.toDF.toDF("c_custkey", "c_name"),
-          grownIndex, cap = 3L)
-        .writeStream.format("memory").queryName("entity_warm_sink2")
-        .outputMode("append").start()
-      try {
-        later.addData(Seq(15L -> "WarmName005"): _*)
-        q2.processAllAvailable()
-        assert(spark.table("entity_warm_sink2").isEmpty,
-          "grown-index probe must silence the now-hot block")
-      } finally q2.stop()
-    } finally q.stop()
-  }
-
-  test("streaming ENTITY admission at a foreachBatch ingest point is " +
-    "EXACT (r17 item 4): entityAdmitBatch folds the micro-batch's own " +
-    "per-block counts into the hot predicate, so the N >= 2 same-block " +
-    "fixture the append-mode dual diverges on now matches the batch " +
-    "admission operator bit-for-bit — on the suppressed AND live sides") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val D = operators.DedupQueries
-    // cap = 3: WarmName corpus bf = 2; the micro-batch carries TWO
-    // WarmName records, so grown bf = 4 > 3 — the exact rule must
-    // suppress it (the solo-record dual matches here, pinned above).
-    // The AcmeCorp block (bf = 1, one batch member, grown 2) stays
-    // live and its dist-1 corpus match must flow through.
-    val existing = Seq(1L -> "WarmName001", 2L -> "WarmName002",
-      3L -> "AcmeCorp01")
-    val incoming = Seq(5L -> "WarmName003", 10L -> "WarmName004",
-      15L -> "AcmeCorp02")
-    val corpusIdx = existing.toDF("c_custkey", "c_name")
-    val got = scala.collection.mutable.Set.empty[(Long, Long, Int)]
-    val src = MemoryStream[(Long, String)]
-    val q = src.toDF.toDF("c_custkey", "c_name").writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        got ++= streaming.EventStreams.entityAdmitBatch(b, corpusIdx,
-            cap = 3L)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-        ()
-      }
-      .start()
-    try {
-      src.addData(incoming: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val batch = D.incrementalEntityBlockOn(
-        (existing ++ incoming).toDF("c_custkey", "c_name"), cap = 3L)
-      .where($"match_src" === "corpus")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    assert(batch == Set((15L, 3L, 1)),
-      s"fixture must suppress WarmName and keep the Acme match: $batch")
-    assert(got.toSet == batch,
-      s"ingest-point verdicts ${got.toSet} != batch operator $batch")
-  }
-
-  test("streaming EMBEDDING admission: in-flight row-local hyperplane " +
-    "signatures probe the static emb_sigs postings; exact-cosine " +
-    "verify reproduces the batch admission operator's corpus matches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val S = operators.SimilarityQueries
-    graft.functions.VectorExpressions.register(spark)
-    val dim = 8
-    def unit(i: Int): Seq[Double] =
-      (0 until dim).map(d => if (d == i) 1.0 else 0.0)
-    // existing corpus (ids ≢ 0 mod 5); incoming batch (ids ≡ 0 mod 5):
-    // a VERBATIM copy of vec 1 (an identical vector shares every table
-    // signature by construction — a guaranteed candidate, cosine 1.0),
-    // a light perturbation of vec 2, one orthogonal
-    val existing = Seq(1L -> unit(0), 2L -> unit(1))
-    val incoming = Seq(
-      5L -> unit(0),
-      10L -> unit(1).updated(0, 0.05),
-      15L -> unit(2))
-    val all = (existing ++ incoming).toDF("vec_id", "embedding")
-    // width = sigBitsFor of the FULL (corpus + batch) count — the
-    // embSigsMaintainedAppend invariant the stream reads from store
-    // metadata; the batch operator uses the same rule
-    val bits = S.sigBitsFor(all.count())
-    val corpusVecs = existing.toDF("vec_id", "embedding")
-    val corpusSigs = S.embSigsOf(
-      corpusVecs.select($"vec_id",
-        $"embedding".cast("array<double>").as("vec")), bits, dim)
-    val src = MemoryStream[(Long, Seq[Double])]
-    val q = streaming.EventStreams.embStreamAppend(
-        src.toDF.toDF("vec_id", "embedding"), corpusSigs, corpusVecs,
-        bits, dim)
-      .writeStream.format("memory").queryName("emb_sink")
-      .outputMode("append").start()
-    try {
-      src.addData(incoming: _*)
-      q.processAllAvailable()
-      val got = spark.table("emb_sink")
-        .select("vec_id", "match_id", "cos_sim").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet
-      val batch = S.incrementalEmbOn(all)
-        .where($"match_src" === "corpus")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
-        .toSet
-      assert(batch.contains((5L, 1L, 1.0)),
-        s"fixture lost its planted verbatim match: $batch")
-      assert(got == batch,
-        s"stream matches $got != batch corpus matches $batch")
-    } finally q.stop()
-  }
-
-  test("streaming NGRAM admission: in-flight row-local shingling + " +
-    "boilerplate removal + bucket probe of the static filtered posting " +
-    "store reproduces the batch admission operator's corpus matches; " +
-    "boilerplate-only overlap stays silent") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val D = operators.DedupQueries
-    val cap = 2L
-    val boiler = "license header boilerplate text block"
-    def words(seed: Int, n: Int) =
-      (0 until n).map(i => f"s$seed%02dw$i%02d").mkString(" ")
-    def withChars(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("n_chars",
-        org.apache.spark.sql.functions.length($"text").cast("long"))
-    // existing (ids ≢ 0 mod 5): ALL THREE carry the boilerplate block
-    // (its shingles' corpus df = 3 > cap → hot); doc 1 has real content
-    val existing = Seq(
-      1L -> s"${words(1, 20)} $boiler",
-      2L -> s"${words(2, 12)} $boiler",
-      3L -> s"${words(3, 12)} $boiler")
-    // incoming (ids ≡ 0 mod 5): 5 = light edit of doc 1 (a true
-    // near-dup via surviving shingles); 10 shares ONLY the boilerplate
-    // (silent under the df-cap contract); 15 unrelated
-    val incoming = Seq(
-      5L -> s"${words(1, 20).replace("s01w07", "edited")} $boiler",
-      10L -> s"${words(9, 12)} $boiler",
-      15L -> words(8, 12))
-    val baseInv = D.ngramPostingsOn(
-      withChars(existing.toDF("doc_id", "text")))
-    val hotSeq = D.hotShinglesOf(baseInv, cap)
-      .collect().map(_.getLong(0)).toSeq
-    assert(hotSeq.nonEmpty, "fixture lost its planted hot shingles")
-    val corpusFiltered = D.dfFilteredPostings(baseInv, cap)
-    val corpusArrays = D.filteredArraysOf(corpusFiltered)
-    val src = MemoryStream[(Long, String)]
-    val q = streaming.EventStreams.ngramStreamAppend(
-        src.toDF.toDF("doc_id", "text"), corpusFiltered, corpusArrays,
-        hotSeq)
-      .writeStream.format("memory").queryName("ngram_sink")
-      .outputMode("append").start()
-    try {
-      src.addData(incoming: _*)
-      q.processAllAvailable()
-      val got = spark.table("ngram_sink")
-        .select("doc_id", "match_id", "jaccard").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet
-      val all = withChars((existing ++ incoming).toDF("doc_id", "text"))
-      val batch = D.incrementalNgramOfEdges(
-          D.ngramJaccardTouchingOfPostings(
-            D.dfFilteredPostings(D.ngramPostingsOn(all), cap)))
-        .where($"match_src" === "corpus")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
-        .toSet
-      assert(batch.exists(m => m._1 == 5L && m._2 == 1L),
-        s"fixture lost its planted near-dup match: $batch")
-      assert(!batch.exists(_._1 == 10L),
-        s"boilerplate-only overlap leaked into the batch matches: $batch")
-      assert(got == batch,
-        s"stream matches $got != batch corpus matches $batch")
-    } finally q.stop()
-  }
-
-  test("streaming NGRAM admission restart contract: a STALE hot set / " +
-    "filtered store from before a cap-crossing ingest admits " +
-    "boilerplate-only matches the current corpus rule suppresses — the " +
-    "docstring's re-read-with-the-store rule is load-bearing, not " +
-    "hygiene") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val D = operators.DedupQueries
-    val cap = 2L
-    val boiler = "license header boilerplate text block"
-    def words(seed: Int, n: Int) =
-      (0 until n).map(i => f"s$seed%02dw$i%02d").mkString(" ")
-    def withChars(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("n_chars",
-        org.apache.spark.sql.functions.length($"text").cast("long"))
-    // BEFORE the crossing ingest: boiler df = 2 = cap (kept — strict
-    // >). Doc 2 is boilerplate ALONE — the wrapped-license shape whose
-    // admission verdict the cap rule exists to flip.
-    val before = Seq(1L -> s"${words(1, 12)} $boiler", 2L -> boiler)
-    // the crossing ingest adds doc 3: boiler df = 3 > cap → the
-    // maintained store REBUILDS with boiler classified boilerplate
-    val after = before :+ (3L -> s"${words(3, 12)} $boiler")
-    // the incoming doc IS the boilerplate — under the stale state it
-    // jaccard-1.0-matches doc 2; under the current rule it has no
-    // surviving shingles at all
-    val incoming = Seq(10L -> boiler)
-    def state(corpus: Seq[(Long, String)]) = {
-      val inv = D.ngramPostingsOn(withChars(corpus.toDF("doc_id", "text")))
-      val hot = D.hotShinglesOf(inv, cap).collect().map(_.getLong(0)).toSeq
-      val filt = D.dfFilteredPostings(inv, cap)
-      (filt, D.filteredArraysOf(filt), hot)
-    }
-    val (staleF, staleA, staleH) = state(before)
-    val (freshF, freshA, freshH) = state(after)
-    assert(staleH.isEmpty && freshH.nonEmpty,
-      "fixture must cross the cap exactly at the third doc")
-    def run(name: String, f: org.apache.spark.sql.DataFrame,
-        a: org.apache.spark.sql.DataFrame, h: Seq[Long]): Set[(Long, Long)] = {
-      val src = MemoryStream[(Long, String)]
-      val q = streaming.EventStreams.ngramStreamAppend(
-          src.toDF.toDF("doc_id", "text"), f, a, h)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        src.addData(incoming: _*)
-        q.processAllAvailable()
-        spark.table(name).select("doc_id", "match_id").distinct()
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      } finally q.stop()
-    }
-    val staleGot = run("ngram_stale_sink", staleF, staleA, staleH)
-    val freshGot = run("ngram_fresh_sink", freshF, freshA, freshH)
-    assert(freshGot.isEmpty,
-      s"current-corpus rule must suppress boilerplate-only matches: " +
-        freshGot)
-    assert(staleGot.nonEmpty,
-      "stale state was expected to admit the boilerplate-only match " +
-        "(the hazard the restart rule exists for)")
-    // and fresh ≡ the batch admission operator on the grown corpus
-    val all = withChars((after ++ incoming).toDF("doc_id", "text"))
-    val batchM = D.incrementalNgramOfEdges(
-        D.ngramJaccardTouchingOfPostings(
-          D.dfFilteredPostings(D.ngramPostingsOn(all), cap)))
-      .where($"match_src" === "corpus")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(freshGot == batchM,
-      s"fresh stream $freshGot != batch on the grown corpus $batchM")
-  }
-
-  test("streaming NGRAM admission hot-set guard: a hot set past " +
-    "NgramHotMaxKeys fails LOUDLY at construction (a truncated literal " +
-    "would silently admit boilerplate); at the bound it constructs") {
-    import spark.implicits._
-    val E = streaming.EventStreams
-    val docs = Seq(1L -> "some arriving doc text here")
-      .toDF("doc_id", "text")
-    val filt = Seq((7L, 0L, 2L)).toDF("shingle", "len_bucket", "doc_id")
-    val arrs = Seq((2L, Seq(7L), 1L)).toDF("doc_id", "fsh", "sz_b")
-    val over = (0L until (E.NgramHotMaxKeys + 1L)).toSeq
-    val ex = intercept[IllegalArgumentException] {
-      E.ngramStreamAppend(docs, filt, arrs, over)
-    }
-    assert(ex.getMessage.contains("NgramHotMaxKeys"), ex.getMessage)
-    assert(ex.getMessage.contains("batch admission"), ex.getMessage)
-    // exactly at the bound: plan constructs (the budget is inclusive)
-    val atBound = E.ngramStreamAppend(docs, filt, arrs,
-      (0L until E.NgramHotMaxKeys.toLong).toSeq)
-    assert(atBound.columns.toSeq ==
-      Seq("doc_id", "match_id", "jaccard"))
-  }
-
   test("ModelStore round-trips an all-numeric product catalog as strings " +
     "(partition-column inference would read \"0123\" back as \"123\")") {
     import spark.implicits._

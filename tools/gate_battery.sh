@@ -134,9 +134,18 @@ else
   record "sbt_test" "FAILED" "\"succeeded\":$succ,\"failed\":$fails,\"raw\":$(jesc "$tests")"
 fi
 
-# SCALE10 completeness guard (r16 item 7: filtered SPARK_GRAFT_FAMILIES
-# refreshes CLOBBER SCALE10.json — refuse to close a round on a
-# partial artifact)
+# tools/plan_diff.py's own unit tests: the plan-identity checks trust
+# its exit code, so a broken normaliser or parser must fail here first
+pd=$(python3 -m unittest tools/test_plan_diff.py 2>&1)
+if [ $? -eq 0 ]; then
+  record "plan_diff_unittest" "PASS" "\"detail\":$(jesc "$(echo "$pd" | tail -1)")"
+else
+  record "plan_diff_unittest" "FAILED" "\"detail\":$(jesc "$(echo "$pd" | tail -5)")"
+fi
+
+# SCALE10 completeness guard: refuse to close a round on an artifact
+# missing a section (ScaleRehearsal writes SCALE10.json only from an
+# unfiltered run, so a section can only be missing if one never ran)
 scale_check=$(python3 - <<'EOF'
 import json, sys
 want_top = {"families", "incremental", "admission", "overlap",

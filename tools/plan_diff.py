@@ -19,7 +19,9 @@ change from run to run without changing the plan:
 
 Prints every query whose normalised plan differs (or that only one dump
 has), marking those named in `--expect`. Exits 1 when any difference is
-not expected, else 0.
+not expected, else 0. Exits 2 when either dump holds no query at all
+(say, a PlanDump that died before its first header): two empty dumps
+are not "identical".
 """
 import argparse
 import re
@@ -83,6 +85,11 @@ def main(argv=None):
         parent = parse(f)
     with open(args.change_dump) as f:
         change = parse(f)
+    for path, plans in ((args.parent_dump, parent), (args.change_dump, change)):
+        if not plans:
+            print(f"{path}: no '===== name =====' query header; "
+                  "not a PlanDump output", file=sys.stderr)
+            return 2
     diff = differing(parent, change)
     unexpected = [n for n in diff if n not in expect]
     for n in diff:

@@ -104,6 +104,19 @@ class PlanDiffTest(unittest.TestCase):
         code, _ = self.run_main("--expect", "q_changed,q_gone")
         self.assertEqual(code, 1)
 
+    def test_a_dump_without_queries_is_an_error(self):
+        garbage = os.path.join(self.dir.name, "garbage.txt")
+        with open(garbage, "w") as f:
+            f.write("Exception in thread main java.lang.OutOfMemoryError\n")
+        for pair in ([garbage, garbage], [self.parent, garbage],
+                     [garbage, self.change]):
+            err = io.StringIO()
+            with contextlib.redirect_stdout(io.StringIO()), \
+                    contextlib.redirect_stderr(err):
+                code = plan_diff.main(pair)
+            self.assertEqual(code, 2, pair)
+            self.assertIn("no '===== name =====' query header", err.getvalue())
+
 
 if __name__ == "__main__":
     unittest.main()
