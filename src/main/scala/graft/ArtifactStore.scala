@@ -428,10 +428,10 @@ object ArtifactStore {
     * completion marker LAST. A crash at any point leaves either the
     * previous complete artifact (state not yet flipped) or no complete
     * artifact (fresh dir, marker never written) — never a torn one.
-    * The row count is read back from the written parquet's footers
-    * (no data scan). One superseded data version is retained for
-    * in-session readers; older ones and any legacy metadata files are
-    * swept after the flip. */
+    * The row count comes from a count job over the written parquet.
+    * One superseded data version is retained for in-session readers;
+    * older ones and any legacy metadata files are swept after the
+    * flip. */
   def save(df: DataFrame, path: String,
       parentOf: Option[String] = None): Unit =
     if (!isUncacheable(path)) withWriteLock(path) {
@@ -440,7 +440,7 @@ object ArtifactStore {
       val prevFolded = foldedTags(path)
       val dv = nextDataDir(path)
       df.write.mode("overwrite").parquet(s"$path/$dv")
-      val n = df.sparkSession.read.parquet(s"$path/$dv").count()
+      val n = Tables.parquet(df.sparkSession, s"$path/$dv").count()
       parentOf.foreach(p => write(s"$path/_GRAFT_PARENT", p))
       atomicWrite(s"$path/_GRAFT_STATE", stateJson(State(dv, n, Set.empty)))
       write(s"$path/_GRAFT_OK", "")
@@ -486,7 +486,7 @@ object ArtifactStore {
     if (cacheDisabled || isUncacheable(path) ||
         !java.nio.file.Files.exists(
           java.nio.file.Paths.get(s"$path/_GRAFT_OK"))) None
-    else stateOf(path).map(s => spark.read.parquet(s"$path/${s.data}"))
+    else stateOf(path).map(s => Tables.parquet(spark, s"$path/${s.data}"))
 
   /** The ingest batch's OWN delta dir of the chain at `parentPath`, as
     * a frame — the UPSTREAM-DELTA read (round-17, the r16 `weak`'s
@@ -561,7 +561,7 @@ object ArtifactStore {
         .filter(d => tagOf(parentName, new java.io.File(d).getName)
           != excludeTag)
         .foldLeft(base)((acc, d) =>
-          acc.unionByName(spark.read.parquet(dataPath(d))))
+          acc.unionByName(Tables.parquet(spark, dataPath(d))))
     }
 
   /** Load-or-derive: serve the persisted artifact when present, else
@@ -615,7 +615,7 @@ object ArtifactStore {
   private def resolveChain(spark: SparkSession, parentPath: String,
       parent: DataFrame): DataFrame =
     deltasOf(parentPath).foldLeft(parent) { (acc, d) =>
-      acc.unionByName(spark.read.parquet(dataPath(d)))
+      acc.unionByName(Tables.parquet(spark, dataPath(d)))
     }
 
   /** Incremental maintenance — the append path the 100 TB ingest story
@@ -725,7 +725,7 @@ object ArtifactStore {
       case None => false
       case Some(parent) =>
         val resolved = deltas.foldLeft(parent) { (acc, d) =>
-          acc.unionByName(spark.read.parquet(dataPath(d)))
+          acc.unionByName(Tables.parquet(spark, dataPath(d)))
         }
         rewriteChain(spark, parentPath, deltas, Set.empty, resolved)
         true
@@ -773,7 +773,7 @@ object ArtifactStore {
     val prevFolded = foldedTags(parentPath)
     val dv = nextDataDir(parentPath)
     content.write.mode("overwrite").parquet(s"$parentPath/$dv")
-    val n = spark.read.parquet(s"$parentPath/$dv").count()
+    val n = Tables.parquet(spark, s"$parentPath/$dv").count()
     val tags = prevFolded ++ extraFolded ++
       deltas.map(d => tagOf(parentName, new java.io.File(d).getName))
     atomicWrite(s"$parentPath/_GRAFT_STATE",

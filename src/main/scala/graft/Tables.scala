@@ -1,7 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table access layer over the driver's parquet testdata
   * (TESTDATA.md; schemas in FIXTURES.md §B).
@@ -13,12 +19,46 @@ import org.apache.spark.sql.functions._
   * All readers are plain parquet scans — Catalyst pushes filters and
   * column pruning into the scan, so callers should NOT pre-select or
   * cache here; at 100 TB the scan must see the final pruned schema.
+  * Readers carry the footer schema ([[parquet]]), so building a scan
+  * launches no schema-inference job.
   */
 object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(path(dir, name))
+    parquet(spark, path(dir, name))
+
+  /** The parquet at `path`, read with its schema declared from
+    * [[footerSchema]]. Without a declared schema Spark infers it on
+    * every read by running a one-task job that reads one footer. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
+  /** The Spark schema of the parquet at `path` from ONE footer, read on
+    * the driver: the file itself, or for a directory its first data
+    * file by name (names starting with `_` or `.` are markers and
+    * checksums). Spark's own footer conversion under the session conf
+    * does the mapping, so the Spark row-metadata key, `nanosAsLong` and
+    * NTZ inference follow the same rules as Spark's schema inference. */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val status = fs.getFileStatus(p)
+    val file =
+      if (!status.isDirectory) status
+      else fs.listStatus(p)
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.getName).headOption
+        .getOrElse(throw new java.io.FileNotFoundException(
+          s"no parquet data file in $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    try ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally reader.close()
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "nation")
@@ -31,7 +71,7 @@ object Tables {
     * physical types across rounds — INT64 TIMESTAMP(NANOS) (rounds ≤6)
     * and naive `timestamp[us]` (round 7+) — so the reader is
     * schema-adaptive rather than assuming either. [[normalizeEventTs]]
-    * branches on the type Spark actually inferred; downstream code
+    * branches on the type the footer maps to; downstream code
     * always sees `ts` as session-local TimestampType. */
   def events(spark: SparkSession, dir: String): DataFrame =
     normalizeEventTs(read(spark, dir, "events"))

@@ -692,8 +692,8 @@ object PipelineOps {
         org.apache.spark.sql.DataFrame)] =
     if (graft.ArtifactStore.cacheDisabled || !java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$path/_GRAFT_BPE_OK"))) None
-    else Some((spark.read.parquet(s"$path/merges"),
-      spark.read.parquet(s"$path/vocab")))
+    else Some((Tables.parquet(spark, s"$path/merges"),
+      Tables.parquet(spark, s"$path/vocab")))
 
   /** Train-ONCE state access: load the persisted (merges, vocab) pair
     * when the store has it; otherwise train, save, and serve the

@@ -152,11 +152,12 @@ object EventStreams {
   /** Streaming file sources need a declared schema, and the driver has
     * shipped `events.ts` as both INT64 nanos (LongType under
     * `nanosAsLong`) and naive `timestamp[us]` (TimestampNTZType) across
-    * rounds — so declare whatever a batch peek of the same file infers,
-    * then normalize `ts` with [[Tables.normalizeEventTs]] exactly like
-    * the batch reader. The peek reads only footer metadata, not data. */
+    * rounds — so declare the schema the batch reader gets from the same
+    * file ([[Tables.footerSchema]]), then normalize `ts` with
+    * [[Tables.normalizeEventTs]] exactly like the batch reader. The peek
+    * reads only footer metadata, not data. */
   private def eventsSchema(spark: SparkSession, dir: String): StructType =
-    spark.read.parquet(s"$dir/events.parquet").schema
+    Tables.footerSchema(spark, Tables.path(dir, "events"))
 
   /** The streaming form of [[evtTumblingWindow]]: readStream over the
     * same parquet, 1-hour tumbling windows with a 2-hour watermark,

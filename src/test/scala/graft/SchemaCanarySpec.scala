@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * under us twice (rounds 6-7): the testdata's `events.ts` physical
   * parquet type, and the timestamp logical type the Verify dump
   * writes. If either shifts again, ONE named test fails here instead
-  * of 27 queries going red in the round gate. */
+  * of 27 queries going red in the round gate. Also pins
+  * [[Tables.parquet]]: its footer-declared schema is the one Spark
+  * infers, and serving reads launch no inference job. */
 class SchemaCanarySpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -117,6 +119,104 @@ class SchemaCanarySpec extends AnyFunSuite {
             s"$kind-exactness — testdata precision drifted; the " +
             "cents()/integral aggregation paths would quantize")
     }
+  }
+
+  /** The frame [[Tables.parquet]] reads at `path` has exactly the
+    * schema Spark's own inference gives it. */
+  private def assertInferredSchema(path: String): Unit = {
+    val declared = Tables.parquet(spark, path).schema
+    val inferred = spark.read.parquet(path).schema
+    assert(declared == inferred,
+      s"$path: footer schema $declared, inferred $inferred")
+  }
+
+  test("Tables.parquet: every table of every SF dir present reads with " +
+    "the inferred schema (events.ts nanos and NTZ variants included)") {
+    val dirs = new java.io.File(sf).getParentFile.listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("sf"))
+      .map(_.getAbsolutePath).sorted
+    assert(dirs.nonEmpty, "no testdata SF dirs found")
+    for (dir <- dirs; (name, _) <- Tables.allReaders)
+      assertInferredSchema(Tables.path(dir, name))
+  }
+
+  test("Tables.parquet: an artifact-store base and delta, and a BPE " +
+    "vocab dir (array<string>, non-nullable long), read with the " +
+    "inferred schema") {
+    val root = "target/tmp/test_schema_canary"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val parent = s"$root/bands_src_v1_aaaaaaaaaaaa"
+    def rows(ids: Seq[Long]) = ids.toDF("doc_id")
+      .select(col("doc_id"), (col("doc_id") % 2).cast("int").as("band"),
+        array(col("doc_id").cast("string")).as("key"))
+    ArtifactStore.appendedCached(spark, parent, "b1", autoCompactAt = 0)(
+      rows(Seq(1L, 2L, 3L)))(rows(Seq(5L)))
+    assertInferredSchema(ArtifactStore.dataPath(parent))
+    assertInferredSchema(ArtifactStore.dataPath(
+      ArtifactStore.childPathFor(parent, "b1")))
+
+    val bpe = s"$root/bpe"
+    val docs = Seq((1L, "low low lower newest newest widest"))
+      .toDF("doc_id", "text")
+    operators.PipelineOps.bpeTrainedState(docs, 2, bpe)
+    assertInferredSchema(s"$bpe/vocab")
+    assertInferredSchema(s"$bpe/merges")
+  }
+
+  test("Tables.parquet: a missing path and a directory holding only " +
+    "_SUCCESS each fail with an error naming the path") {
+    val root = new java.io.File("target/tmp/test_schema_canary_err")
+      .getAbsolutePath
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    val missing = s"$root/missing.parquet"
+    val e1 = intercept[java.io.IOException](Tables.parquet(spark, missing))
+    assert(e1.getMessage.contains(missing), e1.getMessage)
+    val empty = s"$root/empty.parquet"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(empty))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$empty/_SUCCESS"),
+      Array.emptyByteArray)
+    val e2 = intercept[java.io.IOException](Tables.parquet(spark, empty))
+    assert(e2.getMessage.contains(empty), e2.getMessage)
+  }
+
+  test("serving reads launch no schema-inference job: the dashboard's " +
+    "11 serving queries plus pipe_admit_full, planned and run on warm " +
+    "stores, start no stage from inside a DataFrameReader") {
+    val names = Seq("flt_eq", "agg_kpis", "agg_collect_list",
+      "win_rank_kinds", "join_semi", "evt_tumbling_window",
+      "join_pair_onepass", "topk_heap_per_group", "agg_theta_setops_exact",
+      "join_skew_salted", "ml_forecast", "pipe_admit_full")
+    // building a query loads its stores, deriving any still cold
+    names.foreach(SparkEntry.queries(_)(spark, sf))
+    // A job started while a reader is built is Spark's schema inference:
+    // its call site's first frame is the DataFrameReader method (Spark
+    // skips its own internal frames, so the inference code itself never
+    // shows in the call site).
+    val readerStages = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marker = "schemaCanaryMarker"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler
+          .SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.details.linesIterator.nextOption()
+            .exists(_.contains(".DataFrameReader.")))
+          readerStages.add(e.stageInfo.name)
+      override def onStageCompleted(e: org.apache.spark.scheduler
+          .SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == marker)) drained.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      names.foreach(n => SparkEntry.queries(n)(spark, sf)
+        .write.format("noop").mode("overwrite").save())
+      // listener events arrive in order: once the marker's stage is
+      // seen, every stage of the queries above has been seen
+      spark.sparkContext.parallelize(Seq(1), 1).setName(marker).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not drain")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(readerStages.isEmpty,
+      s"schema-inference stages: ${readerStages.toArray.mkString(", ")}")
   }
 
   test("dump canary: a TimestampType column written through the " +

@@ -123,15 +123,21 @@ else
   record "plan_audit" "FAILED" "\"rc\":$rc,\"census\":$(jesc "${census:-none}")"
 fi
 
-# full test suite
-tests=$(sbt -batch test 2>&1 | grep -E "Tests: " | tail -1)
+# full test suite, counted from sbt's aggregate line over every test
+# framework ("Passed: Total N, Failed F, Errors E, Passed P", with
+# "Failed:" or "Error:" leading when something broke); ScalaTest's own
+# "Tests: succeeded N" line leaves out the ScalaCheck properties
+tests=$(sbt -batch test 2>&1 | grep -E "(Passed|Failed|Error): Total [0-9]+" | tail -1)
 rc=$?
-succ=$(echo "$tests" | grep -oE 'succeeded [0-9]+' | grep -oE '[0-9]+' || echo -1)
-fails=$(echo "$tests" | grep -oE 'failed [0-9]+' | grep -oE '[0-9]+' || echo -1)
-if [ $rc -eq 0 ] && [ "$fails" = "0" ] && [ "$succ" -gt 0 ]; then
-  record "sbt_test" "PASS" "\"succeeded\":$succ,\"failed\":$fails" "($tests)"
+total=$(echo "$tests" | grep -oE 'Total [0-9]+' | grep -oE '[0-9]+' || echo -1)
+fails=$(echo "$tests" | grep -oE 'Failed [0-9]+' | grep -oE '[0-9]+' || echo -1)
+errs=$(echo "$tests" | grep -oE 'Errors [0-9]+' | grep -oE '[0-9]+' || echo -1)
+succ=$(echo "$tests" | grep -oE 'Passed [0-9]+' | grep -oE '[0-9]+' || echo -1)
+counts="\"total\":$total,\"succeeded\":$succ,\"failed\":$fails,\"errors\":$errs"
+if [ $rc -eq 0 ] && [ "$fails" = "0" ] && [ "$errs" = "0" ] && [ "$succ" -gt 0 ]; then
+  record "sbt_test" "PASS" "$counts" "($tests)"
 else
-  record "sbt_test" "FAILED" "\"succeeded\":$succ,\"failed\":$fails,\"raw\":$(jesc "$tests")"
+  record "sbt_test" "FAILED" "$counts,\"raw\":$(jesc "$tests")"
 fi
 
 # tools/plan_diff.py's own unit tests: the plan-identity checks trust
