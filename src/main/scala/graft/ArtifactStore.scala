@@ -428,7 +428,8 @@ object ArtifactStore {
     * completion marker LAST. A crash at any point leaves either the
     * previous complete artifact (state not yet flipped) or no complete
     * artifact (fresh dir, marker never written) — never a torn one.
-    * The row count comes from a count job over the written parquet.
+    * The row count is the sum of the written files' footer row counts
+    * ([[Tables.footerRowCount]]), so recording it runs no Spark job.
     * One superseded data version is retained for in-session readers;
     * older ones and any legacy metadata files are swept after the
     * flip. */
@@ -440,7 +441,7 @@ object ArtifactStore {
       val prevFolded = foldedTags(path)
       val dv = nextDataDir(path)
       df.write.mode("overwrite").parquet(s"$path/$dv")
-      val n = Tables.parquet(df.sparkSession, s"$path/$dv").count()
+      val n = Tables.footerRowCount(df.sparkSession, s"$path/$dv")
       parentOf.foreach(p => write(s"$path/_GRAFT_PARENT", p))
       atomicWrite(s"$path/_GRAFT_STATE", stateJson(State(dv, n, Set.empty)))
       write(s"$path/_GRAFT_OK", "")
@@ -773,7 +774,7 @@ object ArtifactStore {
     val prevFolded = foldedTags(parentPath)
     val dv = nextDataDir(parentPath)
     content.write.mode("overwrite").parquet(s"$parentPath/$dv")
-    val n = Tables.parquet(spark, s"$parentPath/$dv").count()
+    val n = Tables.footerRowCount(spark, s"$parentPath/$dv")
     val tags = prevFolded ++ extraFolded ++
       deltas.map(d => tagOf(parentName, new java.io.File(d).getName))
     atomicWrite(s"$parentPath/_GRAFT_STATE",

@@ -1,13 +1,19 @@
 package graft
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.format.converter.ParquetMetadataConverter.MetadataFilter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetFileFormat, ParquetToSparkSchemaConverter}
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** Table access layer over the driver's parquet testdata
   * (TESTDATA.md; schemas in FIXTURES.md §B).
@@ -20,7 +26,10 @@ import org.apache.spark.sql.types.StructType
   * column pruning into the scan, so callers should NOT pre-select or
   * cache here; at 100 TB the scan must see the final pruned schema.
   * Readers carry the footer schema ([[parquet]]), so building a scan
-  * launches no schema-inference job.
+  * launches no schema-inference job. Footers are read on the driver
+  * with the session's Hadoop conf; [[footerRowCount]] gives a store
+  * write its row count from them, so recording it launches no count
+  * job either.
   */
 object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
@@ -36,28 +45,61 @@ object Tables {
 
   /** The Spark schema of the parquet at `path` from ONE footer, read on
     * the driver: the file itself, or for a directory its first data
-    * file by name (names starting with `_` or `.` are markers and
-    * checksums). Spark's own footer conversion under the session conf
-    * does the mapping, so the Spark row-metadata key, `nanosAsLong` and
-    * NTZ inference follow the same rules as Spark's schema inference. */
+    * file by name ([[dataFiles]]). Spark's own footer conversion under
+    * the session conf does the mapping, so the Spark row-metadata key,
+    * `nanosAsLong` and NTZ inference follow the same rules as Spark's
+    * schema inference. */
   def footerSchema(spark: SparkSession, path: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()
+    val file = dataFiles(conf, path).head
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath,
+        footer(file, conf, ParquetMetadataConverter.SKIP_ROW_GROUPS)),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** Rows in the parquet at `path`: the sum of the row-group row counts
+    * in the footers of every data file ([[dataFiles]]), read on the
+    * driver. Runs no Spark job. */
+  def footerRowCount(spark: SparkSession, path: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(conf, path).iterator.map { file =>
+      footer(file, conf, ParquetMetadataConverter.NO_FILTER)
+        .getBlocks.asScala.iterator.map(_.getRowCount).sum
+    }.sum
+  }
+
+  /** One footer, read with options built from `conf`. The one-argument
+    * `open` of parquet's file reader builds a default Hadoop
+    * `Configuration` instead, which re-parses the Hadoop XML defaults
+    * on every call (about 8 ms). */
+  private def footer(file: FileStatus, conf: Configuration,
+      filter: MetadataFilter): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      filter)
+
+  /** The data files of the parquet at `path`, by name: the file itself,
+    * or every file of the directory whose name does not start with `_`
+    * or `.` (markers and checksums). Fails naming `path` when the
+    * directory holds a subdirectory (a partitioned layout, whose files
+    * a flat listing would miss) or no data file. */
+  private def dataFiles(conf: Configuration, path: String): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val status = fs.getFileStatus(p)
-    val file =
-      if (!status.isDirectory) status
-      else fs.listStatus(p)
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
-        .sortBy(_.getPath.getName).headOption
-        .getOrElse(throw new java.io.FileNotFoundException(
-          s"no parquet data file in $path"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-    try ParquetFileFormat.readSchemaFromFooter(
-      new Footer(file.getPath, reader.getFooter),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    finally reader.close()
+    if (!status.isDirectory) Seq(status)
+    else {
+      val data = fs.listStatus(p).toSeq.filter { f =>
+        val name = f.getPath.getName
+        !name.startsWith("_") && !name.startsWith(".")
+      }.sortBy(_.getPath.getName)
+      data.find(_.isDirectory).foreach(d => throw new IllegalStateException(
+        s"parquet dir $path holds subdirectory ${d.getPath.getName}; " +
+          "only a flat dir of data files is read"))
+      if (data.isEmpty)
+        throw new java.io.FileNotFoundException(s"no parquet data file in $path")
+      data
+    }
   }
 
   def region(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "region")

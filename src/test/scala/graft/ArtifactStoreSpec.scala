@@ -180,6 +180,94 @@ class ArtifactStoreSpec extends AnyFunSuite {
     tags.foreach(t => rmStore(ArtifactStore.childPathFor(parent, t)))
   }
 
+  test("recorded row counts come from the written footers: a base of " +
+    "several files and row groups, a delta, an empty frame, and the " +
+    "compactChain and rebuildChain outputs each record the count of " +
+    "their data dir, and storedRowCount sums the chain") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+    val root = "target/tmp/test_artifact_store"
+    val parent = s"$root/footrows_src_v1_cccccccccccc"
+    val empty = s"$root/footempty_src_v1_dddddddddddd"
+    val tags = Seq("r1", "r2")
+    rmStore(parent); rmStore(empty)
+    tags.foreach(t => rmStore(ArtifactStore.childPathFor(parent, t)))
+    def recorded(path: String): Long = {
+      val state = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$path/_GRAFT_STATE")), "UTF-8")
+      "\"n_rows\":(\\d+)".r.findFirstMatchIn(state).get.group(1).toLong
+    }
+    def counted(path: String): Long =
+      spark.read.parquet(ArtifactStore.dataPath(path)).count()
+    // row groups per data file of a store, read from the footers
+    def rowGroups(path: String): Seq[Int] = {
+      val conf = spark.sessionState.newHadoopConf()
+      new java.io.File(ArtifactStore.dataPath(path)).listFiles()
+        .filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
+          ParquetFooterReader.readFooter(
+            HadoopInputFile.fromPath(new Path(f.getAbsolutePath), conf),
+            ParquetMetadataConverter.NO_FILTER).getBlocks.size
+        }
+    }
+    def frame(from: Long, n: Long) =
+      spark.range(from, from + n).select(col("id").as("doc_id"),
+        sha2(col("id").cast("string"), 256).as("k"))
+    val blockSize = "parquet.block.size"
+    spark.conf.set(blockSize, "4096")
+    try {
+      ArtifactStore.cached(spark, parent)(frame(0, 2000).repartition(4))
+      val groups = rowGroups(parent)
+      assert(groups.size == 4 && groups.forall(_ > 1),
+        s"base should span 4 files of several row groups each: $groups")
+    } finally spark.conf.unset(blockSize)
+    assert(recorded(parent) == 2000L && counted(parent) == 2000L)
+
+    ArtifactStore.appendedCached(spark, parent, "r1")(
+      fail("base re-derived"))(frame(5000, 37).repartition(2))
+    val d1 = ArtifactStore.childPathFor(parent, "r1")
+    assert(recorded(d1) == counted(d1) && recorded(d1) == 37L)
+    assert(ArtifactStore.storedRowCount(parent).contains(2037L))
+
+    ArtifactStore.cached(spark, empty)(frame(0, 0))
+    assert(recorded(empty) == 0L && counted(empty) == 0L)
+    assert(ArtifactStore.storedRowCount(empty).contains(0L))
+
+    assert(ArtifactStore.compactChain(spark, parent))
+    assert(recorded(parent) == counted(parent) && recorded(parent) == 2037L)
+    assert(ArtifactStore.storedRowCount(parent).contains(2037L))
+
+    ArtifactStore.appendedCached(spark, parent, "r2")(
+      fail("base re-derived"))(frame(6000, 5))
+    assert(ArtifactStore.storedRowCount(parent).contains(2042L))
+    assert(ArtifactStore.rebuildChain(spark, parent)(
+      frame(0, 1500).repartition(3)))
+    assert(recorded(parent) == counted(parent) && recorded(parent) == 1500L)
+    assert(ArtifactStore.storedRowCount(parent).contains(1500L),
+      "rebuild folds the live delta: the chain is the rebuilt base alone")
+
+    rmStore(parent); rmStore(empty)
+    tags.foreach(t => rmStore(ArtifactStore.childPathFor(parent, t)))
+  }
+
+  test("footer reads reject a data dir holding a subdirectory, naming " +
+    "it: a partitioned layout is never silently undercounted") {
+    import spark.implicits._
+    val dir = new java.io.File("target/tmp/test_artifact_store/footsub")
+      .getAbsolutePath
+    rmStore(dir)
+    Seq((1L, "a"), (2L, "b")).toDF("doc_id", "k")
+      .write.partitionBy("k").parquet(dir)
+    val e1 = intercept[IllegalStateException](
+      Tables.footerRowCount(spark, dir))
+    assert(e1.getMessage.contains(dir) && e1.getMessage.contains("k=a"),
+      e1.getMessage)
+    val e2 = intercept[IllegalStateException](Tables.parquet(spark, dir))
+    assert(e2.getMessage.contains(dir), e2.getMessage)
+    rmStore(dir)
+  }
+
   test("auto-compaction policy: the append that reaches the threshold " +
     "folds the chain as part of the write (readers never pay it), the " +
     "served frame == derive(full), the post-compaction plan is ONE " +

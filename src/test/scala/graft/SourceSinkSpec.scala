@@ -35,6 +35,7 @@ class SourceSinkSpec extends AnyFunSuite {
     val out = s"target/tmp/sorted_events_${sf.replaceAll("[^a-zA-Z0-9]", "_")}"
     // read the footers the way the scan's row-group pruner does —
     // min/max stats only, no data pages
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.hadoop.fs.Path
@@ -44,7 +45,9 @@ class SourceSinkSpec extends AnyFunSuite {
       .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
     assert(files.length == 4, s"expected 4 range-partitioned files: ${files.length}")
     val bands = files.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      val path = new Path(f)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+        HadoopReadOptions.builder(conf, path).build())
       try {
         val stats = reader.getFooter.getBlocks.asScala.map { block =>
           val col = block.getColumns.asScala
@@ -80,6 +83,7 @@ class SourceSinkSpec extends AnyFunSuite {
     val df = sources.SourceQueries.snkZorderPrune(spark, sf)
     df.collect() // runs the write
     val out = s"target/tmp/zorder_events_${sf.replaceAll("[^a-zA-Z0-9]", "_")}"
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.hadoop.fs.Path
@@ -89,7 +93,9 @@ class SourceSinkSpec extends AnyFunSuite {
       .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
     assert(files.length > 1, s"need multiple z-range files: ${files.length}")
     def band(f: String, colName: String): (Long, Long) = {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      val path = new Path(f)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+        HadoopReadOptions.builder(conf, path).build())
       try {
         val stats = reader.getFooter.getBlocks.asScala.map { block =>
           val c = block.getColumns.asScala

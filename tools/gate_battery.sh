@@ -140,6 +140,41 @@ else
   record "sbt_test" "FAILED" "$counts,\"raw\":$(jesc "$tests")"
 fi
 
+# parquet footers are read with the session's Hadoop conf: the
+# one-argument ParquetFileReader.open(InputFile) builds a default
+# Configuration, which re-parses the Hadoop XML defaults on every call
+# (about 8 ms). Any call under src/ (main and test) whose argument list
+# has no top-level comma fails the gate.
+footer_check=$(python3 - <<'EOF'
+import pathlib, re, sys
+bad = []
+for f in sorted(pathlib.Path("src").rglob("*.scala")):
+    text = f.read_text()
+    for m in re.finditer(r"ParquetFileReader\s*\.\s*open\s*\(", text):
+        depth, commas, i = 1, 0, m.end()
+        while i < len(text) and depth:
+            c = text[i]
+            if c in "([{":
+                depth += 1
+            elif c in ")]}":
+                depth -= 1
+            elif c == "," and depth == 1:
+                commas += 1
+            i += 1
+        if commas == 0:
+            bad.append(f"{f}:{text.count(chr(10), 0, m.start()) + 1}")
+if bad:
+    print("one-argument ParquetFileReader.open at " + ", ".join(bad))
+    sys.exit(1)
+print("every ParquetFileReader.open under src/ passes read options")
+EOF
+)
+if [ $? -eq 0 ]; then
+  record "footer_conf" "PASS" "\"detail\":$(jesc "$footer_check")"
+else
+  record "footer_conf" "FAILED" "\"detail\":$(jesc "$footer_check")"
+fi
+
 # tools/plan_diff.py's own unit tests: the plan-identity checks trust
 # its exit code, so a broken normaliser or parser must fail here first
 pd=$(python3 -m unittest tools/test_plan_diff.py 2>&1)
