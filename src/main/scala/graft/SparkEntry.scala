@@ -6,8 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Every operator in SURVEY.md §2 registers a query here; the matching
   * DuckDB oracle SQL (same column names, same determinism rules) lives in
-  * [[oracleSql]]. Non-SQL-expressible operators (MLlib, LSH internals,
-  * streaming) register a query only → driver runs a rows-only check.
+  * [[oracleSql]]. Non-SQL-expressible operators (model training, LSH
+  * internals, streaming) register a query only → driver runs a rows-only
+  * check.
   */
 object SparkEntry {
 

@@ -2,11 +2,8 @@ package graft.ml
 
 import graft.{Q, Tables}
 import graft.operators.JoinWindowQueries
-import org.apache.spark.ml.PredictionModel
-import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor, RandomForestRegressionModel, RandomForestRegressor}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.SparkFiles
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** M5 — demand-forecasting parity (SURVEY.md §7.1, EP3): the reference
@@ -14,30 +11,25 @@ import org.apache.spark.sql.functions._
   * a hyperparameter grid (RF 3×3, SVR 3×3, MLP ×9 — EDA.ipynb cells
   * 58/60/62), selects each product's winner by MAPE, and persists one
   * model per product (EDA.ipynb cell 69 → `best_model_{product}.pkl`,
-  * served at dashboard.py:747-758). MLlib has no epsilon-SVR / MLP
-  * regression, so the second and third families are delivered with
-  * GBTRegressor alongside RandomForestRegressor (SURVEY.md §7.3.4
-  * documents the substitution); the capability — multi-family grid,
-  * per-product MAPE selection, persisted winner — is preserved.
+  * served at dashboard.py:747-758). Here the families are the
+  * [[LocalTrees]] random forest and gradient-boosted trees on the [[Grid]],
+  * plus a closed-form OLS day-trend line that competes in every
+  * product's selection (SURVEY.md §7.3.4 documents the substitution for
+  * SVR/MLP); the capability — multi-family grid, per-product MAPE
+  * selection, persisted winner — is preserved.
   *
   * Split protocol mirrors the reference: holdout = last 14 days before
   * max(date) (dashboard.py:717-731); grid/family selection by MAPE on
   * the 14 days before that.
   *
-  * Two training paths, each in its scale-correct shape:
-  *  - [[trainBest]]: ONE pooled model — MLlib grid search across both
-  *    families ranked by validation MAPE (distributed fits; this is
-  *    the path that still works when a single model trains on more
-  *    rows than one machine holds). Feeds the persistence round trip.
-  *  - [[trainPerProduct]]: one model PER product — the full grid fit
-  *    by deterministic local tree learners ([[LocalTrees]]) inside
-  *    `flatMapGroups`. Per-key model fitting through driver-side MLlib
-  *    loops schedules thousands of tiny jobs (146 s at sf0.1,
-  *    measured); grouped local training is one shuffle + in-executor
-  *    math (~6.6 s of training at sf0.1), and is the only shape that
-  *    survives millions of keys. Per-product training sets are bounded
-  *    by the date grain (≤ dates rows per group), so groups always fit
-  *    in a task.
+  * One training path, [[trainPerProductModels]]: the full grid fit per
+  * product by deterministic local learners inside partition-local
+  * grouping. Per-key model fitting through driver-side loops schedules
+  * thousands of tiny jobs (146 s at sf0.1, measured); grouped local
+  * training is one shuffle + in-executor math (~6.6 s of training at
+  * sf0.1), and is the only shape that survives millions of keys.
+  * Per-product training sets are bounded by the date grain (≤ dates rows
+  * per group), so groups always fit in a task.
   */
 object Forecast {
 
@@ -47,98 +39,14 @@ object Forecast {
   /** One grid point: a model family + its two hyperparameters
     * (RF: numTrees×maxDepth; GBT: maxIter×maxDepth). */
   final case class Config(family: String, a: Int, b: Int) {
-    def fit(train: Dataset[_]): PredictionModel[Vector, _] = family match {
-      case "rf" =>
-        new RandomForestRegressor()
-          .setNumTrees(a).setMaxDepth(b).setSeed(42).fit(train)
-      case "gbt" =>
-        new GBTRegressor()
-          .setMaxIter(a).setMaxDepth(b).setSeed(42).fit(train)
-    }
     override def toString = s"$family($a,$b)"
   }
 
   /** RF 3×3 (numTrees × maxDepth) + GBT 3 — the reference's 3-family
-    * grid re-expressed over the two MLlib tree families. */
+    * grid re-expressed over the two [[LocalTrees]] ensemble families. */
   val Grid: Seq[Config] =
     (for { n <- Seq(20, 40, 60); d <- Seq(4, 6, 8) } yield Config("rf", n, d)) ++
       Seq(Config("gbt", 10, 3), Config("gbt", 20, 3), Config("gbt", 20, 5))
-
-  /** Lag-feature matrix with the train/val/test date boundaries attached.
-    * Cached before the max-date probe so the lag pipeline (join + window
-    * over the daily aggregate) runs once, not once per grid fit. */
-  def featureFrame(spark: SparkSession, dir: String): (DataFrame, java.sql.Date, java.sql.Date) = {
-    val feats = JoinWindowQueries.winLagFeaturesBase(spark, dir).cache()
-    val maxDate = feats.agg(max(col("sale_date"))).head.getDate(0)
-    val testCut = java.sql.Date.valueOf(maxDate.toLocalDate.minusDays(14))
-    val valCut  = java.sql.Date.valueOf(maxDate.toLocalDate.minusDays(28))
-    (feats, valCut, testCut)
-  }
-
-  /** MAPE as a plain aggregate expression (SURVEY.md §2.K) — the
-    * reference's model-selection metric. */
-  def mape(df: DataFrame, label: String, pred: String): Double =
-    mapeOpt(df, label, pred).getOrElse(Double.NaN)
-
-  /** MAPE, None when the frame has no nonzero-label rows. */
-  def mapeOpt(df: DataFrame, label: String, pred: String): Option[Double] = {
-    val r = df.where(col(label) =!= 0)
-      .agg(avg(abs((col(label) - col(pred)) / col(label)))).head
-    if (r.isNullAt(0)) None else Some(r.getDouble(0))
-  }
-
-  /** Assembled feature matrix (cached, 8 partitions — tree ensembles pay
-    * per-partition aggregation overhead, so fewer partitions of a
-    * ~10^5-row matrix train faster than 32; measured at local[32]). */
-  def assembledFrame(spark: SparkSession, dir: String): (DataFrame, java.sql.Date, java.sql.Date) = {
-    val (feats, valCut, testCut) = featureFrame(spark, dir)
-    val assembler = new VectorAssembler()
-      .setInputCols(LagCols.toArray).setOutputCol("features")
-    val assembled = assembler.transform(feats)
-      .select(col("sale_date"), col("product"),
-        col("total_quantity").as("label"), col("features"))
-      .coalesce(8)
-      .cache()
-    assembled.count() // materialize, then drop the upstream cache
-    feats.unpersist()
-    (assembled, valCut, testCut)
-  }
-
-  private def fitPool[A, B](items: Seq[A], threads: Int)(f: A => B): Seq[B] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val exec = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(exec)
-    try Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
-    finally exec.shutdown()
-  }
-
-  /** Stage 1 — pooled grid search: every [[Grid]] config fits once on
-    * the pooled training rows, ranked by validation MAPE. Grid points
-    * train as concurrent Spark jobs (the scheduler interleaves their
-    * stages across the executor pool). */
-  def gridSearch(assembled: DataFrame, valCut: java.sql.Date,
-      testCut: java.sql.Date): Seq[(Config, Double)] = {
-    val train = assembled.where(col("sale_date") <= lit(valCut))
-    val validation = assembled.where(col("sale_date") > lit(valCut) &&
-      col("sale_date") <= lit(testCut))
-    fitPool(Grid, threads = 4) { cfg =>
-      val m = cfg.fit(train)
-      cfg -> mape(m.transform(validation), "label", "prediction")
-    }.sortBy { case (cfg, m) => (m, cfg.toString) } // deterministic ties
-  }
-
-  /** Pooled winner across both families, refit on train+val, scored on
-    * the holdout — the "one global model" entry point kept for the
-    * persistence spec and as the cheap flagship. */
-  def trainBest(spark: SparkSession, dir: String): (PredictionModel[Vector, _], DataFrame) = {
-    val (assembled, valCut, testCut) = assembledFrame(spark, dir)
-    val best = gridSearch(assembled, valCut, testCut).head._1
-    val refit = best.fit(assembled.where(col("sale_date") <= lit(testCut)))
-    val scored = refit.transform(assembled.where(col("sale_date") > lit(testCut)))
-    assembled.unpersist()
-    (refit, scored)
-  }
 
   /** One product's trained outcome: the MAPE-selected winner among the
     * per-family candidates, refit on train+val, scored on the holdout. */
@@ -158,13 +66,13 @@ object Forecast {
     case "gbt" => LocalTrees.fitGbt(b, xs, y, rows, cfg.a, cfg.b, seed)
   }
 
-  /** Stage 2 — per-product selection (reference fidelity: one winner
-    * per product, EDA.ipynb cell 69). The FULL grid — both families —
-    * is fit per product with deterministic local tree learners
-    * ([[LocalTrees]]) inside `flatMapGroups`: one shuffle by product,
-    * then every group trains in-process in its executor task, exactly
-    * how the reference's per-product sklearn fits run. Driving MLlib
-    * per product instead serializes thousands of tiny driver-scheduled
+  /** Per-product selection (reference fidelity: one winner per
+    * product, EDA.ipynb cell 69). The FULL grid — both families — is
+    * fit per product with deterministic local tree learners
+    * ([[LocalTrees]]) inside partition-local grouping: one shuffle by
+    * product, then every group trains in-process in its executor task,
+    * exactly how the reference's per-product sklearn fits run. Driving
+    * MLlib per product instead serializes thousands of tiny driver-scheduled
     * jobs (measured 146 s at sf0.1 vs ~2 s for this form), and at
     * millions of keys only grouped local training survives at all.
     * Winner per product by its own validation MAPE, refit on
@@ -173,8 +81,8 @@ object Forecast {
     *
     * Emits the full [[ModelStore.ProductModel]] — selection metadata
     * PLUS the refit winner in serializable form — so the result feeds
-    * both the report ([[trainPerProduct]] projects the winner row) and
-    * the reference's persistence path (`best_model_{product}.pkl` ≙
+    * both the report ([[ModelStore.ProductModel.winner]]) and the
+    * reference's persistence path (`best_model_{product}.pkl` ≙
     * [[ModelStore.save]], one parquet partition per product). */
   def trainPerProductModels(spark: SparkSession,
       dir: String): Dataset[ModelStore.ProductModel] = {
@@ -332,13 +240,6 @@ object Forecast {
         }
   }
 
-  /** Winner-report view of [[trainPerProductModels]] (the `ml_forecast`
-    * surface: one metadata row per product, models dropped). */
-  def trainPerProduct(spark: SparkSession, dir: String): Dataset[ProductWinner] = {
-    import spark.implicits._
-    trainPerProductModels(spark, dir).map(_.winner)
-  }
-
   /** `ml_forecast` (rows-only — model internals aren't
     * SQL-expressible): one row per product — the per-product winning
     * family/config with its validation MAPE and holdout MAPE + RMSE.
@@ -367,35 +268,28 @@ object Forecast {
   }
 
   private val storeCache =
-    new scala.collection.concurrent.TrieMap[String, String]
+    new scala.collection.concurrent.TrieMap[(String, String), String]
 
   /** Train the per-product grid and persist the winners ONCE per
-    * (JVM, sf dir); later callers in the same session — the scoring
-    * query, repeated local iterations — reload from parquet instead of
-    * refitting an identical grid (seeded local learners are
-    * bit-deterministic, asserted in StreamMlSpec). The path is
-    * session-unique: a fixed name would race with a concurrent
-    * driver/bench process overwriting the same store mid-read. */
-  def persistedStore(spark: SparkSession, dir: String): String =
-    storeCache.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_model_store_${spark.sparkContext.applicationId}_" +
+    * (application, sf dir); later callers in the same application — the
+    * scoring query, repeated local iterations — reload from parquet
+    * instead of refitting an identical grid (seeded local learners are
+    * bit-deterministic, asserted in StreamMlSpec). The store lives in
+    * the driver's temp dir ([[SparkFiles.getRootDirectory]]), which is
+    * unique to the SparkContext, so a concurrent driver/bench process
+    * never overwrites it mid-read, and `SparkContext.stop` deletes it.
+    * The application id in the cache key keeps a context started after
+    * a stop from being handed the deleted path. */
+  def persistedStore(spark: SparkSession, dir: String): String = {
+    val app = spark.sparkContext.applicationId
+    storeCache.getOrElseUpdate((app, dir), {
+      val path = new java.io.File(SparkFiles.getRootDirectory(),
+        s"graft_model_store_${app}_" +
           dir.replaceAll("[^a-zA-Z0-9]", "_")).getPath
       ModelStore.save(trainPerProductModels(spark, dir), path)
       path
     })
-
-  /** Model persistence round trip (§2.A joblib.dump/load parity) for
-    * either tree family. */
-  def saveLoadRoundTrip(model: PredictionModel[Vector, _], path: String): PredictionModel[Vector, _] =
-    model match {
-      case m: RandomForestRegressionModel =>
-        m.write.overwrite().save(path); RandomForestRegressionModel.load(path)
-      case m: GBTRegressionModel =>
-        m.write.overwrite().save(path); GBTRegressionModel.load(path)
-      case other =>
-        sys.error(s"unsupported model type: ${other.getClass.getName}")
-    }
+  }
 
   def queries: Map[String, Q] = Map("ml_forecast" -> mlForecast)
   def oracles: Map[String, String] = Map.empty

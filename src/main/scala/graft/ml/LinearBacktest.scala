@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * Per product: fit slope/intercept on all days up to max(date)−14d
   * (exact integer power sums — the `agg_trend_ols` machinery), predict
   * the held-out days, and report MAPE. Unlike the tree-ensemble
-  * `ml_forecast` (rows-only by necessity — MLlib internals), every
+  * `ml_forecast` (rows-only: its trees are not SQL-expressible), every
   * number here replays bit-for-bit in DuckDB: the per-day absolute
   * percentage error is quantized to integer micro-units so the MAPE
   * numerator is an exact long sum (the unigram-perplexity doctrine —

@@ -324,36 +324,31 @@ class StreamMlSpec extends AnyFunSuite {
     assert(math.abs(a.count() / total - 0.7) < 0.05)
   }
 
-  test("pooled grid: both families evaluated, ranked by validation MAPE") {
-    val (assembled, valCut, testCut) = ml.Forecast.assembledFrame(spark, sf)
-    val ranked = ml.Forecast.gridSearch(assembled, valCut, testCut)
-    assembled.unpersist()
-    assert(ranked.map(_._1.family).distinct.sorted == Seq("gbt", "rf"),
-      "grid must span both model families")
-    assert(ranked.size == ml.Forecast.Grid.size, "every grid point evaluated")
-    assert(ranked.count(_._1.family == "rf") == 9, "RF grid is 3×3")
-    assert(ranked.head._2 == ranked.map(_._2).min,
-      "winner must minimize validation MAPE")
-  }
-
   test("per-product winners: one row per scoreable product, family " +
     "selected per product by validation MAPE") {
-    val winners = ml.Forecast.trainPerProduct(spark, sf).collect().toSeq
+    val grid = ml.Forecast.Grid
+    assert(grid.map(_.family).distinct.sorted == Seq("gbt", "rf"),
+      "grid must span both model families")
+    assert(grid.size == 12, "grid has 12 points")
+    assert(grid.count(_.family == "rf") == 9, "RF grid is 3×3")
+    val winners = ml.Forecast.trainPerProductModels(spark, sf).collect()
+      .map(_.winner).toSeq
     assert(winners.nonEmpty)
     assert(winners.map(_.product).distinct.size == winners.size,
       "exactly one winner row per product")
     assert(winners.forall(w => Set("rf", "gbt", "ols").contains(w.family)))
     assert(winners.forall(w => w.n_test > 0 && w.val_mape >= 0 && !w.rmse.isNaN))
     // seeded local learners: bit-identical at any parallelism
-    assert(winners == ml.Forecast.trainPerProduct(spark, sf).collect().toSeq)
+    assert(winners == ml.Forecast.trainPerProductModels(spark, sf).collect()
+      .map(_.winner).toSeq)
   }
 
   test("model-selection gate (round-11 judge item): per product, the grid " +
     "winner's validation MAPE beats-or-ties the OLS-trend baseline's MAPE " +
     "on the SAME validation window — the tree never silently loses to " +
     "the line it exists to beat (reference practice, EDA cells 58-69)") {
-    val winners = ml.Forecast.trainPerProduct(spark, sf).collect()
-      .map(w => w.product -> w.val_mape).toMap
+    val winners = ml.Forecast.trainPerProductModels(spark, sf).collect()
+      .map(_.winner).map(w => w.product -> w.val_mape).toMap
     // linear baseline scored on the grid's validation split: fit on
     // days <= max-28, score (max-28, max-14] — the window the winner
     // was SELECTED on, so the comparison is the selection itself
@@ -718,20 +713,5 @@ class StreamMlSpec extends AnyFunSuite {
       .repartition(7)
     assert(stateful(shuffled) == batch,
       "stateful CUSUM is arrival-order-dependent")
-  }
-
-  test("forecast: grid-searched model trains, persists, reloads, predicts " +
-    "identically (sf0.001)") {
-    val (model, scored) = ml.Forecast.trainBest(spark, sf)
-    assert(scored.count() > 0)
-    val m2 = ml.Forecast.saveLoadRoundTrip(model, "target/tmp/rf_model")
-    val p1 = scored.agg(org.apache.spark.sql.functions.sum("prediction"))
-      .head.getDouble(0)
-    val again = m2.transform(scored.drop("prediction"))
-    val p2 = again.agg(org.apache.spark.sql.functions.sum("prediction"))
-      .head.getDouble(0)
-    assert(math.abs(p1 - p2) < 1e-9)
-    val mape = ml.Forecast.mape(scored, "label", "prediction")
-    assert(mape > 0 && mape < 10, s"implausible MAPE $mape")
   }
 }

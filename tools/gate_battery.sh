@@ -175,6 +175,16 @@ else
   record "footer_conf" "FAILED" "\"detail\":$(jesc "$footer_check")"
 fi
 
+# the forecasting layer has one training path, the per-product local
+# learners (ml/LocalTrees.scala); any org.apache.spark.ml (or .mllib)
+# reference under src/main fails the gate
+ml_refs=$(grep -rn "org\.apache\.spark\.ml" src/main)
+if [ -z "$ml_refs" ]; then
+  record "no_spark_ml" "PASS" '"detail":"no org.apache.spark.ml reference under src/main"'
+else
+  record "no_spark_ml" "FAILED" "\"detail\":$(jesc "$ml_refs")"
+fi
+
 # tools/plan_diff.py's own unit tests: the plan-identity checks trust
 # its exit code, so a broken normaliser or parser must fail here first
 pd=$(python3 -m unittest tools/test_plan_diff.py 2>&1)

@@ -13,6 +13,9 @@ change from run to run without changing the plan:
     `MapPartitionsRDD[2537]`;
   - the numeric suffix of generated lambda variables (`lambda x_33`);
   - Spark application ids in temp paths (`local-1792248081146`);
+  - the directory holding a forecast model store (`graft_model_store_*`):
+    the driver's per-context temp dir, `spark-<uuid>/userFiles-<uuid>`,
+    or `java.io.tmpdir` in older dumps;
   - JVM lambda classes and object addresses (`$$Lambda$6089/0x7fe3@34a5`,
     `PairAgg$@35ad04e3`);
   - the checkout root, i.e. any path prefix before `/target/`.
@@ -36,6 +39,7 @@ NORMALISE = [
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_N"),
     (re.compile(r"local-\d+"), "local-APP"),
+    (re.compile(r"[^\s\[\],:]*/graft_model_store_"), "<tmp>/graft_model_store_"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda$N"),
     (re.compile(r"(\w\$?)@[0-9a-f]{5,}\b"), r"\1@ADDR"),
     (re.compile(r"[^\s\[\],:]*/target/"), "<root>/target/"),

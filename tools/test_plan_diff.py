@@ -13,8 +13,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import plan_diff  # noqa: E402
 
 # sbt-wrapped dump: log noise, per-run ids, a lambda suffix, an app id,
-# a JVM lambda class, an RDD id and the checkout root all differ from
-# CHANGE below
+# a model store's temp dir, a JVM lambda class, an RDD id and the
+# checkout root all differ from CHANGE below
 PARENT = """\
 [info] loading project definition from /ckpt/a/project
 [error] 26/10/17 14:38:58 INFO SparkContext: Running Spark version 4.1.2
@@ -44,7 +44,7 @@ Location: InMemoryFileIndex [file:/other/checkout/target/tmp/artifact_store/x_01
 Arguments: hashpartitioning(doc_id#912L, 4), ENSURE_REQUIREMENTS, [plan_id=7]
 (2) Project
 Output [1]: [transform(sh#913, lambdafunction(lambda x_7#5L + 1, lambda x_7#5L, false)) AS s#914]
-Location: InMemoryFileIndex [file:/tmp/graft_model_store_local-1792999999999__sf]
+Location: InMemoryFileIndex [file:/tmp/spark-local/spark-5d1c0b7e-3f7a-4c1e-9a51-0e2b6f8d4c11/userFiles-8e4f2a90-61b3-4d7c-b0a5-9c3e1f7d2b64/graft_model_store_local-1792999999999__sf]
 Arguments: graft.operators.MultimodalQueries$$$Lambda$7001/0x00007f0000000001@1a2b3c4d
 Functions [1]: [pairagg(graft.plans.PairCount$PairAgg$@0badf00d)]
 Arguments: [word#70], MapPartitionsRDD[2541] at localCheckpoint at X.scala:650
